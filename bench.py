@@ -41,7 +41,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from env_data_pipeline_spark.benchmetrics import measure_shuffle
+from env_data_pipeline_spark.observe import observe
 from env_data_pipeline_spark.plans import registry
 from env_data_pipeline_spark.session import get_spark
 
@@ -243,12 +243,10 @@ def _measure_query(
         _, spread = _stats(runs)
     if not sample_shuffle:
         return runs, {"read_bytes": 0, "write_bytes": 0}
-    meter = measure_shuffle(
-        spark, lambda: registry.QUERIES[name](spark, sf_dir).count()
-    )
+    rec = observe(spark, lambda: registry.QUERIES[name](spark, sf_dir).count())
     shuffle = {
-        "read_bytes": meter["read_bytes"],
-        "write_bytes": meter["write_bytes"],
+        "read_bytes": rec["shuffle_read_bytes"],
+        "write_bytes": rec["shuffle_write_bytes"],
     }
     return runs, shuffle
 

@@ -20,12 +20,28 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def host_size(environ=os.environ, mem_total_kib: int | None = None) -> tuple[int, str]:
+    """(local cores, driver heap): ``$SPARK_GRAFT_CPUS`` /
+    ``$SPARK_GRAFT_DRIVER_MEM`` when set, else the CPUs this process
+    may run on and a quarter of MemTotal (at least 512m). The quarter
+    leaves the rest of the host to the JVM's off-heap use, the Python
+    driver and workers, and the page cache."""
+    cpus = int(environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    heap = environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not heap:
+        if mem_total_kib is None:
+            with open("/proc/meminfo") as fh:
+                mem_total_kib = next(
+                    int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+                )
+        heap = f"{max(mem_total_kib // 4 // 1024, 512)}m"
+    return cpus, heap
 
 
-def get_spark(app_name: str = "env_data_pipeline_spark", cpus: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "env_data_pipeline_spark") -> SparkSession:
     """Build (or fetch) the configured SparkSession."""
-    n = cpus or DEFAULT_CPUS
+    n, heap = host_size()
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
@@ -36,11 +52,12 @@ def get_spark(app_name: str = "env_data_pipeline_spark", cpus: int | None = None
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
+        .config("spark.driver.memory", heap)
         # UI on a random free port: the status store behind its REST API
-        # is how bench.py and the shuffle-pin tests read per-stage
-        # shuffle read/write bytes (benchmetrics.measure_shuffle) — the
-        # bytes that prove the broadcast/bucketed plan claims.
+        # is how bench.py, the shuffle-pin tests and scripts/qprofile.py
+        # read per-stage figures and shuffle read/write bytes
+        # (observe.observe) — the bytes that prove the broadcast/bucketed
+        # plan claims.
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "0")
         .config("spark.ui.showConsoleProgress", "false")

@@ -61,27 +61,10 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-# final StreamingQueryProgress per drained sink (observability +
-# bounded-state assertions in tests): keyed by sink name. ALL_ holds
-# the run's micro-batch progresses — state EVICTION can land in any
-# batch (full-outer joins evict in the data batch, outer/semi in the
-# flush batch), so numRowsRemoved must be summed across the run, while
-# numRowsTotal is read from the LAST progress (post-eviction state).
-# recentProgress is CAPPED by spark.sql.streaming.numRecentProgress-
-# Updates (default 100); _drain raises it so the replays here (a few
-# batches) can never silently lose their earliest progress records
-# (review finding).
-_PROGRESS_KEEP = 10_000
-LAST_QUERY_PROGRESS: dict[str, dict] = {}
-ALL_QUERY_PROGRESS: dict[str, list[dict]] = {}
-
-
 def _drain(spark: SparkSession, df: DataFrame, name: str, mode: str) -> DataFrame:
-    import json
-
-    spark.conf.set(
-        "spark.sql.streaming.numRecentProgressUpdates", str(_PROGRESS_KEEP)
-    )
+    """Run ``df`` to completion into the in-memory table ``name`` and
+    return that table. Per-batch progress is read by wrapping the
+    builder in ``observe.observe`` (``record["streaming"][name]``)."""
     q = (
         df.writeStream.outputMode(mode)
         .format("memory")
@@ -90,14 +73,6 @@ def _drain(spark: SparkSession, df: DataFrame, name: str, mode: str) -> DataFram
         .start()
     )
     q.processAllAvailable()
-
-    def _as_dict(p):
-        return p if isinstance(p, dict) else json.loads(p.json)
-
-    history = [_as_dict(p) for p in (q.recentProgress or []) if p is not None]
-    if history:
-        ALL_QUERY_PROGRESS[name] = history
-        LAST_QUERY_PROGRESS[name] = history[-1]
     q.stop()
     q.awaitTermination(60)
     return spark.table(name)
@@ -249,22 +224,13 @@ def priority_routed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain(spark, routed, "priority_routed_events_sink", "append")
 
 
-def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAM-STREAM interval join (the last engine-native streaming
-    join family): the live view stream inner-joined to the live
-    purchase stream on user_id with an event-time range — every
-    purchase within 2 h after a view attributes to it. Both sides
-    carry watermarks and the join carries the time-range condition,
-    which is what lets the state store evict a buffered view once the
-    purchase-side watermark passes view_ts + 2 h — without the range
-    constraint both sides buffer forever. Inner-join matches emit as
-    soon as both rows have arrived, so a full replay equals the batch
-    interval join (the append-mode caveat of outer stream-stream
-    joins — emit only at watermark — does not apply to inner).
-
-    At scale both streams shuffle on user_id into co-partitioned
-    state stores; per-key buffered state spans only the 2 h + 1 h
-    watermark horizon, independent of stream length."""
+def _attribution_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The watermarked view and purchase streams joined on user_id with
+    the 2 h event-time range — shared by the inner / left-outer /
+    full-outer / left-semi attribution variants below. Both sides carry
+    1 h watermarks; the range condition is what lets the state store
+    evict a buffered row once the other side's watermark passes it.
+    (A left-semi join prunes the purchase side to its join columns.)"""
     views = (
         _event_stream(spark, sf_dir)
         .filter(F.col("event_type") == "view")
@@ -286,13 +252,32 @@ def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("purchase_ts", "1 hour")
     )
-    joined = views.join(
+    return views.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
         & (F.col("purchase_ts") >= F.col("view_ts"))
         & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 2 HOURS")),
-        "inner",
-    ).select(
+        how,
+    )
+
+
+def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """STREAM-STREAM interval join (the last engine-native streaming
+    join family): the live view stream inner-joined to the live
+    purchase stream on user_id with an event-time range — every
+    purchase within 2 h after a view attributes to it. Both sides
+    carry watermarks and the join carries the time-range condition,
+    which is what lets the state store evict a buffered view once the
+    purchase-side watermark passes view_ts + 2 h — without the range
+    constraint both sides buffer forever. Inner-join matches emit as
+    soon as both rows have arrived, so a full replay equals the batch
+    interval join (the append-mode caveat of outer stream-stream
+    joins — emit only at watermark — does not apply to inner).
+
+    At scale both streams shuffle on user_id into co-partitioned
+    state stores; per-key buffered state spans only the 2 h + 1 h
+    watermark horizon, independent of stream length."""
+    joined = _attribution_join(spark, sf_dir, "inner").select(
         "user_id",
         "view_event_id",
         "purchase_event_id",
@@ -319,34 +304,7 @@ def stream_stream_attribution_left(spark: SparkSession, sf_dir: str) -> DataFram
     At scale this is the same co-partitioned two-sided state as the
     inner join — the outer variant adds only a matched bit per
     buffered view, so state stays bounded by the 2 h + 1 h horizon."""
-    views = (
-        _event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("view_event_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        _event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_event_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 2 HOURS")),
-        "leftOuter",
-    ).select(
+    joined = _attribution_join(spark, sf_dir, "leftOuter").select(
         "user_id",
         "view_event_id",
         "purchase_event_id",
@@ -403,34 +361,7 @@ def stream_stream_attribution_full(spark: SparkSession, sf_dir: str) -> DataFram
     join — the outer variant adds a matched bit per buffered row on
     BOTH sides now; state stays bounded by the 2 h interval + 1 h
     lateness horizon per side."""
-    views = (
-        _event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("view_event_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        _event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_event_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 2 HOURS")),
-        "fullOuter",
-    ).select(
+    joined = _attribution_join(spark, sf_dir, "fullOuter").select(
         F.coalesce("user_id", "p_user_id").alias("user_id"),
         "view_event_id",
         "purchase_event_id",
@@ -451,32 +382,7 @@ def stream_stream_attribution_semi(spark: SparkSession, sf_dir: str) -> DataFram
     At scale: same co-partitioned state as the inner join, but the
     output carries only the view side and each buffered view emits at
     most once — no match-multiplicity amplification."""
-    views = (
-        _event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("view_event_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        _event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 2 HOURS")),
-        "leftSemi",
-    ).select(
+    joined = _attribution_join(spark, sf_dir, "leftSemi").select(
         "user_id",
         "view_event_id",
         F.unix_micros("view_ts").alias("view_ts_us"),

@@ -16,7 +16,7 @@ SF_TEST_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
 def spark():
     from env_data_pipeline_spark.session import get_spark
 
-    s = get_spark("env_data_pipeline_spark-tests", cpus=8)
+    s = get_spark("env_data_pipeline_spark-tests")
     yield s
 
 

@@ -21,9 +21,8 @@ def test_oracle_parity(spark, sf_dir, name):
     compare(spark, name, registry.QUERIES[name], registry.ORACLES[name], sf_dir)
 
 
-def test_all_queries_return_rows(spark, sf_dir):
-    """Queries without an oracle still must run and return a schema."""
-    for name, fn in registry.QUERIES.items():
-        df = fn(spark, sf_dir)
-        assert df.columns, f"{name}: empty schema"
-        assert df.count() >= 0
+def test_every_query_has_an_oracle():
+    """The parity cases above build, run and compare every registered
+    query; this keeps that coverage from lapsing silently when a query
+    is registered without an oracle."""
+    assert set(registry.QUERIES) == set(registry.ORACLES)

@@ -6,14 +6,14 @@ plan — unlike wall time it cannot flake with scheduler noise — so a
 broadcast or zero-exchange claim that regresses shows up as a hard
 byte count, not a timing wiggle. Measurement: job-group-scoped sums
 of per-stage shuffleReadBytes/shuffleWriteBytes from the UI status
-store (env_data_pipeline_spark.benchmetrics).
+store (env_data_pipeline_spark.observe).
 """
 
 from __future__ import annotations
 
 import pytest
 
-from env_data_pipeline_spark.benchmetrics import measure_shuffle
+from env_data_pipeline_spark.observe import observe
 from env_data_pipeline_spark.plans import registry
 
 registry.load_all()
@@ -22,10 +22,13 @@ LO = "/root/testdata/sf0.01"
 HI = "/root/testdata/sf0.1"
 
 
-def _shuffle(spark, name: str, sf_dir: str) -> dict[str, int]:
-    return measure_shuffle(
-        spark, lambda: registry.QUERIES[name](spark, sf_dir).count()
-    )
+def _shuffle(spark, name: str, sf_dir: str) -> dict:
+    return observe(spark, lambda: registry.QUERIES[name](spark, sf_dir).count())
+
+
+def _bytes(m: dict) -> tuple[int, int]:
+    """(read, write) — for failure messages, without the stage dicts."""
+    return m["shuffle_read_bytes"], m["shuffle_write_bytes"]
 
 
 def test_repetition_profile_zero_shuffle(spark, sf_dir):
@@ -35,10 +38,8 @@ def test_repetition_profile_zero_shuffle(spark, sf_dir):
     its own one-row final-aggregation exchange (~59 bytes) that would
     mask the pin."""
     df = registry.QUERIES["text_repetition_profile"](spark, sf_dir)
-    m = measure_shuffle(
-        spark, lambda: df.write.format("noop").mode("overwrite").save()
-    )
-    assert m["write_bytes"] == 0 and m["read_bytes"] == 0, m
+    m = observe(spark, lambda: df.write.format("noop").mode("overwrite").save())
+    assert _bytes(m) == (0, 0), _bytes(m)
 
 
 def test_measure_shuffle_sees_real_traffic(spark, sf_dir):
@@ -46,7 +47,7 @@ def test_measure_shuffle_sees_real_traffic(spark, sf_dir):
     report non-zero bytes (guards against the meter silently matching
     no jobs and every pin above passing vacuously)."""
     m = _shuffle(spark, "revenue_by_region", sf_dir)
-    assert m["write_bytes"] > 0 and m["stages"] > 0, m
+    assert m["shuffle_write_bytes"] > 0 and m["stages"], _bytes(m)
 
 
 # (query, driving table, slack): shuffled bytes may grow at most
@@ -130,9 +131,9 @@ def test_shuffle_grows_no_faster_than_data(spark, name, table_name, slack):
     assert data_ratio > 1.5, "tier pair carries no data growth"
     lo = _shuffle(spark, name, LO)
     hi = _shuffle(spark, name, HI)
-    lo_total = lo["read_bytes"] + lo["write_bytes"]
-    hi_total = hi["read_bytes"] + hi["write_bytes"]
-    assert lo_total > 0, f"{name}: meter saw no traffic at the low tier ({lo})"
+    lo_total = sum(_bytes(lo))
+    hi_total = sum(_bytes(hi))
+    assert lo_total > 0, f"{name}: meter saw no traffic at the low tier ({_bytes(lo)})"
     ratio = hi_total / lo_total
     assert ratio <= slack * data_ratio, (
         f"{name}: shuffled bytes grew {ratio:.2f}x vs data {data_ratio:.2f}x "
@@ -147,4 +148,4 @@ def test_substring_spans_shuffles_not_broadcasts(spark):
     reading here means the join regressed to broadcasting the stream
     again (shuffle-free but driver-collected)."""
     m = _shuffle(spark, "dedup_substring_spans", LO)
-    assert m["write_bytes"] > 0, m
+    assert m["shuffle_write_bytes"] > 0, _bytes(m)

@@ -144,13 +144,15 @@ def test_windowed_counts_append_state_is_bounded(spark, sf_dir):
     after the drain, state holds only the trailing still-open windows,
     not every window of the month-long replay (complete mode held all
     of them — the unbounded-state shape this test guards against)."""
+    from env_data_pipeline_spark.observe import observe
     from env_data_pipeline_spark.streaming import event_trigger as ET
 
-    out = ET.windowed_event_counts(spark, sf_dir)
+    rec = observe(spark, lambda: ET.windowed_event_counts(spark, sf_dir))
+    out = rec["value"]
     n_emitted = out.count()
     assert n_emitted > 100  # a month of hourly windows at any test SF
 
-    lp = ET.LAST_QUERY_PROGRESS["windowed_event_counts_sink"]
+    lp = rec["streaming"]["windowed_event_counts_sink"][-1]
     ops = lp["stateOperators"]
     assert ops, "no state operator reported"
     state_rows = sum(op["numRowsTotal"] for op in ops)
@@ -355,13 +357,15 @@ def test_stream_stream_join_state_is_bounded_and_real(spark, sf_dir):
     stream length: the whole replay arrives in one batch here, so
     after the final no-data batch advances the watermark, only rows
     within the (2 h range + 1 h watermark) tail may remain buffered."""
+    from env_data_pipeline_spark.observe import observe
     from env_data_pipeline_spark.streaming import event_trigger as ET
 
-    out = ET.stream_stream_attribution(spark, sf_dir)
+    rec = observe(spark, lambda: ET.stream_stream_attribution(spark, sf_dir))
+    out = rec["value"]
     n_emitted = out.count()
     assert n_emitted > 0
 
-    lp = ET.LAST_QUERY_PROGRESS["stream_stream_attribution_sink"]
+    lp = rec["streaming"]["stream_stream_attribution_sink"][-1]
     ops = lp["stateOperators"]
     assert ops, "no state operator reported — not a stateful join"
     state_rows = sum(op["numRowsTotal"] for op in ops)
@@ -396,6 +400,7 @@ def test_outer_and_semi_join_state_is_bounded_and_measured(spark, sf_dir):
     import pytest
 
     from env_data_pipeline_spark.catalog import table
+    from env_data_pipeline_spark.observe import observe
     from env_data_pipeline_spark.streaming import event_trigger as ET
 
     n_input = (
@@ -410,9 +415,11 @@ def test_outer_and_semi_join_state_is_bounded_and_measured(spark, sf_dir):
     ]
     ceilings = {}
     for fn, sink in variants:
-        out = fn(spark, sf_dir)
+        rec = observe(spark, lambda: fn(spark, sf_dir))
+        out = rec["value"]
         assert out.count() > 0, sink
-        lp = ET.LAST_QUERY_PROGRESS[sink]
+        history = rec["streaming"][sink]
+        lp = history[-1]
         ops = lp["stateOperators"]
         assert ops, f"{sink}: no state operator reported — not a stateful join"
         state_rows = sum(op["numRowsTotal"] for op in ops)
@@ -423,7 +430,6 @@ def test_outer_and_semi_join_state_is_bounded_and_measured(spark, sf_dir):
         # numRowsRemoved (observed: numRowsTotal 390 -> 3 with
         # numRowsRemoved 0), so also accept the measured cross-batch
         # DROP in numRowsTotal as eviction evidence.
-        history = ET.ALL_QUERY_PROGRESS[sink]
         totals = [
             sum(op["numRowsTotal"] for op in p["stateOperators"]) for p in history
         ]
@@ -527,13 +533,14 @@ def test_stateful_timeout_drops_expired_state(spark, sf_dir):
     holds exactly the still-open keys (one row each), not one row per
     user ever seen."""
     from env_data_pipeline_spark.catalog import table
-    from env_data_pipeline_spark.streaming import event_trigger as ET
+    from env_data_pipeline_spark.observe import observe
     from env_data_pipeline_spark.streaming.stateful import stateful_session_expiry
 
-    out = stateful_session_expiry(spark, sf_dir)
+    rec = observe(spark, lambda: stateful_session_expiry(spark, sf_dir))
+    out = rec["value"]
     assert out.count() > 0
 
-    lp = ET.LAST_QUERY_PROGRESS["stateful_session_expiry"]
+    lp = rec["streaming"]["stateful_session_expiry"][-1]
     ops = lp["stateOperators"]
     assert ops, "no state operator reported"
     state_rows = sum(op["numRowsTotal"] for op in ops)
