@@ -64,7 +64,19 @@ def pixel_at_coordinate_grids(grid_meta: DataFrame, grids: DataFrame) -> DataFra
     (arrays decode whole), but per-row join/probe overhead drops 256x
     and the output never explodes. Area aggregations keep using the
     long-form table (same pixels by construction; see
-    sources/fixtures.py::_LANDFIRE_PIXEL_VALUE)."""
+    sources/fixtures.py::_LANDFIRE_PIXEL_VALUE).
+
+    Open finding (not fixed): a ``/collect`` point lookup still reads
+    all 5,000 ``landfire_grids`` rows of both products at sf0.01, the
+    largest scan left in a lookup (537 ms and 198 ms of scan time in
+    two traces on a 4-core host). Catalyst infers join-side filters
+    once (the ``Infer Filters`` batch), before the lookup's
+    ``request_id`` predicate reaches this branch, so the grids scan
+    gets no ``request_id`` filter. Putting ``grids`` on the
+    streamed side moves ``EqualTo(request_id)`` onto the grids scan but
+    takes it off ``landfire_grid_meta``; that loses AQE's
+    empty-broadcast short cut, which today skips the grids scan
+    entirely for the 3 in 4 requests that have no grid."""
     row, col = coord_to_rowcol(
         F.col("req_lat"), F.col("req_lon"),
         F.col("x0"), F.col("y0"), F.col("px_w"), F.col("px_h"),

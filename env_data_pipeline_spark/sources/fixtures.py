@@ -29,6 +29,7 @@ import shutil
 from pyspark.sql import SparkSession
 
 from env_data_pipeline_spark.catalog import register_views
+from env_data_pipeline_spark.sources.sinks import write_dataset
 
 # ---------------------------------------------------------------------------
 # generators (per-dialect): a k-row integer relation t(k)
@@ -577,7 +578,10 @@ _CACHE_ROOT = os.path.join(
 )
 
 
-_SNAPSHOT_FILES = 32
+# snapshot layout tag, part of the snapshot key: snapshots written under
+# another layout are rebuilt. The core count is not in the key, since a
+# snapshot's contents do not depend on how many files hold them.
+_SNAPSHOT_LAYOUT = "range-event_id"
 # stale other-keyed snapshots younger than this survive cleanup — a
 # concurrent session from another checkout may still be reading them
 _STALE_SNAPSHOT_SECONDS = 6 * 3600
@@ -612,7 +616,7 @@ def _source_signature(sf_dir: str) -> str:
 def _snapshot_path(sf_dir: str, name: str) -> str:
     part = ",".join(_SNAPSHOT_PARTITION.get(name, ()))
     key = hashlib.md5(
-        f"v{_SNAPSHOT_FILES}|{part}|{_source_signature(sf_dir)}|"
+        f"{_SNAPSHOT_LAYOUT}|{part}|{_source_signature(sf_dir)}|"
         f"{FIXTURES[name]['spark']}".encode()
     ).hexdigest()[:10]
     # tag includes a hash of the ABSOLUTE sf_dir: two checkouts whose
@@ -664,27 +668,29 @@ def ensure_fixtures(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | N
     for name in wanted:
         path = _snapshot_path(sf_dir, name)
         if not os.path.exists(path):
+            tmp = f"{path}.tmp-{os.getpid()}"
             try:
                 os.makedirs(os.path.dirname(path), exist_ok=True)
-                tmp = f"{path}.tmp-{os.getpid()}"
-                # Parallelize the GENERATION, not the output: the
-                # events input is tiny (1-2 parquet files -> 1-2
-                # tasks), so repartition it BEFORE the cross-join
-                # derivations fan out (57M rows for landfire_pixels at
-                # sf0.1) — a 100k-row shuffle instead of a 57M-row
-                # one, and the write inherits the 32-way parallelism
-                # (one file per task, so cold reads parallelize too).
+                # Partition the GENERATION, not the output: the events
+                # input is tiny (1-2 parquet files -> 1-2 tasks), so
+                # range-partition it into one slice per core BEFORE the
+                # cross-join derivations fan out (57M rows for
+                # landfire_pixels at sf0.1) — a 100k-row shuffle instead
+                # of a 57M-row one. The write keeps that layout: one
+                # file per core in each hive partition (more only past
+                # write_dataset's per-file row cap), each holding one
+                # contiguous event_id range. request_id is the
+                # zero-padded event_id, so a point filter on it skips
+                # every other file's row groups by their min/max stats.
                 from env_data_pipeline_spark.catalog import table as _table
 
-                _table(spark, sf_dir, "events").repartition(
-                    _SNAPSHOT_FILES
+                _table(spark, sf_dir, "events").repartitionByRange(
+                    spark.sparkContext.defaultParallelism, "event_id"
                 ).createOrReplaceTempView("_events_gen")
                 sql = FIXTURES[name]["spark"].replace("FROM events e", "FROM _events_gen e")
-                writer = spark.sql(sql).write.mode("overwrite")
-                part = _SNAPSHOT_PARTITION.get(name)
-                if part:
-                    writer = writer.partitionBy(*part)
-                writer.parquet(tmp)
+                write_dataset(
+                    spark.sql(sql), tmp, partition_by=_SNAPSHOT_PARTITION.get(name, ())
+                )
                 try:
                     os.rename(tmp, path)
                 except OSError:  # lost a concurrent race; ours is equivalent
@@ -715,6 +721,10 @@ def ensure_fixtures(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | N
                             continue
                         shutil.rmtree(old_path, ignore_errors=True)
             except Exception:
+                # a failed write leaves its partial tmp directory, which
+                # the stale-snapshot reaper (names ending .parquet)
+                # never matches
+                shutil.rmtree(tmp, ignore_errors=True)
                 spark.sql(
                     f"CREATE OR REPLACE TEMPORARY VIEW {name} AS {FIXTURES[name]['spark']}"
                 )

@@ -1,0 +1,93 @@
+"""Physical layout of the fixture snapshots: one file per core in each
+hive partition, each file one contiguous ``request_id`` range, so a
+point lookup reads one file's row groups per snapshot."""
+
+from __future__ import annotations
+
+import os
+from collections import defaultdict
+
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from env_data_pipeline_spark.observe import observe
+from env_data_pipeline_spark.sources import fixtures
+
+_CLUSTERED = ("requests", "weather_forecast", "landfire_grids")
+
+
+@pytest.fixture
+def fresh_cache(spark, tmp_path, monkeypatch):
+    """An empty snapshot cache, so this session writes the snapshots
+    under test (the snapshot key leaves the core count out, so the
+    shared cache may hold ones another session's core count wrote)."""
+    monkeypatch.setattr(fixtures, "_CACHE_ROOT", str(tmp_path))
+    for name in _CLUSTERED:
+        fixtures.invalidate_fixture(spark, name)
+    yield
+    for name in _CLUSTERED:
+        fixtures.invalidate_fixture(spark, name)
+
+
+def _files_by_partition(path: str) -> dict[str, list[str]]:
+    """Data files of a snapshot, grouped by their hive partition directory."""
+    out: dict[str, list[str]] = defaultdict(list)
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            if f.startswith("part-") and f.endswith(".parquet"):
+                out[root].append(os.path.join(root, f))
+    return out
+
+
+def _request_id_span(path: str) -> tuple[str, str]:
+    """(min, max) of request_id over all row groups of one file."""
+    md = pq.ParquetFile(path).metadata
+    col = md.schema.names.index("request_id")
+    stats = [md.row_group(i).column(col).statistics for i in range(md.num_row_groups)]
+    return min(s.min for s in stats), max(s.max for s in stats)
+
+
+def test_snapshots_are_range_clustered_one_file_per_core(spark, sf_dir, fresh_cache):
+    fixtures.ensure_fixtures(spark, sf_dir, _CLUSTERED)
+    cores = spark.sparkContext.defaultParallelism
+    for name in _CLUSTERED:
+        parts = _files_by_partition(fixtures._snapshot_path(sf_dir, name))
+        assert parts, name
+        for part, files in parts.items():
+            assert len(files) <= cores, (name, part, len(files), cores)
+            spans = sorted(_request_id_span(f) for f in files)
+            for (_, hi_a), (lo_b, _) in zip(spans, spans[1:]):
+                assert hi_a < lo_b, (name, part, spans)
+
+
+def test_point_filter_reads_one_file(spark, sf_dir, fresh_cache):
+    fixtures.ensure_fixtures(spark, sf_dir, ("requests",))
+    path = fixtures._snapshot_path(sf_dir, "requests")
+    files = [f for fs in _files_by_partition(path).values() for f in fs]
+    rows_per_file = [pq.ParquetFile(f).metadata.num_rows for f in files]
+    rid = _request_id_span(files[0])[0]
+    record = observe(
+        spark,
+        lambda: spark.read.parquet(path).filter(F.col("request_id") == rid).collect(),
+    )
+    assert len(record["value"]) == 1
+    read = sum(st.get("inputRecords", 0) for st in record["stages"])
+    assert read <= max(rows_per_file), (read, rows_per_file)
+
+
+def test_failed_snapshot_write_leaves_no_tmp_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """A derivation that fails inside a task falls back to a lazy view
+    and removes its partial ``.tmp-<pid>`` directory."""
+    name = "_failing_fixture"
+    sql = "SELECT raise_error(concat('boom ', cast(e.event_id AS STRING))) AS x FROM events e"
+    monkeypatch.setattr(fixtures, "_CACHE_ROOT", str(tmp_path))
+    monkeypatch.setitem(fixtures.FIXTURES, name, {"spark": sql, "duck": sql})
+    try:
+        fixtures.ensure_fixtures(spark, sf_dir, (name,))
+        path = fixtures._snapshot_path(sf_dir, name)
+        assert not os.path.exists(path)
+        assert os.listdir(os.path.dirname(path)) == []
+    finally:
+        fixtures.invalidate_fixture(spark, name)
+        spark.catalog.dropTempView(name)
