@@ -188,21 +188,15 @@ def streaming_perplexity_tier_refresh(
     standing boundaries (strata with no head rank send nothing to
     head — the conservative gate, exactly the batch tertile rule for
     n < 3). Per-(lang, bucket) mergeable counters (n, sum, min, max)
-    fold into a ping-pong parquet state; the output derives from the
+    fold into the parquet state replay_fold (streaming/replay.py)
+    persists; the output derives from the
     final state only. The oracle is the FULL batch tertile table
     (corpus_perplexity_buckets' oracle, verbatim) — green only if the
     frozen-boundary classification reproduces the rank cut across
     every batch boundary."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
-    from env_data_pipeline_spark.streaming.replay import (
-        replay_foreachbatch,
-        write_shards,
-    )
+    from env_data_pipeline_spark.streaming.replay import replay_fold
 
     n_shards = 4
     docs = table(spark, sf_dir, "documents").select(
@@ -246,100 +240,82 @@ def streaming_perplexity_tier_refresh(
         .localCheckpoint(eager=True)
     )
     raw = docs.filter(F.col("source") != _EVAL_SOURCE)
-    work = tempfile.mkdtemp(prefix="stream_ppl_")
-    try:
-        delta_dir = os.path.join(work, "deltas")
-        ckpt_dir = os.path.join(work, "ckpt")
-        state_dirs = [
-            os.path.join(work, "state_a"),
-            os.path.join(work, "state_b"),
-        ]
-        os.makedirs(delta_dir)
-        write_shards(raw, delta_dir, n_shards, "doc_id")
-        spark.createDataFrame(
-            [],
-            "lang string, bucket string, n_docs bigint, sum_ippl bigint,"
-            " min_ippl bigint, max_ippl bigint",
-        ).write.mode("overwrite").parquet(state_dirs[0])
+    empty = spark.createDataFrame(
+        [],
+        "lang string, bucket string, n_docs bigint, sum_ippl bigint,"
+        " min_ippl bigint, max_ippl bigint",
+    )
 
-        def _apply(batch_df: DataFrame, batch_id: int) -> None:
-            sp = batch_df.sparkSession
-            cur, nxt = batch_id % 2, (batch_id + 1) % 2
-            scored = L.ppl_score_against(batch_df, lm, _PPL_B, _PPL_STRATA)
-            # null-SAFE lang equality (a NULL-lang corpus must hit its
-            # own stratum boundary, mirroring the oracle's partition)
-            j = scored.alias("s").join(
-                F.broadcast(thr).alias("t"),
-                F.col("s.lang").eqNullSafe(F.col("t.lang"))
-                & (F.col("s.salt") == F.col("t.salt")),
-                "left",
-            )
-            le = lambda i, d: (  # noqa: E731 — lexicographic (ippl, doc_id)
-                (F.col("s.ippl") < F.col(i))
-                | (
-                    (F.col("s.ippl") == F.col(i))
-                    & (F.col("s.doc_id") <= F.col(d))
-                )
-            )
-            batch = (
-                j.select(
-                    F.col("s.lang").alias("lang"),
-                    F.col("s.ippl").alias("ippl"),
-                    F.when(
-                        F.col("h_i").isNotNull() & le("h_i", "h_d"), "head"
-                    )
-                    .when(
-                        F.col("m_i").isNotNull() & le("m_i", "m_d"), "middle"
-                    )
-                    .otherwise("tail")
-                    .alias("bucket"),
-                )
-                .groupBy("lang", "bucket")
-                .agg(
-                    F.count(F.lit(1)).alias("b_n"),
-                    F.sum("ippl").alias("b_sum"),
-                    F.min("ippl").alias("b_min"),
-                    F.max("ippl").alias("b_max"),
-                )
-            )
-            prev = sp.read.parquet(state_dirs[cur])
-            add = lambda a, b: (  # noqa: E731
-                F.coalesce(a, F.lit(0)) + F.coalesce(b, F.lit(0))
-            ).cast("bigint")
-            merged = (
-                prev.alias("p")
-                .join(
-                    F.broadcast(batch).alias("b"),
-                    F.col("p.lang").eqNullSafe(F.col("b.lang"))
-                    & (F.col("p.bucket") == F.col("b.bucket")),
-                    "full_outer",
-                )
-                .select(
-                    F.coalesce(F.col("p.lang"), F.col("b.lang")).alias("lang"),
-                    F.coalesce(F.col("p.bucket"), F.col("b.bucket")).alias(
-                        "bucket"
-                    ),
-                    add(F.col("n_docs"), F.col("b_n")).alias("n_docs"),
-                    add(F.col("sum_ippl"), F.col("b_sum")).alias("sum_ippl"),
-                    # least/greatest skip NULLs — the mergeable min/max
-                    F.least(F.col("min_ippl"), F.col("b_min"))
-                    .cast("bigint")
-                    .alias("min_ippl"),
-                    F.greatest(F.col("max_ippl"), F.col("b_max"))
-                    .cast("bigint")
-                    .alias("max_ippl"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            merged.write.mode("overwrite").parquet(state_dirs[nxt])
-
-        replay_foreachbatch(
-            spark, delta_dir, ckpt_dir, n_shards, _apply,
-            "streaming perplexity tier ",
+    def step(batch_df: DataFrame, _batch_id: int, prev: DataFrame):
+        scored = L.ppl_score_against(batch_df, lm, _PPL_B, _PPL_STRATA)
+        # null-SAFE lang equality (a NULL-lang corpus must hit its
+        # own stratum boundary, mirroring the oracle's partition)
+        j = scored.alias("s").join(
+            F.broadcast(thr).alias("t"),
+            F.col("s.lang").eqNullSafe(F.col("t.lang"))
+            & (F.col("s.salt") == F.col("t.salt")),
+            "left",
         )
-        state = spark.read.parquet(state_dirs[n_shards % 2])
+        le = lambda i, d: (  # noqa: E731 — lexicographic (ippl, doc_id)
+            (F.col("s.ippl") < F.col(i))
+            | (
+                (F.col("s.ippl") == F.col(i))
+                & (F.col("s.doc_id") <= F.col(d))
+            )
+        )
+        batch = (
+            j.select(
+                F.col("s.lang").alias("lang"),
+                F.col("s.ippl").alias("ippl"),
+                F.when(
+                    F.col("h_i").isNotNull() & le("h_i", "h_d"), "head"
+                )
+                .when(
+                    F.col("m_i").isNotNull() & le("m_i", "m_d"), "middle"
+                )
+                .otherwise("tail")
+                .alias("bucket"),
+            )
+            .groupBy("lang", "bucket")
+            .agg(
+                F.count(F.lit(1)).alias("b_n"),
+                F.sum("ippl").alias("b_sum"),
+                F.min("ippl").alias("b_min"),
+                F.max("ippl").alias("b_max"),
+            )
+        )
+        add = lambda a, b: (  # noqa: E731
+            F.coalesce(a, F.lit(0)) + F.coalesce(b, F.lit(0))
+        ).cast("bigint")
+        merged = (
+            prev.alias("p")
+            .join(
+                F.broadcast(batch).alias("b"),
+                F.col("p.lang").eqNullSafe(F.col("b.lang"))
+                & (F.col("p.bucket") == F.col("b.bucket")),
+                "full_outer",
+            )
+            .select(
+                F.coalesce(F.col("p.lang"), F.col("b.lang")).alias("lang"),
+                F.coalesce(F.col("p.bucket"), F.col("b.bucket")).alias(
+                    "bucket"
+                ),
+                add(F.col("n_docs"), F.col("b_n")).alias("n_docs"),
+                add(F.col("sum_ippl"), F.col("b_sum")).alias("sum_ippl"),
+                # least/greatest skip NULLs — the mergeable min/max
+                F.least(F.col("min_ippl"), F.col("b_min"))
+                .cast("bigint")
+                .alias("min_ippl"),
+                F.greatest(F.col("max_ippl"), F.col("b_max"))
+                .cast("bigint")
+                .alias("max_ippl"),
+            )
+        )
+        return merged, None
+
+    def finish(state: DataFrame, _emitted) -> DataFrame:
         lw = Window.partitionBy("lang")
-        out = state.select(
+        return state.select(
             "lang",
             "bucket",
             "n_docs",
@@ -351,10 +327,12 @@ def streaming_perplexity_tier_refresh(
             )
             .cast("bigint")
             .alias("lang_share_permille"),
-        ).localCheckpoint(eager=True)
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        )
+
+    return replay_fold(
+        spark, raw, n_shards, "doc_id", step, finish, "stream_ppl_",
+        seed=empty,
+    )
 
 
 def _agreement_oracle() -> str:

@@ -998,7 +998,8 @@ def streaming_token_budget_refresh(
     as 4 real micro-batches (maxFilesPerTrigger=1); each batch's word
     instances broadcast-join the FROZEN (word, n_bpe) vocabulary
     table and fold additive (source, lang) counters — docs, words,
-    BPE tokens — into a ping-pong parquet state; ratios and the
+    BPE tokens — into the parquet state replay_fold
+    (streaming/replay.py) persists; ratios and the
     permille budget shares are derived from the final state only.
     The oracle is the batch query's full recompute — green only if
     the counter fold composes across every batch boundary (the same
@@ -1009,91 +1010,63 @@ def streaming_token_budget_refresh(
     batch's rows only; the state is (source x lang)-sized. The
     vocabulary is trained once (the ingest-gate asymmetry: arrivals
     are coded against standing state, the corpus never recomputes)."""
-    import os
-    import shutil
-    import tempfile
+    from pyspark.sql import Window
 
-    from env_data_pipeline_spark.streaming.replay import (
-        replay_foreachbatch,
-        write_shards,
-    )
+    from env_data_pipeline_spark.streaming.replay import replay_fold
 
     n_shards = 4
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "source", "lang", "text"
     )
     wt = _word_tokens(spark, sf_dir).localCheckpoint(eager=True)
-    work = tempfile.mkdtemp(prefix="stream_tokbudget_")
-    try:
-        delta_dir = os.path.join(work, "deltas")
-        ckpt_dir = os.path.join(work, "ckpt")
-        state_dirs = [
-            os.path.join(work, "state_a"),
-            os.path.join(work, "state_b"),
-        ]
-        os.makedirs(delta_dir)
-        write_shards(docs, delta_dir, n_shards, "doc_id")
-        empty = spark.createDataFrame(
-            [],
-            "source string, lang string, n_docs bigint, "
-            "n_words bigint, n_bpe_tokens bigint",
-        )
-        empty.write.mode("overwrite").parquet(state_dirs[0])
+    empty = spark.createDataFrame(
+        [],
+        "source string, lang string, n_docs bigint, "
+        "n_words bigint, n_bpe_tokens bigint",
+    )
 
-        def _apply(batch_df: DataFrame, batch_id: int) -> None:
-            sp = batch_df.sparkSession
-            cur, nxt = batch_id % 2, (batch_id + 1) % 2
-            wcnt = B.group_tokens(batch_df, wt, "source", "lang").select(
+    def step(batch_df: DataFrame, _batch_id: int, prev: DataFrame):
+        wcnt = B.group_tokens(batch_df, wt, "source", "lang").select(
+            "source",
+            "lang",
+            F.col("n_words").alias("b_words"),
+            F.col("n_bpe_tokens").alias("b_bpe"),
+        )
+        dcnt = batch_df.groupBy("source", "lang").agg(
+            F.count(F.lit(1)).cast("bigint").alias("b_docs")
+        )
+        batch = dcnt.join(wcnt, ["source", "lang"], "left")
+        merged = (
+            prev.join(
+                F.broadcast(batch), ["source", "lang"], "full_outer"
+            )
+            .select(
                 "source",
                 "lang",
-                F.col("n_words").alias("b_words"),
-                F.col("n_bpe_tokens").alias("b_bpe"),
+                (
+                    F.coalesce("n_docs", F.lit(0))
+                    + F.coalesce("b_docs", F.lit(0))
+                ).cast("bigint").alias("n_docs"),
+                (
+                    F.coalesce("n_words", F.lit(0))
+                    + F.coalesce("b_words", F.lit(0))
+                ).cast("bigint").alias("n_words"),
+                (
+                    F.coalesce("n_bpe_tokens", F.lit(0))
+                    + F.coalesce("b_bpe", F.lit(0))
+                ).cast("bigint").alias("n_bpe_tokens"),
             )
-            dcnt = batch_df.groupBy("source", "lang").agg(
-                F.count(F.lit(1)).cast("bigint").alias("b_docs")
-            )
-            batch = dcnt.join(wcnt, ["source", "lang"], "left")
-            prev = sp.read.parquet(state_dirs[cur])
-            merged = (
-                prev.join(
-                    F.broadcast(batch), ["source", "lang"], "full_outer"
-                )
-                .select(
-                    "source",
-                    "lang",
-                    (
-                        F.coalesce("n_docs", F.lit(0))
-                        + F.coalesce("b_docs", F.lit(0))
-                    ).cast("bigint").alias("n_docs"),
-                    (
-                        F.coalesce("n_words", F.lit(0))
-                        + F.coalesce("b_words", F.lit(0))
-                    ).cast("bigint").alias("n_words"),
-                    (
-                        F.coalesce("n_bpe_tokens", F.lit(0))
-                        + F.coalesce("b_bpe", F.lit(0))
-                    ).cast("bigint").alias("n_bpe_tokens"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            merged.write.mode("overwrite").parquet(state_dirs[nxt])
-
-        replay_foreachbatch(
-            spark, delta_dir, ckpt_dir, n_shards, _apply,
-            "streaming token budget ",
         )
-        final_dir = state_dirs[n_shards % 2]
+        return merged, None
+
+    def finish(state: DataFrame, _emitted) -> DataFrame:
         # drop groups whose docs carry no non-empty word: the shared
         # oracle's inner dg JOIN wtok omits them, and a NULL fertility
         # ratio is not a row worth reporting (review finding — keeps
         # the batch and streaming forms agreeing on the same edge)
-        state = spark.read.parquet(final_dir).filter(
-            F.col("n_words") > 0
-        )
-        from pyspark.sql import Window
-
+        state = state.filter(F.col("n_words") > 0)
         everything = Window.partitionBy()
-        out = state.select(
+        return state.select(
             "source",
             "lang",
             "n_docs",
@@ -1112,10 +1085,11 @@ def streaming_token_budget_refresh(
             .cast("bigint")
             .alias("budget_share_permille"),
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return replay_fold(
+        spark, docs, n_shards, "doc_id", step, finish, "stream_tokbudget_",
+        seed=empty,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1360,18 +1334,11 @@ def streaming_dsir_gate_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (arrivals judged by standing state — the models and boundary
     never refit per batch; strata with no selected doc reject, the
     conservative gate). Per-language (n_docs, n_accepted, sum_score)
-    counters fold additively into a ping-pong parquet state; the
-    output derives from the final state only. The oracle is the full
-    batch recompute — green only if the fold composes across every
-    batch boundary."""
-    import os
-    import shutil
-    import tempfile
-
-    from env_data_pipeline_spark.streaming.replay import (
-        replay_foreachbatch,
-        write_shards,
-    )
+    counters fold additively into the parquet state replay_fold
+    (streaming/replay.py) persists; the output derives from the
+    final state only. The oracle is the full batch recompute — green
+    only if the fold composes across every batch boundary."""
+    from env_data_pipeline_spark.streaming.replay import replay_fold
 
     n_shards = 4
     docs = table(spark, sf_dir, "documents").select(
@@ -1394,72 +1361,54 @@ def streaming_dsir_gate_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     raw = docs.filter(F.col("source") != _EVAL_SOURCE)
-    work = tempfile.mkdtemp(prefix="stream_dsir_")
-    try:
-        delta_dir = os.path.join(work, "deltas")
-        ckpt_dir = os.path.join(work, "ckpt")
-        state_dirs = [
-            os.path.join(work, "state_a"),
-            os.path.join(work, "state_b"),
-        ]
-        os.makedirs(delta_dir)
-        write_shards(raw, delta_dir, n_shards, "doc_id")
-        spark.createDataFrame(
-            [], "lang string, n_docs bigint, n_accepted bigint, sum_score bigint"
-        ).write.mode("overwrite").parquet(state_dirs[0])
+    empty = spark.createDataFrame(
+        [], "lang string, n_docs bigint, n_accepted bigint, sum_score bigint"
+    )
 
-        def _apply(batch_df: DataFrame, batch_id: int) -> None:
-            sp = batch_df.sparkSession
-            cur, nxt = batch_id % 2, (batch_id + 1) % 2
-            keyed = L.dsir_score_against(
-                batch_df, ilr, _DSIR_B, _DSIR_STRATA
-            )
-            batch = (
-                keyed.join(F.broadcast(thr), "salt", "left")
-                .select(
-                    "lang",
-                    "score",
-                    F.when(
-                        F.col("thr").isNotNull()
-                        & (F.col("sel_key") >= F.col("thr")),
-                        1,
-                    )
-                    .otherwise(0)
-                    .alias("a"),
-                )
-                .groupBy("lang")
-                .agg(
-                    F.count("*").alias("b_docs"),
-                    F.sum("a").alias("b_acc"),
-                    F.sum("score").alias("b_score"),
-                )
-            )
-            prev = sp.read.parquet(state_dirs[cur])
-            merged = (
-                prev.join(F.broadcast(batch), "lang", "full_outer")
-                .select(
-                    "lang",
-                    *[
-                        (F.coalesce(a, F.lit(0)) + F.coalesce(bc, F.lit(0)))
-                        .cast("bigint")
-                        .alias(a)
-                        for a, bc in [
-                            ("n_docs", "b_docs"),
-                            ("n_accepted", "b_acc"),
-                            ("sum_score", "b_score"),
-                        ]
-                    ],
-                )
-                .localCheckpoint(eager=True)
-            )
-            merged.write.mode("overwrite").parquet(state_dirs[nxt])
-
-        replay_foreachbatch(
-            spark, delta_dir, ckpt_dir, n_shards, _apply,
-            "streaming DSIR gate ",
+    def step(batch_df: DataFrame, _batch_id: int, prev: DataFrame):
+        keyed = L.dsir_score_against(
+            batch_df, ilr, _DSIR_B, _DSIR_STRATA
         )
-        state = spark.read.parquet(state_dirs[n_shards % 2])
-        out = state.select(
+        batch = (
+            keyed.join(F.broadcast(thr), "salt", "left")
+            .select(
+                "lang",
+                "score",
+                F.when(
+                    F.col("thr").isNotNull()
+                    & (F.col("sel_key") >= F.col("thr")),
+                    1,
+                )
+                .otherwise(0)
+                .alias("a"),
+            )
+            .groupBy("lang")
+            .agg(
+                F.count("*").alias("b_docs"),
+                F.sum("a").alias("b_acc"),
+                F.sum("score").alias("b_score"),
+            )
+        )
+        merged = (
+            prev.join(F.broadcast(batch), "lang", "full_outer")
+            .select(
+                "lang",
+                *[
+                    (F.coalesce(a, F.lit(0)) + F.coalesce(bc, F.lit(0)))
+                    .cast("bigint")
+                    .alias(a)
+                    for a, bc in [
+                        ("n_docs", "b_docs"),
+                        ("n_accepted", "b_acc"),
+                        ("sum_score", "b_score"),
+                    ]
+                ],
+            )
+        )
+        return merged, None
+
+    def finish(state: DataFrame, _emitted) -> DataFrame:
+        return state.select(
             "lang",
             "n_docs",
             "n_accepted",
@@ -1470,7 +1419,9 @@ def streaming_dsir_gate_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("sum_score") / (F.col("n_docs") * float(_DSIR_GRID_SQL)),
                 4,
             ).alias("mean_logw"),
-        ).localCheckpoint(eager=True)
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        )
+
+    return replay_fold(
+        spark, raw, n_shards, "doc_id", step, finish, "stream_dsir_",
+        seed=empty,
+    )

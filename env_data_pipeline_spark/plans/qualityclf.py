@@ -436,18 +436,12 @@ def streaming_quality_score_refresh(
     replay as 4 real micro-batches; each batch is scored against the
     FROZEN persisted weights (the ingest-gate asymmetry — arrivals
     are judged by standing state, the model never retrains per batch)
-    and folds additive per-source counters into a ping-pong parquet
-    state; the agreement permille derives from the final state only.
+    and folds additive per-source counters into the parquet state
+    replay_fold (streaming/replay.py) persists; the agreement
+    permille derives from the final state only.
     The oracle is the batch query's full recompute — green only if
     the counter fold composes across every batch boundary."""
-    import os
-    import shutil
-    import tempfile
-
-    from env_data_pipeline_spark.streaming.replay import (
-        replay_foreachbatch,
-        write_shards,
-    )
+    from env_data_pipeline_spark.streaming.replay import replay_fold
 
     n_shards = 4
     docs = table(spark, sf_dir, "documents").select(
@@ -456,62 +450,43 @@ def streaming_quality_score_refresh(
     weights = quality_weights_artifact(spark, sf_dir).localCheckpoint(
         eager=True
     )
-    work = tempfile.mkdtemp(prefix="stream_qualclf_")
-    try:
-        delta_dir = os.path.join(work, "deltas")
-        ckpt_dir = os.path.join(work, "ckpt")
-        state_dirs = [
-            os.path.join(work, "state_a"),
-            os.path.join(work, "state_b"),
-        ]
-        os.makedirs(delta_dir)
-        write_shards(docs, delta_dir, n_shards, "doc_id")
-        spark.createDataFrame(
-            [],
-            "source string, n_docs bigint, n_pred_keep bigint, "
-            "n_gate_keep bigint, n_agree bigint",
-        ).write.mode("overwrite").parquet(state_dirs[0])
+    empty = spark.createDataFrame(
+        [],
+        "source string, n_docs bigint, n_pred_keep bigint, "
+        "n_gate_keep bigint, n_agree bigint",
+    )
 
-        def _apply(batch_df: DataFrame, batch_id: int) -> None:
-            sp = batch_df.sparkSession
-            cur, nxt = batch_id % 2, (batch_id + 1) % 2
-            batch = _agreement_counters(batch_df, weights).select(
-                "source",
-                F.col("n_docs").alias("b_docs"),
-                F.col("n_pred_keep").alias("b_pred"),
-                F.col("n_gate_keep").alias("b_gate"),
-                F.col("n_agree").alias("b_agree"),
-            )
-            prev = sp.read.parquet(state_dirs[cur])
-            merged = (
-                prev.join(F.broadcast(batch), "source", "full_outer")
-                .select(
-                    "source",
-                    *[
-                        (
-                            F.coalesce(a, F.lit(0)) + F.coalesce(b, F.lit(0))
-                        )
-                        .cast("bigint")
-                        .alias(a)
-                        for a, b in [
-                            ("n_docs", "b_docs"),
-                            ("n_pred_keep", "b_pred"),
-                            ("n_gate_keep", "b_gate"),
-                            ("n_agree", "b_agree"),
-                        ]
-                    ],
-                )
-                .localCheckpoint(eager=True)
-            )
-            merged.write.mode("overwrite").parquet(state_dirs[nxt])
-
-        replay_foreachbatch(
-            spark, delta_dir, ckpt_dir, n_shards, _apply,
-            "streaming quality agreement ",
+    def step(batch_df: DataFrame, _batch_id: int, prev: DataFrame):
+        batch = _agreement_counters(batch_df, weights).select(
+            "source",
+            F.col("n_docs").alias("b_docs"),
+            F.col("n_pred_keep").alias("b_pred"),
+            F.col("n_gate_keep").alias("b_gate"),
+            F.col("n_agree").alias("b_agree"),
         )
-        out = _agreement_finalize(
-            spark.read.parquet(state_dirs[n_shards % 2])
-        ).localCheckpoint(eager=True)
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        merged = (
+            prev.join(F.broadcast(batch), "source", "full_outer")
+            .select(
+                "source",
+                *[
+                    (
+                        F.coalesce(a, F.lit(0)) + F.coalesce(b, F.lit(0))
+                    )
+                    .cast("bigint")
+                    .alias(a)
+                    for a, b in [
+                        ("n_docs", "b_docs"),
+                        ("n_pred_keep", "b_pred"),
+                        ("n_gate_keep", "b_gate"),
+                        ("n_agree", "b_agree"),
+                    ]
+                ],
+            )
+        )
+        return merged, None
+
+    return replay_fold(
+        spark, docs, n_shards, "doc_id", step,
+        lambda state, _emitted: _agreement_finalize(state),
+        "stream_qualclf_", seed=empty,
+    )

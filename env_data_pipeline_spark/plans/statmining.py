@@ -229,9 +229,9 @@ def streaming_cusum_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays current as data lands, with |types| x |days| rows of state
     forever.
 
-    Scaffolding (sharding, ping-pong state, at-least-once caveat):
-    streaming/incremental_refresh.py::_replay_state_refresh, shared
-    with the agg/CMS/HLL refreshes."""
+    The replay (sharding, persisted state, idempotent batches) is
+    streaming/replay.py::replay_fold, shared with every foreachBatch
+    refresher."""
     from env_data_pipeline_spark.streaming.incremental_refresh import (
         streaming_cusum_state_refresh,
     )
@@ -865,9 +865,8 @@ def streaming_hhi_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle IS the batch oracle). The antitrust screen kept current as
     sales land; state is |suppliers| rows forever.
 
-    Scaffolding: streaming/incremental_refresh.py::
-    _replay_state_refresh, shared with the agg/CMS/HLL/CUSUM/MK/
-    skyline refreshes (sharded on l_orderkey)."""
+    The replay is streaming/replay.py::replay_fold, shared with
+    every foreachBatch refresher (sharded on l_orderkey)."""
     from env_data_pipeline_spark.streaming.incremental_refresh import (
         streaming_hhi_state_refresh,
     )
@@ -888,9 +887,8 @@ def streaming_skyline_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle). State is frontier-sized — typically tiny — forever; the
     continuous form of the "current best tradeoffs" board.
 
-    Scaffolding: streaming/incremental_refresh.py::
-    _replay_state_refresh, shared with the agg/CMS/HLL/CUSUM
-    refreshes (sharded on p_partkey)."""
+    The replay is streaming/replay.py::replay_fold, shared with
+    every foreachBatch refresher (sharded on p_partkey)."""
     from env_data_pipeline_spark.streaming.incremental_refresh import (
         streaming_skyline_state_refresh,
     )
@@ -1036,9 +1034,8 @@ def streaming_mann_kendall_refresh(spark: SparkSession, sf_dir: str) -> DataFram
     the batch oracle). One state table now serves BOTH control
     charts; the day-grain pair scan runs only at read time.
 
-    Scaffolding: streaming/incremental_refresh.py::
-    _replay_state_refresh, shared with the agg/CMS/HLL/CUSUM/skyline
-    refreshes."""
+    The replay is streaming/replay.py::replay_fold, shared with
+    every foreachBatch refresher."""
     from env_data_pipeline_spark.streaming.incremental_refresh import (
         streaming_mann_kendall_state_refresh,
     )
@@ -1156,8 +1153,8 @@ def streaming_holt_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the shared holt_report, hash-equal to the batch query by
     construction (this oracle IS the batch oracle).
 
-    Scaffolding: streaming/incremental_refresh.py::
-    _replay_state_refresh via streaming_daily_state_refresh."""
+    The replay is streaming/replay.py::replay_fold, shared with
+    every foreachBatch refresher."""
     from env_data_pipeline_spark.streaming.incremental_refresh import (
         streaming_holt_state_refresh,
     )

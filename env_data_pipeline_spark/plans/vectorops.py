@@ -1843,9 +1843,9 @@ def streaming_ivf_drift_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CONTINUOUS form of ivf_drift_retrain_verdict: the drifted
     arrival stream replays as 3 real micro-batches
     (maxFilesPerTrigger=1) against the frozen snapshot-trained
-    centroids; each batch appends its vectors' cell codes to the
-    persistent index (idempotent batch=<id> sink) and folds per-cell
-    counts into a ping-pong occupancy state, emitting a (batch_id,
+    centroids; each batch coarse-assigns its vectors and folds per-cell
+    counts into an occupancy state persisted by replay_fold
+    (streaming/replay.py), emitting a (batch_id,
     n_arrivals, max_shift_permille, verdict) trajectory row. The
     DuckDB oracle unrolls all 3 cumulative steps — green only if the
     counter fold composes across micro-batch boundaries and the final

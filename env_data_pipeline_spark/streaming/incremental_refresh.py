@@ -5,12 +5,13 @@ table — the streaming form of a nightly-refresh materialized
 aggregate, and the engine making the reference's background-worker
 promise (`containers/orchestrator/orchestrator.py:960-986`) concrete.
 
-Mechanics proven here, not merely claimed:
+Mechanics proven here, not merely claimed (the replay itself is
+streaming/replay.py::replay_fold, shared by every foreachBatch
+refresher):
 - the events table is split into BATCH_SHARDS delta files and
   replayed with maxFilesPerTrigger=1, so the refresh REALLY runs
   once per micro-batch over partial data;
-- state persists as parquet between batches (ping-pong A/B dirs —
-  Spark cannot overwrite a path it is reading within one job);
+- state persists as parquet between batches;
 - the final state must equal a full recompute over all rows (the
   DuckDB oracle), which holds only if the merge algebra
   (operators/incremental.py, extensions/sketches.py) is correct
@@ -21,89 +22,50 @@ map-side-combined aggregation of the batch plus a state-sized merge;
 base rows are never rescanned. State is |groups| (or 256 CMS cells)
 regardless of stream length.
 
-Replay idempotence caveat: foreachBatch is at-least-once under crash
-recovery — a batch re-delivered after a crash between the state write
-and the checkpoint commit would merge twice. This module runs a
-single synchronous availableNow drain over per-call temp dirs, where
-no such window exists; a long-lived production deployment must
-version the state by batch_id and skip already-applied batches (the
-standard foreachBatch exactly-once recipe). The engine's own stateful
-streaming path IS covered for crash recovery:
+Replay idempotence: replay_fold keys both per-batch sinks on
+batch_id, so a re-delivered batch rewrites what its first delivery
+wrote (see streaming/replay.py). The engine's own stateful streaming
+path is covered for crash recovery too:
 tests/test_streaming_semantics.py kills a windowed-agg query
 mid-stream and proves exactly-once on resume from checkpoint.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from env_data_pipeline_spark.operators import incremental as INC
-from env_data_pipeline_spark.streaming.replay import (
-    replay_foreachbatch,
-    write_shards,
-)
+from env_data_pipeline_spark.streaming.replay import replay_fold
 
 BATCH_SHARDS = 4
 _KEYS = ["event_type"]
 
 
-def _replay_state_refresh(
+def _merge_refresh(
     spark: SparkSession,
     source: DataFrame,
     build_state: Callable[[DataFrame], DataFrame],
     merge_states: Callable[[DataFrame, DataFrame], DataFrame],
-    finalize: Callable[[SparkSession, DataFrame], DataFrame],
+    finalize: Callable[[DataFrame], DataFrame],
     prefix: str,
     shard_key: str = "event_id",
 ) -> DataFrame:
-    """THE replay scaffolding, written once: shard ``source`` into
-    BATCH_SHARDS delta files, drain them as real micro-batches, merge
-    each batch's ``build_state`` into the persistent parquet state via
-    ``merge_states`` (A/B ping-pong — Spark cannot overwrite a path it
-    is reading within one job), then return ``finalize`` of the final
-    state, materialized before the temp dirs are removed. Both
-    standing-aggregate and CMS refreshes are thin bodies over this —
-    a fix to the retry/ping-pong machinery lands in both by
-    construction."""
-    work = tempfile.mkdtemp(prefix=prefix)
-    delta_dir = os.path.join(work, "deltas")
-    ckpt_dir = os.path.join(work, "ckpt")
-    state_dirs = [os.path.join(work, "state_a"), os.path.join(work, "state_b")]
-    os.makedirs(delta_dir)
-    write_shards(source, delta_dir, BATCH_SHARDS, shard_key)
+    """replay_fold over ``source`` in BATCH_SHARDS micro-batches: each
+    batch's ``build_state`` merges into the persisted state via
+    ``merge_states``; the result is ``finalize`` of the final state.
+    The mergeable-state refreshers below are thin bodies over this."""
 
-    live: list[str] = []  # last state dir actually written
+    def step(batch: DataFrame, _batch_id: int, state):
+        new = build_state(batch)
+        return (new if state is None else merge_states(state, new)), None
 
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cur = state_dirs[batch_id % 2]
-        nxt = state_dirs[(batch_id + 1) % 2]
-        batch_state = build_state(batch_df)
-        if os.path.exists(cur):
-            merged = merge_states(
-                batch_df.sparkSession.read.parquet(cur), batch_state
-            )
-        else:
-            merged = batch_state
-        merged.write.mode("overwrite").parquet(nxt)
-        live.append(nxt)
-
-    replay_foreachbatch(
-        spark, delta_dir, ckpt_dir, BATCH_SHARDS, _merge_batch, prefix
+    return replay_fold(
+        spark, source, BATCH_SHARDS, shard_key, step,
+        lambda state, _emitted: finalize(state), prefix,
     )
-
-    out = finalize(spark, spark.read.parquet(live[-1]))
-    # materialize before the temp dirs can be cleaned; the result is
-    # state-sized (|groups| / probe-sample rows)
-    rows = out.collect()
-    result = spark.createDataFrame(rows, out.schema)
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 def streaming_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -117,7 +79,7 @@ def streaming_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # normalized schema, no vintage handling needed
     events = table(spark, sf_dir, "events")
 
-    def finalize(_spark: SparkSession, state: DataFrame) -> DataFrame:
+    def finalize(state: DataFrame) -> DataFrame:
         return state.select(
             "event_type",
             "n_rows",
@@ -127,7 +89,7 @@ def streaming_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("max_value"), 4).alias("max_value"),
         )
 
-    return _replay_state_refresh(
+    return _merge_refresh(
         spark,
         events,
         lambda batch: INC.partial_aggs(batch, _KEYS, "value"),
@@ -149,17 +111,17 @@ def streaming_cms_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequencies: constant-size state, O(|batch|) work per trigger,
     never a rescan of history.
 
-    Scaffolding (sharding, ping-pong state, at-least-once caveat) is
-    _replay_state_refresh — shared with streaming_agg_refresh."""
+    The replay (sharding, persisted state, idempotent batches) is
+    streaming/replay.py::replay_fold."""
     from env_data_pipeline_spark.catalog import table
     from env_data_pipeline_spark.extensions import sketches as SK
 
     events = table(spark, sf_dir, "events")
 
-    def finalize(_spark: SparkSession, cells: DataFrame) -> DataFrame:
+    def finalize(cells: DataFrame) -> DataFrame:
         return SK.cms_probe(cells, SK.cms_probe_sample(events))
 
-    return _replay_state_refresh(
+    return _merge_refresh(
         spark,
         events,
         lambda batch: SK.cms_cells(batch.select("user_id")),
@@ -181,20 +143,19 @@ def streaming_hll_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ADD-merge) refresh this completes the streaming sketch-algebra
     matrix; state is |types| * 64 rows forever.
 
-    Scaffolding (sharding, ping-pong state, at-least-once caveat) is
-    _replay_state_refresh — shared with the agg/CMS/join-view
-    refreshes."""
+    The replay (sharding, persisted state, idempotent batches) is
+    streaming/replay.py::replay_fold."""
     from env_data_pipeline_spark.catalog import table
     from env_data_pipeline_spark.extensions import sketches as SK
 
     events = table(spark, sf_dir, "events")
 
-    def finalize(fspark: SparkSession, regs: DataFrame) -> DataFrame:
+    def finalize(regs: DataFrame) -> DataFrame:
         return SK.hll_report_from_registers(
-            fspark, regs, events.select("event_type", "user_id")
+            spark, regs, events.select("event_type", "user_id")
         )
 
-    return _replay_state_refresh(
+    return _merge_refresh(
         spark,
         events,
         lambda batch: SK.hll_registers(
@@ -221,9 +182,8 @@ def streaming_join_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: per trigger the work is O(|batch| join fan-out +
     |state|); the dimension is scanned per batch (broadcast in
     production when it fits, key-partitioned join otherwise) and
-    history is never rescanned. Scaffolding (sharding, ping-pong
-    state, at-least-once caveat) is _replay_state_refresh — shared
-    with the aggregate and CMS refreshes."""
+    history is never rescanned. The replay (sharding, persisted
+    state, idempotent batches) is streaming/replay.py::replay_fold."""
     from env_data_pipeline_spark.catalog import table
 
     orders = table(spark, sf_dir, "orders").select(
@@ -240,15 +200,12 @@ def streaming_join_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("o_orderpriority", "rev_units")
         return INC.partial_aggs(rows, INC.JV_KEYS, "rev_units")
 
-    def finalize(_spark: SparkSession, state: DataFrame) -> DataFrame:
-        return INC.jv_finalize(state)
-
-    return _replay_state_refresh(
+    return _merge_refresh(
         spark,
         li,
         build,
         lambda cur, new: INC.refresh_partial_aggs(cur, new, INC.JV_KEYS),
-        finalize,
+        INC.jv_finalize,
         "stream_join_view_refresh_",
         shard_key="l_orderkey",
     )
@@ -300,7 +257,7 @@ def streaming_backlog_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.max("close_day").alias("close_day"))
         )
 
-    def finalize(_spark: SparkSession, state: DataFrame) -> DataFrame:
+    def finalize(state: DataFrame) -> DataFrame:
         spans = orders.join(
             state, orders["o_orderkey"] == state["l_orderkey"]
         ).select(
@@ -310,7 +267,7 @@ def streaming_backlog_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch query and this refresh publish ONE definition
         return INC.backlog_series(spans)
 
-    return _replay_state_refresh(
+    return _merge_refresh(
         spark,
         li,
         build,
@@ -353,28 +310,12 @@ def streaming_dedup_index_refresh(spark: SparkSession, docs: DataFrame) -> DataF
     corpus is never rescanned and never self-joined."""
     from env_data_pipeline_spark.extensions import dedup as D
 
-    work = tempfile.mkdtemp(prefix="stream_dedup_index_")
-    delta_dir = os.path.join(work, "deltas")
-    ckpt_dir = os.path.join(work, "ckpt")
-    decisions_dir = os.path.join(work, "decisions")
-    band_dirs = [os.path.join(work, "bands_a"), os.path.join(work, "bands_b")]
-    sh_dirs = [os.path.join(work, "sh_a"), os.path.join(work, "sh_b")]
-    os.makedirs(delta_dir)
-    write_shards(docs.select("doc_id", "text"), delta_dir, BATCH_SHARDS, "doc_id")
-
-    def _apply(batch_docs: DataFrame, batch_id: int) -> None:
-        sp = batch_docs.sparkSession
-        cur = batch_id % 2
-        nxt = (batch_id + 1) % 2
+    def step(batch_docs: DataFrame, batch_id: int, index):
         sigs = D.minhash_signatures(D.shingles(batch_docs, distinct=False))
         bands_b = D.band_table(sigs)
         sh_b = D.shingles(batch_docs, distinct=True)
-        if os.path.exists(band_dirs[cur]):
-            idx_bands = sp.read.parquet(band_dirs[cur])
-            idx_sh = sp.read.parquet(sh_dirs[cur])
-        else:
-            idx_bands = bands_b.limit(0)
-            idx_sh = sh_b.limit(0)
+        # the persisted index: (band table, shingle store)
+        idx_bands, idx_sh = index or (bands_b.limit(0), sh_b.limit(0))
         probe = bands_b.select(
             F.col("doc_id").alias("d"), "band", "band_key"
         )
@@ -444,30 +385,32 @@ def streaming_dedup_index_refresh(spark: SparkSession, docs: DataFrame) -> DataF
             )
             .localCheckpoint(eager=True)
         )
-        # idempotent per-batch sink: foreachBatch is at-least-once, so
-        # an append here would duplicate decision rows on a replayed
-        # micro-batch; overwriting batch=<id> makes the replay a no-op
-        decisions.write.mode("overwrite").parquet(
-            os.path.join(decisions_dir, f"batch={batch_id}")
-        )
         admitted_ids = decisions.filter("admitted").select("doc_id")
-        idx_bands.unionByName(
-            bands_b.join(F.broadcast(admitted_ids), "doc_id", "left_semi")
-        ).write.mode("overwrite").parquet(band_dirs[nxt])
-        idx_sh.unionByName(
-            sh_b.join(F.broadcast(admitted_ids), "doc_id", "left_semi")
-        ).write.mode("overwrite").parquet(sh_dirs[nxt])
+        index = (
+            idx_bands.unionByName(
+                bands_b.join(F.broadcast(admitted_ids), "doc_id", "left_semi")
+            ),
+            idx_sh.unionByName(
+                sh_b.join(F.broadcast(admitted_ids), "doc_id", "left_semi")
+            ),
+        )
+        return index, decisions
 
-    replay_foreachbatch(
-        spark, delta_dir, ckpt_dir, BATCH_SHARDS, _apply, "stream_dedup_index_"
+    return replay_fold(
+        spark, docs.select("doc_id", "text"), BATCH_SHARDS, "doc_id", step,
+        lambda _index, decisions: decisions.orderBy("doc_id"),
+        "stream_dedup_index_",
     )
-    out = (
-        spark.read.parquet(decisions_dir).drop("batch").orderBy("doc_id")
+
+
+def _add_daily(old: DataFrame, new: DataFrame) -> DataFrame:
+    """ADD-merge of the (event_type, day) -> (su, cnt) partial state
+    shared by the CUSUM, Mann-Kendall and Holt refreshes."""
+    return (
+        old.unionByName(new)
+        .groupBy("event_type", "day")
+        .agg(F.sum("su").alias("su"), F.sum("cnt").alias("cnt"))
     )
-    rows = out.collect()
-    result = spark.createDataFrame(rows, out.schema)
-    shutil.rmtree(work, ignore_errors=True)
-    return result
 
 
 def streaming_cusum_state_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -484,21 +427,9 @@ def streaming_cusum_state_refresh(spark: SparkSession, sf_dir: str) -> DataFrame
 
     events = table(spark, sf_dir, "events")
 
-    def build(batch: DataFrame) -> DataFrame:
-        return _daily_partials(batch)
-
-    def merge(old: DataFrame, new: DataFrame) -> DataFrame:
-        return (
-            old.unionByName(new)
-            .groupBy("event_type", "day")
-            .agg(F.sum("su").alias("su"), F.sum("cnt").alias("cnt"))
-        )
-
-    def finalize(_spark: SparkSession, state: DataFrame) -> DataFrame:
-        return cusum_report(state)
-
-    return _replay_state_refresh(
-        spark, events, build, merge, finalize, "stream_cusum_refresh_"
+    return _merge_refresh(
+        spark, events, _daily_partials, _add_daily, cusum_report,
+        "stream_cusum_refresh_",
     )
 
 
@@ -515,17 +446,12 @@ def streaming_skyline_state_refresh(spark: SparkSession, sf_dir: str) -> DataFra
 
     part = skyline_source(spark, sf_dir)
 
-    def build(batch: DataFrame) -> DataFrame:
-        return skyline_frame(batch)
-
     def merge(old: DataFrame, new: DataFrame) -> DataFrame:
         return skyline_frame(old.unionByName(new))
 
-    def finalize(_spark: SparkSession, state: DataFrame) -> DataFrame:
-        return _format_skyline(state)
-
-    return _replay_state_refresh(
-        spark, part, build, merge, finalize, "stream_skyline_refresh_",
+    return _merge_refresh(
+        spark, part, skyline_frame, merge, _format_skyline,
+        "stream_skyline_refresh_",
         shard_key="p_partkey",
     )
 
@@ -545,25 +471,16 @@ def streaming_mann_kendall_state_refresh(
 
     events = table(spark, sf_dir, "events")
 
-    def build(batch: DataFrame) -> DataFrame:
-        return _daily_partials(batch)
-
-    def merge(old: DataFrame, new: DataFrame) -> DataFrame:
-        return (
-            old.unionByName(new)
-            .groupBy("event_type", "day")
-            .agg(F.sum("su").alias("su"), F.sum("cnt").alias("cnt"))
-        )
-
-    def finalize(_spark: SparkSession, state: DataFrame) -> DataFrame:
+    def finalize(state: DataFrame) -> DataFrame:
         return mann_kendall_report(
             state.select(
                 "event_type", "day", F.expr("(su * 1000) div cnt").alias("m")
             )
         )
 
-    return _replay_state_refresh(
-        spark, events, build, merge, finalize, "stream_mk_refresh_"
+    return _merge_refresh(
+        spark, events, _daily_partials, _add_daily, finalize,
+        "stream_mk_refresh_",
     )
 
 
@@ -605,11 +522,8 @@ def streaming_hhi_state_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("su").alias("su"))
         )
 
-    def finalize(_spark: SparkSession, state: DataFrame) -> DataFrame:
-        return hhi_report(state)
-
-    return _replay_state_refresh(
-        spark, li, build, merge, finalize, "stream_hhi_refresh_",
+    return _merge_refresh(
+        spark, li, build, merge, hhi_report, "stream_hhi_refresh_",
         shard_key="l_orderkey",
     )
 
@@ -652,7 +566,7 @@ def streaming_paragraph_state_refresh(
             .agg(F.sum("cnt").alias("cnt"))
         )
 
-    def finalize(_spark: SparkSession, state: DataFrame) -> DataFrame:
+    def finalize(state: DataFrame) -> DataFrame:
         g = state.groupBy("ph").agg(F.sum("cnt").alias("gcnt"))
         return (
             state.join(g.hint("shuffle_hash"), "ph")
@@ -674,7 +588,7 @@ def streaming_paragraph_state_refresh(
             .orderBy("source")
         )
 
-    return _replay_state_refresh(
+    return _merge_refresh(
         spark, docs, build, merge, finalize, "stream_para_refresh_",
         shard_key="doc_id",
     )
@@ -694,23 +608,14 @@ def streaming_holt_state_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = table(spark, sf_dir, "events")
 
-    def build(batch: DataFrame) -> DataFrame:
-        return _daily_partials(batch)
-
-    def merge(old: DataFrame, new: DataFrame) -> DataFrame:
-        return (
-            old.unionByName(new)
-            .groupBy("event_type", "day")
-            .agg(F.sum("su").alias("su"), F.sum("cnt").alias("cnt"))
-        )
-
-    def finalize(_spark: SparkSession, state: DataFrame) -> DataFrame:
+    def finalize(state: DataFrame) -> DataFrame:
         return holt_report(
             state.select(
                 "event_type", "day", F.expr("(su * 1000) div cnt").alias("m")
             )
         )
 
-    return _replay_state_refresh(
-        spark, events, build, merge, finalize, "stream_holt_refresh_"
+    return _merge_refresh(
+        spark, events, _daily_partials, _add_daily, finalize,
+        "stream_holt_refresh_",
     )

@@ -1,20 +1,36 @@
-"""Shared micro-batch replay scaffolding for the foreachBatch
-maintenance modules (incremental_refresh, scd2_refresh,
-vector_index_refresh): shard a deterministic input into single-file
-deltas, replay them one file per trigger, and guard that the replay
-REALLY ran multi-batch — if availableNow ever stopped honoring
-maxFilesPerTrigger and collapsed to one batch, the cross-batch merge
-path would be untested while the result stayed green."""
+"""The micro-batch replay that every foreachBatch maintenance query
+runs (incremental_refresh, scd2_refresh, vector_index_refresh and the
+streaming corpus/LLM-ops refreshers): shard a deterministic input into
+single-file deltas, replay them one file per trigger, fold each batch
+into persistent parquet state, and guard that the replay REALLY ran
+multi-batch — if availableNow ever stopped honoring maxFilesPerTrigger
+and collapsed to one batch, the cross-batch merge path would be
+untested while the result stayed green.
+
+``replay_fold`` owns the whole lifecycle; a caller supplies only its
+seed state, its per-batch step and its finish.
+
+Replay idempotence (foreachBatch is at-least-once): both per-batch
+sinks are keyed on ``batch_id``. State for batch ``b`` is read from the
+``(b - 1) % 2`` dir and written to the ``b % 2`` dir (Spark cannot
+overwrite a path it is reading within one job), and emitted frames
+overwrite ``batch=<b>``, so a re-delivered batch reads the same input
+state and rewrites what its first delivery wrote. The work dir is
+per call and removed on exit, success or not."""
 
 from __future__ import annotations
 
 import glob
 import os
 import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# persistent fold state: one frame, several frames, or none yet
+State = DataFrame | tuple[DataFrame, ...] | None
 
 
 def write_shards(df: DataFrame, out_dir: str, n_shards: int, key: str) -> None:
@@ -31,7 +47,23 @@ def write_shards(df: DataFrame, out_dir: str, n_shards: int, key: str) -> None:
         shutil.rmtree(shard_tmp)
 
 
-def replay_foreachbatch(
+def _write_state(state: State, path: str) -> None:
+    frames = (state,) if isinstance(state, DataFrame) else state
+    for i, frame in enumerate(frames):
+        frame.write.mode("overwrite").parquet(os.path.join(path, str(i)))
+
+
+def _read_state(spark: SparkSession, path: str) -> State:
+    if not os.path.exists(path):
+        return None
+    frames = tuple(
+        spark.read.parquet(os.path.join(path, str(i)))
+        for i in range(len(os.listdir(path)))
+    )
+    return frames[0] if len(frames) == 1 else frames
+
+
+def _replay_foreachbatch(
     spark: SparkSession,
     delta_dir: str,
     ckpt_dir: str,
@@ -60,12 +92,64 @@ def replay_foreachbatch(
     q.awaitTermination(60)
     if lp is None:
         raise RuntimeError(f"{what} replay processed no batches")
-    if not isinstance(lp, dict):  # older API returns an object
-        import json
-
-        lp = json.loads(lp.json)
     if lp["batchId"] < n_shards - 1:
         raise RuntimeError(
             f"{what} replay collapsed to {lp['batchId'] + 1} "
             f"batch(es); expected {n_shards}"
         )
+
+
+def replay_fold(
+    spark: SparkSession,
+    source: DataFrame,
+    n_shards: int,
+    shard_key: str,
+    step: Callable[[DataFrame, int, State], tuple[State, DataFrame | None]],
+    finish: Callable[[State, DataFrame | None], DataFrame],
+    prefix: str,
+    seed: State = None,
+) -> DataFrame:
+    """Replay ``source`` as ``n_shards`` micro-batches (split by
+    ``shard_key`` % n_shards) and fold them through ``step``.
+
+    ``step(batch_df, batch_id, state)`` returns ``(state, emitted)``:
+    ``state`` is the previous batch's persisted state (``seed`` before
+    the first batch, else None) and the returned state is persisted
+    for the next batch; ``emitted`` (or None) is written to the
+    batch's own ``batch=<id>`` dir. ``finish(state, emitted)`` sees
+    the final state and the union of every batch's emitted rows; its
+    result is materialized on the executors before the temp dir
+    ``<prefix>*`` is removed, so a dimension-sized result never
+    round-trips through the driver."""
+    work = tempfile.mkdtemp(prefix=prefix)
+    try:
+        delta_dir = os.path.join(work, "deltas")
+        emit_dir = os.path.join(work, "emitted")
+        state_dirs = [os.path.join(work, "state_a"), os.path.join(work, "state_b")]
+        os.makedirs(delta_dir)
+        write_shards(source, delta_dir, n_shards, shard_key)
+        if seed is not None:
+            _write_state(seed, state_dirs[1])
+
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
+            prev = _read_state(batch_df.sparkSession, state_dirs[(batch_id + 1) % 2])
+            state, emitted = step(batch_df, batch_id, prev)
+            if state is not None:
+                _write_state(state, state_dirs[batch_id % 2])
+            if emitted is not None:
+                emitted.write.mode("overwrite").parquet(
+                    os.path.join(emit_dir, f"batch={batch_id}")
+                )
+
+        _replay_foreachbatch(
+            spark, delta_dir, os.path.join(work, "ckpt"), n_shards, _apply, prefix
+        )
+        emitted = (
+            spark.read.parquet(emit_dir).drop("batch")
+            if os.path.exists(emit_dir)
+            else None
+        )
+        final = _read_state(spark, state_dirs[(n_shards + 1) % 2])
+        return finish(final, emitted).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)

@@ -7,33 +7,27 @@ incremental_refresh.py's standing aggregate.
 Mechanics proven, not claimed: the update set splits into
 BATCH_SHARDS delta files replayed with maxFilesPerTrigger=1 (the
 multi-batch guard raises if the replay ever collapses), the history
-persists as parquet between batches (ping-pong A/B dirs), and the
-final table must hash-equal the one-shot batch SCD2 result (the
-DuckDB oracle) — which holds only if closing/opening validity
-intervals composes correctly across batch boundaries.
+persists as parquet between batches, and the final table must
+hash-equal the one-shot batch SCD2 result (the DuckDB oracle) — which
+holds only if closing/opening validity intervals composes correctly
+across batch boundaries. The replay is streaming/replay.py::
+replay_fold, shared by every foreachBatch refresher.
 
 Scale posture: each batch is ONE key join of the history against the
 batch's updates plus a map-side fan-out (operators/incremental.py::
 scd2_apply_history) — O(|hist| + |batch|) per batch, bucket-elidable
-on the dimension key. The same at-least-once foreachBatch caveat as
-incremental_refresh.py applies (documented there); here redelivery of
-an already-applied batch is additionally a NO-OP by construction,
+on the dimension key. replay_fold keys the history write on batch_id
+(see streaming/replay.py); redelivery of an already-applied batch is
+additionally a NO-OP by construction,
 because a re-delivered update matches the now-current attributes and
 forks no history (pinned by tests/test_incremental.py)."""
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
 from env_data_pipeline_spark.operators import incremental as INC
-from env_data_pipeline_spark.streaming.replay import (
-    replay_foreachbatch,
-    write_shards,
-)
+from env_data_pipeline_spark.streaming.replay import replay_fold
 
 BATCH_SHARDS = 2
 
@@ -51,52 +45,13 @@ def streaming_scd2_refresh(
     """Replay ``updates`` as BATCH_SHARDS micro-batches (split by key
     parity, so batches touch disjoint keys); foreachBatch applies each
     to the persistent history. Returns the final history table."""
-    work = tempfile.mkdtemp(prefix="stream_scd2_")
-    try:
-        return _run_refresh(
-            spark, work, updates, dim, key, attrs, base_date, batch_date
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
+    def step(batch_df: DataFrame, _batch_id: int, hist: DataFrame):
+        return INC.scd2_apply_history(hist, batch_df, key, attrs, batch_date), None
 
-def _run_refresh(
-    spark: SparkSession,
-    work: str,
-    updates: DataFrame,
-    dim: DataFrame,
-    key: str,
-    attrs: list[str],
-    base_date: str,
-    batch_date: str,
-) -> DataFrame:
-    delta_dir = os.path.join(work, "deltas")
-    ckpt_dir = os.path.join(work, "ckpt")
-    state_dirs = [os.path.join(work, "state_a"), os.path.join(work, "state_b")]
-    os.makedirs(delta_dir)
-    write_shards(updates, delta_dir, BATCH_SHARDS, key)
-
-    # seed the persistent history with the trivial expansion of the
-    # current-only snapshot
-    INC.scd2_init(dim, key, attrs, base_date).write.mode("overwrite").parquet(
-        state_dirs[1]
+    # seed: the trivial expansion of the current-only snapshot
+    return replay_fold(
+        spark, updates, BATCH_SHARDS, key, step,
+        lambda hist, _emitted: hist, "stream_scd2_",
+        seed=INC.scd2_init(dim, key, attrs, base_date),
     )
-
-    live: list[str] = []
-
-    def _apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cur = state_dirs[(batch_id + 1) % 2]
-        nxt = state_dirs[batch_id % 2]
-        hist = batch_df.sparkSession.read.parquet(cur)
-        merged = INC.scd2_apply_history(hist, batch_df, key, attrs, batch_date)
-        merged.write.mode("overwrite").parquet(nxt)
-        live.append(nxt)
-
-    replay_foreachbatch(
-        spark, delta_dir, ckpt_dir, BATCH_SHARDS, _apply_batch, "streaming SCD2"
-    )
-
-    # detach the result from the about-to-be-removed temp dir WITHOUT
-    # round-tripping the (dimension-sized) history through the driver:
-    # localCheckpoint materializes the partitions on the executors
-    return spark.read.parquet(live[-1]).localCheckpoint(eager=True)

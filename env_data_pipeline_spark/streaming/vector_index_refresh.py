@@ -4,12 +4,13 @@ newly-arrived vectors against the frozen codebook and appends them to
 a persistent (vec_id, cell-free) code table — how a 100 TB vector
 store keeps its ANN index fresh without rebuilds.
 
-Same proof shape as the incremental-aggregate and SCD2 refreshers:
-the vector set replays as real micro-batches (maxFilesPerTrigger=1,
-multi-batch guard), the code table persists as parquet between
-batches, and the final table must equal the one-shot batch
-pq_codes over all vectors — which holds because coding is per-row
-(embarrassingly incremental) and the codebook is frozen. The
+Same proof shape as the incremental-aggregate and SCD2 refreshers
+(all of them run streaming/replay.py::replay_fold): the vector set
+replays as real micro-batches (maxFilesPerTrigger=1, multi-batch
+guard), each batch's codes persist in their own batch=<id> dir, and
+the final table must equal the one-shot batch pq_codes over all
+vectors — which holds because coding is per-row (embarrassingly
+incremental) and the codebook is frozen. The
 interesting scale property is the inverse: RE-coding is only ever
 needed when the CODEBOOK changes, and then it is a full-scan batch
 job — this module makes the cheap direction (new vectors) concrete.
@@ -20,17 +21,10 @@ touches of previously-coded vectors."""
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
 from env_data_pipeline_spark.extensions import similarity as X
-from env_data_pipeline_spark.streaming.replay import (
-    replay_foreachbatch,
-    write_shards,
-)
+from env_data_pipeline_spark.streaming.replay import replay_fold
 
 BATCH_SHARDS = 3
 
@@ -47,46 +41,15 @@ def streaming_pq_code_refresh(
     batch is PQ-coded against the broadcast ``codebook`` and appended
     to the persistent code table. Returns the final (vec_id, m, code)
     table."""
-    work = tempfile.mkdtemp(prefix="stream_pqcodes_")
-    try:
-        return _run(spark, work, pts, codebook, m_subspaces, dim_per_sub, quant)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
+    def step(batch_df: DataFrame, _batch_id: int, _state):
+        # append-only: new vectors never touch previously-coded rows
+        codes = X.pq_assign(batch_df, codebook, m_subspaces, dim_per_sub, quant)
+        return None, codes.drop("dist_u")
 
-def _run(
-    spark: SparkSession,
-    work: str,
-    pts: DataFrame,
-    codebook: DataFrame,
-    m_subspaces: int,
-    dim_per_sub: int,
-    quant: float,
-) -> DataFrame:
-    delta_dir = os.path.join(work, "deltas")
-    ckpt_dir = os.path.join(work, "ckpt")
-    codes_dir = os.path.join(work, "codes")
-    os.makedirs(delta_dir)
-    write_shards(pts, delta_dir, BATCH_SHARDS, "vec_id")
-
-    def _code_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # append-only: new vectors never touch previously-coded rows.
-        # Idempotent per-batch sink (foreachBatch is at-least-once): a
-        # replayed micro-batch overwrites its own batch=<id> directory
-        # instead of duplicating code rows.
-        X.pq_assign(batch_df, codebook, m_subspaces, dim_per_sub, quant).drop(
-            "dist_u"
-        ).write.mode("overwrite").parquet(
-            os.path.join(codes_dir, f"batch={batch_id}")
-        )
-
-    replay_foreachbatch(
-        spark, delta_dir, ckpt_dir, BATCH_SHARDS, _code_batch, "streaming PQ coding"
-    )
-    return (
-        spark.read.parquet(codes_dir)
-        .drop("batch")
-        .localCheckpoint(eager=True)
+    return replay_fold(
+        spark, pts, BATCH_SHARDS, "vec_id", step,
+        lambda _state, codes: codes, "stream_pqcodes_",
     )
 
 
@@ -107,112 +70,75 @@ def streaming_ivf_drift_refresh(
 ) -> DataFrame:
     """The continuous form of ivf_drift_retrain_verdict: replay
     ``arrivals`` (vec_id, v) as DRIFT_BATCHES micro-batches against a
-    FROZEN centroid set. Each batch (a) coarse-assigns its vectors and
-    appends their cell codes to the persistent code table — the cheap
-    ingest direction, identical to the PQ code refresher — and (b)
-    folds the batch's per-cell counts into a persistent occupancy
-    state, recomputes the max per-cell share shift vs the training
-    snapshot (exact integer permille), and records a per-batch
+    FROZEN centroid set. Each batch coarse-assigns its vectors (the
+    cheap ingest direction, as in the PQ code refresher), folds the
+    batch's per-cell counts into a persistent occupancy state,
+    recomputes the max per-cell share shift vs the training snapshot
+    (exact integer permille), and records a per-batch
     (metric, verdict) row. Returns the drift trajectory: one row per
     batch, n_arrivals cumulative, verdict flipping to RETRAIN the
     moment the shift crosses ``thresh``.
 
     Scale: per batch one broadcast-centroid assignment over the
     batch's rows only; the occupancy state and every metric frame is
-    K rows. Both sinks are idempotent per batch (overwrite of
-    batch=<id> / ping-pong state), so an at-least-once replay cannot
-    double-count."""
+    K rows. Both sinks are keyed on batch_id (streaming/replay.py::
+    replay_fold), so an at-least-once replay cannot double-count."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    work = tempfile.mkdtemp(prefix="stream_ivfdrift_")
-    try:
-        delta_dir = os.path.join(work, "deltas")
-        ckpt_dir = os.path.join(work, "ckpt")
-        codes_dir = os.path.join(work, "codes")
-        metrics_dir = os.path.join(work, "metrics")
-        state_dirs = [os.path.join(work, "state_a"), os.path.join(work, "state_b")]
-        os.makedirs(delta_dir)
-        write_shards(arrivals, delta_dir, DRIFT_BATCHES, "vec_id")
-        train_counts.select(
-            "cell_id",
-            F.col("n_train").cast("bigint"),
-            F.lit(0).cast("bigint").alias("n_new"),
-        ).write.mode("overwrite").parquet(state_dirs[0])
-
-        def _apply(batch_df: DataFrame, batch_id: int) -> None:
-            sp = batch_df.sparkSession
-            cur, nxt = batch_id % 2, (batch_id + 1) % 2
-            assigned = X.coarse_assign(
-                X.coarse_scores(batch_df.select("vec_id", "v"), centroids, quant)
-            )
-            codes = assigned.select(
-                "vec_id", F.col("cell").alias("cell_id")
-            ).localCheckpoint(eager=True)
-            codes.write.mode("overwrite").parquet(
-                os.path.join(codes_dir, f"batch={batch_id}")
-            )
-            bc = codes.groupBy("cell_id").agg(
-                F.count(F.lit(1)).cast("bigint").alias("b_new")
-            )
-            prev = sp.read.parquet(state_dirs[cur])
-            state = (
-                prev.join(F.broadcast(bc), "cell_id", "left")
-                .select(
-                    "cell_id",
-                    "n_train",
-                    (F.col("n_new") + F.coalesce("b_new", F.lit(0)))
-                    .cast("bigint")
-                    .alias("n_new"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            state.write.mode("overwrite").parquet(state_dirs[nxt])
-            w = Window.partitionBy()  # K-row frame, single partition
-            shift = F.abs(
-                F.floor(
-                    (F.lit(1000) * (F.col("n_train") + F.col("n_new")))
-                    / F.sum(F.col("n_train") + F.col("n_new")).over(w)
-                )
-                - F.floor(
-                    (F.lit(1000) * F.col("n_train"))
-                    / F.sum("n_train").over(w)
-                )
-            )
-            metric = (
-                state.select(
-                    shift.alias("shift"), F.col("n_new").alias("n_new")
-                )
-                .agg(
-                    F.max("shift").cast("bigint").alias("max_shift_permille"),
-                    F.sum("n_new").cast("bigint").alias("n_arrivals"),
-                )
-                .select(
-                    F.lit(batch_id).cast("bigint").alias("batch_id"),
-                    "n_arrivals",
-                    "max_shift_permille",
-                    F.when(
-                        F.col("max_shift_permille") > thresh, "RETRAIN"
-                    )
-                    .otherwise("KEEP")
-                    .alias("verdict"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            metric.write.mode("overwrite").parquet(
-                os.path.join(metrics_dir, f"batch={batch_id}")
-            )
-
-        replay_foreachbatch(
-            spark, delta_dir, ckpt_dir, DRIFT_BATCHES, _apply,
-            "streaming IVF drift ",
+    def step(batch_df: DataFrame, batch_id: int, prev: DataFrame):
+        assigned = X.coarse_assign(
+            X.coarse_scores(batch_df.select("vec_id", "v"), centroids, quant)
         )
-        out = (
-            spark.read.parquet(metrics_dir)
-            .drop("batch")
-            .orderBy("batch_id")
+        bc = assigned.groupBy(F.col("cell").alias("cell_id")).agg(
+            F.count(F.lit(1)).cast("bigint").alias("b_new")
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        # read twice below (state write, metric): materialize once
+        state = (
+            prev.join(F.broadcast(bc), "cell_id", "left")
+            .select(
+                "cell_id",
+                "n_train",
+                (F.col("n_new") + F.coalesce("b_new", F.lit(0)))
+                .cast("bigint")
+                .alias("n_new"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        w = Window.partitionBy()  # K-row frame, single partition
+        shift = F.abs(
+            F.floor(
+                (F.lit(1000) * (F.col("n_train") + F.col("n_new")))
+                / F.sum(F.col("n_train") + F.col("n_new")).over(w)
+            )
+            - F.floor(
+                (F.lit(1000) * F.col("n_train")) / F.sum("n_train").over(w)
+            )
+        )
+        metric = (
+            state.select(shift.alias("shift"), F.col("n_new").alias("n_new"))
+            .agg(
+                F.max("shift").cast("bigint").alias("max_shift_permille"),
+                F.sum("n_new").cast("bigint").alias("n_arrivals"),
+            )
+            .select(
+                F.lit(batch_id).cast("bigint").alias("batch_id"),
+                "n_arrivals",
+                "max_shift_permille",
+                F.when(F.col("max_shift_permille") > thresh, "RETRAIN")
+                .otherwise("KEEP")
+                .alias("verdict"),
+            )
+        )
+        return state, metric
+
+    seed = train_counts.select(
+        "cell_id",
+        F.col("n_train").cast("bigint"),
+        F.lit(0).cast("bigint").alias("n_new"),
+    )
+    return replay_fold(
+        spark, arrivals, DRIFT_BATCHES, "vec_id", step,
+        lambda _state, metrics: metrics.orderBy("batch_id"),
+        "stream_ivfdrift_", seed=seed,
+    )

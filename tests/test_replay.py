@@ -1,0 +1,66 @@
+"""The micro-batch replay lifecycle (streaming/replay.py::replay_fold):
+the per-call work dir is removed whether the replay succeeds or a
+batch fails, and the multi-batch guard rejects a replay that ran fewer
+micro-batches than it has shards."""
+
+from __future__ import annotations
+
+import os
+import tempfile
+
+import pytest
+
+
+def _agg_work_dirs(root) -> list[str]:
+    return [n for n in os.listdir(root) if n.startswith("stream_agg_refresh_")]
+
+
+def test_failed_replay_removes_work_dir(spark, sf_dir, tmp_path, monkeypatch):
+    from env_data_pipeline_spark.operators import incremental as INC
+    from env_data_pipeline_spark.streaming.incremental_refresh import (
+        streaming_agg_refresh,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def failing_partial_aggs(*_args, **_kwargs):
+        raise RuntimeError("injected batch failure")
+
+    monkeypatch.setattr(INC, "partial_aggs", failing_partial_aggs)
+    with pytest.raises(Exception, match="injected batch failure"):
+        streaming_agg_refresh(spark, sf_dir)
+    assert _agg_work_dirs(tmp_path) == []
+
+
+def test_replay_removes_work_dir_and_detaches_result(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    from env_data_pipeline_spark.catalog import table
+    from env_data_pipeline_spark.streaming.incremental_refresh import (
+        streaming_agg_refresh,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = streaming_agg_refresh(spark, sf_dir)
+    assert _agg_work_dirs(tmp_path) == []
+    # the result no longer reads the removed state dirs
+    rows = out.collect()
+    assert sum(r["n_rows"] for r in rows) == table(spark, sf_dir, "events").count()
+
+
+def test_replay_guard_rejects_collapsed_replay(spark, tmp_path):
+    from env_data_pipeline_spark.streaming.replay import (
+        _replay_foreachbatch,
+        write_shards,
+    )
+
+    delta_dir = tmp_path / "deltas"
+    delta_dir.mkdir()
+    write_shards(spark.range(10), str(delta_dir), 1, "id")
+    with pytest.raises(
+        RuntimeError, match=r"collapsed to 1 batch\(es\); expected 2"
+    ):
+        _replay_foreachbatch(
+            spark, str(delta_dir), str(tmp_path / "ckpt"), 2,
+            lambda _df, _batch_id: None, "guard",
+        )
