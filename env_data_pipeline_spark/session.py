@@ -31,12 +31,15 @@ def host_size(environ=os.environ, mem_total_kib: int | None = None) -> tuple[int
     heap = environ.get("SPARK_GRAFT_DRIVER_MEM")
     if not heap:
         if mem_total_kib is None:
-            with open("/proc/meminfo") as fh:
-                mem_total_kib = next(
-                    int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
-                )
+            mem_total_kib = host_mem_kib()
         heap = f"{max(mem_total_kib // 4 // 1024, 512)}m"
     return cpus, heap
+
+
+def host_mem_kib() -> int:
+    """This host's MemTotal in KiB, the RAM ``host_size`` sizes the heap from."""
+    with open("/proc/meminfo") as fh:
+        return next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
 
 
 def get_spark(app_name: str = "env_data_pipeline_spark") -> SparkSession:
