@@ -218,16 +218,16 @@ def _calibrate(spark) -> float:
     BENCH_FULL.json artifacts — the committed clean run vs the
     driver's rerun — measures ENVIRONMENT phase (hypervisor steal,
     thermal/neighbor load), not engine change: divide headline
-    deltas by the probe ratio before reading them as regressions."""
-    times = []
-    for _ in range(3):
-        t0 = time.perf_counter()
+    deltas by the probe ratio before reading them as regressions.
+    One untimed execution runs first: the "before" probe is the
+    session's first Spark job, and a cold JVM would read as drift."""
+
+    def probe():
         # modulo keeps the sum far inside BIGINT (1e8 * 1e6 = 1e14)
-        spark.range(100_000_000).selectExpr(
-            "sum(id % 1000007) AS s"
-        ).collect()
-        times.append(time.perf_counter() - t0)
-    return round(sorted(times)[1], 4)
+        spark.range(100_000_000).selectExpr("sum(id % 1000007) AS s").collect()
+
+    probe()
+    return round(sorted(timed_runs(probe, 3, 0.0))[1], 4)
 
 
 def _time_tier(spark, names: list[str], sf_dir: str):
@@ -272,11 +272,10 @@ def normalize_plan(plan: str) -> str:
     """A captured plan with its per-run noise removed, so BENCH_PLANS.md
     only changes when a plan does: the session counters in expression
     ids (``#1234``), ``plan_id=``, ``RDD[...]`` and lambda variable
-    names become ``N``, and the hash components of index-artifact and
-    fixture snapshot paths become ``<hash>``."""
+    names become ``N``, and the hash components of snapshot paths
+    (fixtures and trained artifacts) become ``<hash>``."""
     plan = re.sub(r"#\d+", "#N", plan)
     plan = re.sub(r"(plan_id=|RDD\[|lambda [a-z]+_)\d+", r"\1N", plan)
-    plan = re.sub(r"(edps_index_artifacts/)[0-9a-f]+", r"\1<hash>", plan)
     return re.sub(
         r"\.fixtures/[^\s,\]]+",
         lambda m: re.sub(r"-[0-9a-f]{6,}(?=[/.])", "-<hash>", m.group()),

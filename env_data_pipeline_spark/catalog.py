@@ -10,8 +10,10 @@ oracle.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType
 
 TABLES = (
     "region",
@@ -159,6 +161,38 @@ def events_ts_vintage(spark: SparkSession, sf_dir: str) -> str:
     return vintage
 
 
+def read_events(
+    spark: SparkSession, sf_dir: str, read: Callable[[DataType], DataFrame]
+) -> DataFrame:
+    """``events`` with ``ts`` normalized to session-TZ TimestampType,
+    whatever the on-disk vintage (see ``events_ts_vintage``). ``read``
+    opens the file, as a batch or a streaming source, given the type
+    ``ts`` has on disk."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    vintage = events_ts_vintage(spark, sf_dir)
+    if vintage == "bigint":
+        # Session-wide by necessity: nanosAsLong is a SQL conf, not a
+        # per-read datasource option. It only changes how physical
+        # TIMESTAMP(NANOS) columns resolve, so micros/timestamp
+        # co-reads on the same session are unaffected — pinned by
+        # tests/test_testdata_contract.py::
+        # test_nanos_flag_does_not_disturb_micros_coread.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # integer `div`, not `/`: float division loses precision at 1e18 ns
+        return read(T.LongType()).withColumn(
+            "ts", F.timestamp_micros(F.expr("ts div 1000"))
+        )
+    if vintage == "timestamp_ntz":
+        # wall-clock-preserving cast; UTC session TZ keeps epoch
+        # semantics aligned with the oracle as well
+        return read(T.TimestampNTZType()).withColumn(
+            "ts", F.col("ts").cast("timestamp")
+        )
+    return read(T.TimestampType())
+
+
 def table(
     spark: SparkSession, sf_dir: str, name: str, parallel: bool = False
 ) -> DataFrame:
@@ -174,26 +208,7 @@ def table(
     path = os.path.join(sf_dir, f"{name}.parquet")
     key_col = _FACT_SCAN_KEYS.get(name) if parallel else None
     if name == "events":
-        from pyspark.sql import functions as F
-
-        vintage = events_ts_vintage(spark, sf_dir)
-        if vintage == "bigint":
-            # Session-wide by necessity: nanosAsLong is a SQL conf, not a
-            # per-read datasource option. It only changes how physical
-            # TIMESTAMP(NANOS) columns resolve, so micros/timestamp
-            # co-reads on the same session are unaffected — pinned by
-            # tests/test_testdata_contract.py::
-            # test_nanos_flag_does_not_disturb_micros_coread.
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
-            # integer `div`, not `/`: float division loses precision at 1e18 ns
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:
-            df = spark.read.parquet(path)
-            if vintage == "timestamp_ntz":
-                # wall-clock-preserving cast; UTC session TZ keeps epoch
-                # semantics aligned with the oracle as well
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = read_events(spark, sf_dir, lambda _ts_type: spark.read.parquet(path))
     else:
         df = spark.read.parquet(path)
     if key_col is not None:

@@ -25,39 +25,11 @@ def coord_to_rowcol(
     return row, col
 
 
-def pixel_at_coordinate(grid_meta: DataFrame, pixels: DataFrame) -> DataFrame:
-    """R2: extract the pixel under each grid's request coordinate,
-    bounds-checked (F11: landfire_container.py:95,112-113).
-
-    Relational form: compute (row, col) on the small metadata table,
-    then equi-join into the long-form pixel table on
-    (grid_id, product, row, col) — the metadata side is broadcast, and
-    ``product`` being a join key lets Catalyst propagate any caller
-    product predicate to the pixel scan (the snapshot is
-    hive-partitioned by product, so that predicate becomes directory
-    pruning — at 100 TB a 2-of-9-product query reads 2/9 of the data).
-    """
-    row, col = coord_to_rowcol(
-        F.col("req_lat"), F.col("req_lon"),
-        F.col("x0"), F.col("y0"), F.col("px_w"), F.col("px_h"),
-    )
-    target = grid_meta.select(
-        "grid_id", "request_id", "product",
-        row.alias("row"), col.alias("col"),
-        "n_rows", "n_cols",
-    ).filter(
-        (F.col("row") >= 0) & (F.col("row") < F.col("n_rows"))
-        & (F.col("col") >= 0) & (F.col("col") < F.col("n_cols"))
-    )
-    return F.broadcast(target.drop("n_rows", "n_cols")).join(
-        pixels.select("grid_id", "product", "row", "col", "pixel_value"),
-        ["grid_id", "product", "row", "col"],
-    )
-
-
 def pixel_at_coordinate_grids(grid_meta: DataFrame, grids: DataFrame) -> DataFrame:
-    """R2 on the grid-shaped layout (one row per grid, 16x16 nested
-    array): join target (grid_id, product) -> element_at lookup.
+    """R2: extract the pixel under each grid's request coordinate,
+    bounds-checked (F11: landfire_container.py:95,112-113), on the
+    grid-shaped layout (one row per grid, 16x16 nested array): join
+    target (grid_id, product) -> element_at lookup.
 
     The point-lookup access path: probes one row per grid instead of
     256 long-form rows — at 100 TB the same data volume is scanned

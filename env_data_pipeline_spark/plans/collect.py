@@ -39,6 +39,20 @@ _ALL_FIXTURES = (
     "elevation_cells",
 )
 
+# every snapshot the wide record's plan scans, its branches' included,
+# ensured in one call: each call that registers a fixture re-registers
+# the ten base views, one footer-inference job each
+_WIDE_FIXTURES = (
+    "requests",
+    "weather_current",
+    "weather_forecast",
+    "modis_observations",
+    "landfire_grid_meta",
+    "landfire_grids",
+    "landfire_attributes",
+    "elevation_cells",
+)
+
 _ORACLE = f"""
     {duck_with(*_ALL_FIXTURES)},
     valid AS (
@@ -162,7 +176,7 @@ def _wide_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     data, 0.8 when it produced degraded data (missing wind fields /
     no valid NDVI / unclassifiable pixel / majority-nodata DEM),
     0.0 when the source produced nothing for the request."""
-    ensure_fixtures(spark, sf_dir, _ALL_FIXTURES)
+    ensure_fixtures(spark, sf_dir, _WIDE_FIXTURES)
     valid = (
         V.validate_requests(spark.table("requests"))
         .filter(F.col("is_valid"))

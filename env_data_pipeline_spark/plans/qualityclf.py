@@ -37,8 +37,8 @@ Scale (100 TB): the corpus is scanned once into the DISTINCT
 rounds); each round shuffles only that frame's doc-grain z-sums and
 65-row gradients, and the only broadcast is the 65-row weight table.
 Rounds are a fixed constant (8). Training runs ONCE per corpus
-through the shared persisted-artifact cache (plans/artifacts.py,
-keyed on documents.parquet mtime + hyperparameters); scoring and the
+through the snapshot store (sources/fixtures.py::snapshot, keyed on
+the base tables' size+mtime + hyperparameters); scoring and the
 curation verdict consume the 65-row weight parquet as a broadcast —
 a deployment would train on a bounded labeled sample by passing a
 sampled frame to train_quality_weights.
@@ -263,15 +263,14 @@ QC_ARTIFACT_PARAMS = (
 def quality_weights_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained (fid, wu) table as a persisted 65-row artifact —
     trained once per corpus, broadcast by every consumer."""
-    from env_data_pipeline_spark.plans.artifacts import persisted_artifact
+    from env_data_pipeline_spark.sources.fixtures import snapshot
 
-    return persisted_artifact(
+    return snapshot(
         spark,
         sf_dir,
-        "documents",
         "quality_clf_weights",
-        lambda: train_quality_weights(table(spark, sf_dir, "documents")),
-        params=QC_ARTIFACT_PARAMS,
+        QC_ARTIFACT_PARAMS,
+        lambda: train_quality_weights(table(spark, sf_dir, "documents")).coalesce(1),
     )
 
 

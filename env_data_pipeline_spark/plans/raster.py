@@ -13,7 +13,7 @@ from pyspark.sql.window import Window
 
 from env_data_pipeline_spark.functions import classifiers as C
 from env_data_pipeline_spark.operators.joins import classify_pixels
-from env_data_pipeline_spark.operators.raster import pixel_at_coordinate, pixel_at_coordinate_grids
+from env_data_pipeline_spark.operators.raster import pixel_at_coordinate_grids
 from env_data_pipeline_spark.plans.registry import query
 from env_data_pipeline_spark.sources.fixtures import duck_with, ensure_fixtures
 

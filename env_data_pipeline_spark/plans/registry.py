@@ -45,223 +45,8 @@ def query(name: str, oracle: str | None) -> Callable[[SparkQuery], SparkQuery]:
     return deco
 
 
-# Queries with a driver-stamped green row (rows+schema+hash all true)
-# in CORRECTNESS_r01..r04. The round driver samples only the FIRST 50
-# registered queries, so load_all rotates the NOT-yet-stamped set to
-# the front of the registry; everything rotated out of the window was
-# stamped green in an earlier round and stays covered by
-# scripts/verify_driver_contract.py + tests/test_oracle_parity.py.
-# (Import-order rotation alone cannot express this: plans.collect
-# imports plans.envpipe/raster, so their registrations always precede
-# its own.)
-#
-# MAINTENANCE: at the start of each round, fold the previous round's
-# newly green CORRECTNESS_r{N}.json names into this set so the next
-# sample window spends its slots on whatever still lacks evidence;
-# tests/test_registry_rotation.py fails if the unstamped set ever
-# outgrows the window.
-DRIVER_STAMPED: frozenset[str] = frozenset(
-    {
-        "flagship_pricing_summary", "revenue_by_region",
-        "topk_orders_per_priority", "semi_anti_join_customers",
-        "order_priority_check", "set_ops_part_types",
-        "events_sessionized_stats", "events_asof_last_touch",
-        "top_suppliers_per_nation", "events_salted_type_stats",
-        "revenue_rollup_region_nation", "lineitem_price_quantiles",
-        "small_quantity_revenue", "orders_status_pivot",
-        "events_props_json_stats", "validate_requests",
-        "validation_reject_summary", "weather_current_conditions",
-        "weather_forecast_summary", "modis_ndvi_latest",
-        "modis_lst_first_valid", "modis_area_summary",
-        "modis_date_codes", "modis_request_windows",
-        "event_priority_routing", "weather_risk_streaks",
-        "request_cache_dedup", "modis_products_available",
-        "requests_web_mercator", "weather_forecast_moving_avg",
-        "weather_metrics_unpivot", "landfire_center_classification",
-        "landfire_area_summary", "landfire_combined_risk",
-        "elevation_grid_stats", "elevation_center_pixel",
-        "landfire_viz_arrays", "landfire_interpreted_products",
-        "collect_aggregated", "collect_quality_summary",
-        "collect_event_id_coordination", "source_health_status",
-        "streaming_windowed_event_counts", "streaming_priority_routing",
-        "streaming_cache_dedup", "streaming_enriched_events",
-        "streaming_stateful_event_totals", "dedup_exact",
-        "dedup_minhash_lsh",
-        # --- stamped by the round-4 driver window (CORRECTNESS_r04) ---
-        "text_repetition_profile", "decontaminate_eval_overlap",
-        "text_heavy_hitters",
-        # corpus_pack_sequences / corpus_temperature_weights /
-        # corpus_mixture_summary deliberately NOT stamped: r9
-        # re-denominated them in BPE tokens (extensions/bpe.py), so
-        # the window must re-sample the queries the stamps actually
-        # describe
-        "text_unigram_logprob",
-        "corpus_chunk_windows", "corpus_resample_execute",
-        "corpus_split_assignment", "corpus_dedup_keep",
-        "dedup_clusters", "dedup_ngram_jaccard",
-        # dedup_simhash_pairs / multimodal_features deliberately NOT
-        # stamped: their r4 rows were no_oracle rows-only; r5 gave both
-        # FULL DuckDB oracles, so the r5 window should record the
-        # upgraded evidence
-        "dedup_embedding_cosine",
-        "dedup_crossmodal_agreement", "similarity_topk_exact_baseline",
-        "similarity_topk_lsh",
-        # similarity_topk deliberately NOT stamped: its r4 stamp
-        # attested the sign-bucket implementation, and r5 redefined it
-        # to the hyperplane route — the r5 window must re-sample the
-        # query the stamp actually describes (review finding)
-        "similarity_topk_hyperplane", "text_quality_profile",
-        "text_token_stats",
-        "corpus_stratified_sample", "text_rolling_fingerprint",
-        "multimodal_metadata",
-        "multimodal_base64_sink", "multimodal_nested_sanitize",
-        "text_langid_accuracy", "similarity_topk_ivf",
-        "similarity_knn_label_agreement", "similarity_recall_at_k",
-        "multimodal_frame_sample",
-        "text_pii_redaction", "corpus_quality_weighted_sample",
-        "embedding_quantize_int8", "similarity_ivf_kmeans",
-        "embedding_pq_reconstruction", "similarity_topk_pq",
-        "documents_upsert_merge", "events_incremental_agg_refresh",
-        "customer_scd2_history", "streaming_scd2_refresh",
-        "streaming_incremental_agg_refresh", "collect_json_sink",
-        "streaming_session_windows", "events_interval_attribution",
-        "events_gap_fill_hourly", "events_anomaly_zscore",
-        # --- stamped by the round-5 driver window (CORRECTNESS_r05) ---
-        "corpus_membership_dedup", "decontaminate_ngram_sweep",
-        "dedup_simhash_pairs", "events_incremental_histogram",
-        "events_percentiles_from_histogram", "multimodal_features",
-        "similarity_topk", "similarity_topk_ivf_trained",
-        "similarity_topk_ivfpq", "streaming_sliding_window_counts",
-        "streaming_stream_stream_join",
-        # --- stamped by the round-6 driver window (CORRECTNESS_r06) ---
-        "streaming_stream_stream_left_join",
-        # --- stamped by the round-7 driver window (CORRECTNESS_r07,
-        # 50/50 green incl. streaming_stateful_session_expiry under its
-        # r7 watermark-gated session-window finality definition) ---
-        "dedup_cluster_quality_keep", "dedup_lsh_verified_pairs",
-        "dedup_substring_spans", "decontaminate_execute",
-        "corpus_shard_balance", "embedding_label_outliers",
-        "embedding_centroid_confusion", "similarity_mmr_diverse_topk",
-        "streaming_cms_sketch_refresh",
-        "orders_join_view_incremental_refresh", "orders_snapshot_diff",
-        "streaming_join_view_refresh", "streaming_backlog_refresh",
-        "streaming_stream_stream_semi_join",
-        "streaming_stream_stream_full_outer_join",
-        "streaming_stateful_session_expiry", "shipping_priority_topk",
-        "returned_items_top_customers", "customer_order_distribution",
-        "promo_revenue_share", "large_volume_orders",
-        "disjunctive_brand_revenue", "sole_failed_supplier_lines",
-        "idle_rich_customers", "nation_pair_volume",
-        "market_share_by_year", "product_profit_by_nation",
-        "orders_cube_status_priority", "customer_order_navigation",
-        "priority_distinct_profile", "events_funnel_conversion",
-        "events_weekly_cohort_retention", "revenue_grouping_sets",
-        "events_ohlc_6h", "monthly_revenue_growth",
-        "lineitem_stat_aggregates", "orders_column_profile",
-        "events_error_bursts", "nation_revenue_share",
-        "events_time_weighted_value", "events_kmv_distinct_estimate",
-        "events_cumulative_distinct_users", "market_basket_part_pairs",
-        "events_rolling_7d_active_users", "events_transition_matrix",
-        "orders_mad_outliers", "events_ewma_daily",
-        "events_cms_user_counts", "events_top_trigram_paths",
-        "lineitem_winsorized_stats",
-        # --- stamped by the round-8 driver window (CORRECTNESS_r08,
-        # 50/50 green; names already present above were re-stamps) ---
-        "cheapest_supplier_per_part", "corpus_boilerplate_scrub",
-        "corpus_source_divergence", "customer_ltv_cohort_curve",
-        "customer_name_edit1_pairs", "customer_revenue_concentration",
-        "customer_rfm_segments", "dedup_canonical_text",
-        "dedup_delta_vs_corpus", "discount_revenue_opportunity",
-        "events_daily_value_percentiles", "events_hll_distinct_by_type",
-        "events_multitouch_attribution", "events_new_vs_returning_weekly",
-        "events_rapid_repeat_pairs", "events_seasonality_profile",
-        "events_user_lifecycle_weekly", "excess_shipping_suppliers",
-        "join_key_skew_profile", "late_shipment_priority_counts",
-        "lineitem_partition_fingerprints",
-        # multimodal_phash_near_dups deliberately NOT stamped: its r8
-        # stamp attested the byte-block stand-in hasher; r9 replaced
-        # the kernel with the real integer-DCT pHash, so the window
-        # must re-sample the query the stamp actually describes
-        "orders_backlog_over_time", "orders_benford_digit_profile",
-        "orders_pit_prior_features", "orders_ship_latency_histogram",
-        "part_pagerank_copurchase", "part_substitution_candidates",
-        "part_supplier_concentration", "part_triangle_count_sampled",
-        "part_triangle_participation", "referential_integrity_audit",
-        "similarity_topk_ivfpq_served",
-        "streaming_dedup_index_refresh", "streaming_hll_sketch_refresh",
-        "supplier_variety_by_part_attrs", "text_bm25_search",
-        "text_phrase_search", "text_pmi_collocations",
-        "text_tfidf_top_terms", "text_vocab_coverage",
-        "top_revenue_supplier", "top_value_partkeys",
-        "user_deletion_impact_audit",
-        # --- stamped by the round-9 driver window (CORRECTNESS_r09,
-        # 50/50 green; the 9 re-stamps — corpus_pack_sequences,
-        # corpus_temperature_weights, corpus_mixture_summary,
-        # multimodal_phash_near_dups, corpus_token_budget etc. — were
-        # already listed above or are first-time stamps below) ---
-        # corpus_dedup_survivorship_funnel deliberately NOT stamped:
-        # r10 inserted the paragraph_dedup stage + boilerplate plant
-        # class, so the window must re-sample the 6-stage definition
-        "corpus_mixture_summary",
-        "corpus_pack_sequences", "corpus_temperature_weights",
-        "corpus_token_budget", "customer_balance_deciles",
-        "dedup_bcubed_eval", "dedup_semantic_semdedup",
-        "embedding_exact_dup_vectors",
-        # events_ab_test_zstat deliberately NOT stamped: r10 added the
-        # degenerate-arm guard + `degenerate` column (ADVICE r9), so
-        # the window must re-sample the schema the stamp describes
-        "events_cusum_changepoint", "events_dau_wau_stickiness",
-        "events_kmv_set_ops", "events_mann_kendall_trend",
-        "events_user_value_gini", "ivf_drift_retrain_verdict",
-        "lineitem_dpp_month_revenue", "lineitem_return_rate_by_brand",
-        "market_basket_lift_topk", "multimodal_phash_near_dups",
-        "nation_parttype_entropy", "nation_ship_latency_p90",
-        "nation_supplier_hhi", "nation_trade_balance",
-        "orders_reorder_interval_stats", "orders_ship_survival_km",
-        "part_copurchase_reach_3hop", "part_kcore_membership",
-        "part_ppr_recommendations", "part_price_size_skyline",
-        "requests_spatial_neighbor_pairs", "requests_user_trajectory",
-        "streaming_cusum_refresh", "streaming_hhi_refresh",
-        "streaming_ivf_drift_refresh", "streaming_mann_kendall_refresh",
-        "streaming_skyline_refresh", "streaming_token_budget_refresh",
-        "text_heaps_fit", "text_sparse_cosine_pairs",
-        "text_zipf_fit",
-        # --- stamped by the round-10 driver window (CORRECTNESS_r10):
-        # all 50 rows green; 15 of the 16 first-time stamps below (the
-        # other 34 were rotation re-stamps already listed above;
-        # part_price_elasticity is deliberately withheld — see its
-        # note) ---
-        "bpe_train_merges", "corpus_dedup_survivorship_funnel",
-        "customer_pareto_8020", "dedup_paragraph_exact",
-        "dedup_semantic_bcubed", "embedding_power_iteration_pc1",
-        "events_ab_test_zstat", "events_daily_fano_burstiness",
-        "events_holt_trend_forecast", "events_skewed_tenant_profile",
-        "lineitem_priority_sample_estimate",
-        "promo_did_uplift", "requests_density_hotspots",
-        "streaming_holt_refresh", "streaming_paragraph_dedup_refresh",
-        # --- stamped by the round-11 driver window (CORRECTNESS_r11):
-        # all 50 rows green; the 18 first-time stamps below include
-        # the three previously-withheld redefinitions, each re-sampled
-        # and re-stamped under its current definition:
-        # similarity_topk_ivf_served (K=floor(sqrt(n)) contract),
-        # part_price_elasticity (half-up quantization),
-        # corpus_curation_verdict (ml_low_quality gate) ---
-        "corpus_curation_verdict", "corpus_quality_agreement",
-        "corpus_shuffle_shards", "customer_rfm_threshold_matrix",
-        "documents_lang_confusion", "events_daily_mad_anomalies",
-        "events_hourly_peak_profile", "events_interarrival_profile",
-        "events_markov_transitions", "lineitem_discount_response",
-        "orders_monthly_seasonality", "part_brand_share_shift",
-        "part_price_elasticity", "similarity_topk_ivf_served",
-        "streaming_quality_score_refresh", "text_ngram_novelty",
-        "text_quality_classifier_score", "text_quality_classifier_train",
-    }
-)
-
-
 def load_all() -> None:
-    """Import every plan module so registrations run, then rotate the
-    never-driver-stamped queries to the front (see DRIVER_STAMPED)."""
+    """Import every plan module so registrations run."""
     # Imports are side-effecting registrations; keep the list explicit
     # so a broken module fails loudly, not silently missing queries.
     import env_data_pipeline_spark.plans.llmops  # noqa: F401
@@ -284,13 +69,3 @@ def load_all() -> None:
     import env_data_pipeline_spark.plans.entityres  # noqa: F401
     import env_data_pipeline_spark.plans.layouts  # noqa: F401
     import env_data_pipeline_spark.plans.corpusfilters  # noqa: F401
-
-    ordered = [n for n in QUERIES if n not in DRIVER_STAMPED] + [
-        n for n in QUERIES if n in DRIVER_STAMPED
-    ]
-    for mapping in (QUERIES, ORACLES):
-        snapshot = dict(mapping)
-        mapping.clear()
-        mapping.update(
-            {n: snapshot[n] for n in ordered if n in snapshot}
-        )

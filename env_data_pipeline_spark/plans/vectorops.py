@@ -29,6 +29,7 @@ from env_data_pipeline_spark.plans.registry import (
     BENCH_TRAINING,
     query,
 )
+from env_data_pipeline_spark.sources.fixtures import snapshot
 
 _DIM = 64  # embeddings.embedding is FLOAT[64] (TESTDATA.md)
 
@@ -811,32 +812,6 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _artifact_path(sf_dir: str, name: str, params: str = "") -> str:
-    """Embeddings-keyed wrapper over the shared artifact cache
-    (plans/artifacts.py — quality-classifier weights share the same
-    machinery keyed on documents)."""
-    from env_data_pipeline_spark.plans.artifacts import artifact_path
-
-    return artifact_path(sf_dir, "embeddings", name, params)
-
-
-def _persisted_artifact(spark, sf_dir, name, build, params="", partition_by=None):
-    """Embeddings-keyed wrapper over plans/artifacts.py::
-    persisted_artifact — see that module for the cache-key, race, and
-    partition_by contracts."""
-    from env_data_pipeline_spark.plans.artifacts import persisted_artifact
-
-    return persisted_artifact(
-        spark,
-        sf_dir,
-        "embeddings",
-        name,
-        build,
-        params=params,
-        partition_by=partition_by,
-    )
-
-
 def _pts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -846,7 +821,7 @@ def _pts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # training-parameter strings in the artifact cache key: a change to
 # any hyperparameter (or to the training code — bump the version tag)
-# must retrain rather than serve a stale /tmp index (review finding)
+# must retrain rather than serve a stale index (review finding)
 IVF_ARTIFACT_PARAMS = f"k={_K},iters={_ITERS},step={_INIT_STEP},q={_QGRID},v1"
 PQ_ARTIFACT_PARAMS = f"m={_PQ_M},d={_PQ_D},k={_PQ_K},step={_PQ_STEP},v1"
 
@@ -863,11 +838,9 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("vec_id") / _INIT_STEP).cast("int").alias("cluster_id"),
             F.col("v").alias("c"),
         )
-        return X.kmeans_train(pts, init, iters=_ITERS, quant=float(_QGRID))
+        return X.kmeans_train(pts, init, iters=_ITERS, quant=float(_QGRID)).coalesce(1)
 
-    return _persisted_artifact(
-        spark, sf_dir, "ivf_centroids", build, params=IVF_ARTIFACT_PARAMS
-    )
+    return snapshot(spark, sf_dir, "ivf_centroids", IVF_ARTIFACT_PARAMS, build)
 
 
 def _pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -882,11 +855,9 @@ def _pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).select((F.col("vec_id") / _PQ_STEP).cast("int").alias("code"), "v"),
             _PQ_M,
             _PQ_D,
-        ).select("m", "code", F.col("sv").alias("cw"))
+        ).select("m", "code", F.col("sv").alias("cw")).coalesce(1)
 
-    return _persisted_artifact(
-        spark, sf_dir, "pq_codebook", build, params=PQ_ARTIFACT_PARAMS
-    )
+    return snapshot(spark, sf_dir, "pq_codebook", PQ_ARTIFACT_PARAMS, build)
 
 
 def _ivfpq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -915,15 +886,15 @@ def _ivfpq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
             _PQ_M,
             _PQ_D,
             float(_QGRID),
-        ).select("vec_id", "cell", "m", "code")
+        ).select("vec_id", "cell", "m", "code").repartition("cell")
 
-    return _persisted_artifact(
+    return snapshot(
         spark,
         sf_dir,
         "ivfpq_codes",
+        f"{IVF_ARTIFACT_PARAMS};{PQ_ARTIFACT_PARAMS}",
         build,
-        params=f"{IVF_ARTIFACT_PARAMS};{PQ_ARTIFACT_PARAMS}",
-        partition_by=["cell"],
+        partition_by=("cell",),
     )
 
 
@@ -948,7 +919,7 @@ def _ivf_scale_k(n: int) -> int:
     so "every n//K-th id" would collapse to the base ids) and
     scale-safe (a TakeOrderedAndProject top-K, never a global
     window). Retraining happens per corpus tier through the
-    persisted-artifact cache — the params string carries k, so a
+    snapshot store — the params string carries k, so a
     grown corpus maps to a new cache slot and never serves the
     smaller tier's index. floor(sqrt(double)) matches Python
     math.sqrt exactly (IEEE-correctly-rounded sqrt in both engines;
@@ -1053,14 +1024,10 @@ def _ivf_scaled_centroids(
             (F.col("rk") - 1).cast("int").alias("cluster_id"),
             F.col("v").alias("c"),
         )
-        return X.kmeans_train(pts, init, iters=_ITERS, quant=float(_QGRID))
+        return X.kmeans_train(pts, init, iters=_ITERS, quant=float(_QGRID)).coalesce(1)
 
-    return _persisted_artifact(
-        spark,
-        sf_dir,
-        "ivf_centroids_scaled",
-        build,
-        params=_ivf_scaled_params_str(k),
+    return snapshot(
+        spark, sf_dir, "ivf_centroids_scaled", _ivf_scaled_params_str(k), build
     )
 
 
@@ -1076,15 +1043,15 @@ def _ivf_invlists(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         cells = X.coarse_assign(
             X.coarse_scores(_pts(spark, sf_dir), cent, float(_QGRID))
         )
-        return cells.select("vec_id", "v", "cell")
+        return cells.select("vec_id", "v", "cell").repartition("cell")
 
-    return _persisted_artifact(
+    return snapshot(
         spark,
         sf_dir,
         "ivf_invlists",
+        _ivf_scaled_params_str(k),
         build,
-        params=_ivf_scaled_params_str(k),
-        partition_by=["cell"],
+        partition_by=("cell",),
     )
 
 

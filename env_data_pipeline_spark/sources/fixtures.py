@@ -23,12 +23,16 @@ into /root/reference).
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import shutil
+import time
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from env_data_pipeline_spark.catalog import register_views
+from env_data_pipeline_spark.catalog import register_views, table
 from env_data_pipeline_spark.sources.sinks import write_dataset
 
 # ---------------------------------------------------------------------------
@@ -566,22 +570,37 @@ FIXTURES: dict[str, dict[str, str]] = {
 }
 
 
-# Fixture derivations model INGESTION (SURVEY.md §2.1: network fetch ->
-# snapshot table), so they are materialized to Parquet once per
-# (sf_dir, SQL text) and every query sees a real columnar scan with
-# stats/pushdown — not a generator re-executed per action. The cache
-# key includes a hash of the derivation SQL, so editing a fixture
-# invalidates its snapshot automatically.
+# The snapshot store. Every derived dataset the engine reads back is
+# written once to Parquet and then served as a plain columnar scan with
+# stats/pushdown: the fixture derivations (ingestion, SURVEY.md §2.1:
+# network fetch -> snapshot table) and the trained index/model artifacts
+# (IVF centroids / inverted lists / PQ codebooks in plans/vectorops.py,
+# quality-classifier weights in plans/qualityclf.py). One key, one
+# atomic publish, one reader:
+#
+# - key: md5 of the base tables' size+mtime signature, the snapshot
+#   name and the caller's key text (a fixture's layout tag + SQL, an
+#   artifact's training-parameter string), so regenerated source data,
+#   an edited derivation or a changed hyperparameter maps to a new slot
+#   and a stale snapshot can never serve;
+# - publish: build into ``<path>.tmp-<pid>``, store the written files'
+#   schema as ``_schema.json`` inside it (Spark's file listing skips
+#   ``_``-prefixed names), then one ``os.rename``; a lost race discards
+#   its own equivalent copy;
+# - read: with the stored schema, so opening a snapshot runs no
+#   footer-inference Spark job.
 _CACHE_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
     ".fixtures",
 )
+_SCHEMA_FILE = "_schema.json"
 
 
-# snapshot layout tag, part of the snapshot key: snapshots written under
-# another layout are rebuilt. The core count is not in the key, since a
-# snapshot's contents do not depend on how many files hold them.
-_SNAPSHOT_LAYOUT = "range-event_id"
+# fixture layout tag, part of a fixture's key text: snapshots written
+# under another layout (or without ``_schema.json``) are rebuilt. The
+# core count is not in the key, since a snapshot's contents do not
+# depend on how many files hold them.
+_SNAPSHOT_LAYOUT = "range-event_id-schema"
 # stale other-keyed snapshots younger than this survive cleanup — a
 # concurrent session from another checkout may still be reading them
 _STALE_SNAPSHOT_SECONDS = 6 * 3600
@@ -601,7 +620,7 @@ def _source_signature(sf_dir: str) -> str:
 
     The driver regenerates /root/testdata between rounds AT THE SAME
     PATH; a cache key that ignored the source would keep serving
-    fixtures derived from the previous vintage — silently wrong
+    snapshots derived from the previous vintage — silently wrong
     against oracles computed on the fresh files. (The round-2 ts-type
     change was the loud variant of this failure; a value-only refresh
     would be the quiet one.)"""
@@ -613,18 +632,85 @@ def _source_signature(sf_dir: str) -> str:
     return ";".join(sig)
 
 
-def _snapshot_path(sf_dir: str, name: str) -> str:
+def _fixture_key(name: str) -> str:
     part = ",".join(_SNAPSHOT_PARTITION.get(name, ()))
-    key = hashlib.md5(
-        f"{_SNAPSHOT_LAYOUT}|{part}|{_source_signature(sf_dir)}|"
-        f"{FIXTURES[name]['spark']}".encode()
+    return f"{_SNAPSHOT_LAYOUT}|{part}|{FIXTURES[name]['spark']}"
+
+
+def _snapshot_path(sf_dir: str, name: str, key: str | None = None) -> str:
+    """Where snapshot ``name`` keyed on ``key`` lives (default: the
+    fixture's own key text)."""
+    if key is None:
+        key = _fixture_key(name)
+    digest = hashlib.md5(
+        f"{_source_signature(sf_dir)}|{name}|{key}".encode()
     ).hexdigest()[:10]
     # tag includes a hash of the ABSOLUTE sf_dir: two checkouts whose
     # sf_dirs share a basename must not share (and stale-clean) one
     # snapshot directory
     abs_tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:6]
     sf_tag = (os.path.basename(sf_dir.rstrip("/")) or "sf") + "-" + abs_tag
-    return os.path.join(_CACHE_ROOT, sf_tag, f"{name}-{key}.parquet")
+    return os.path.join(_CACHE_ROOT, sf_tag, f"{name}-{digest}.parquet")
+
+
+def _reap_stale(path: str, name: str) -> None:
+    """Drop other-keyed snapshots of ``name`` beside ``path``. Runs only
+    AFTER ``path`` is live, so a failed build never deletes the previous
+    vintage first. AGE-GATED: a concurrently running session from
+    another checkout (same sf_dir, different key) may still read a fresh
+    other-keyed snapshot; only snapshots older than the horizon go."""
+    root = os.path.dirname(path)
+    horizon = time.time() - _STALE_SNAPSHOT_SECONDS
+    for old in os.listdir(root):
+        old_path = os.path.join(root, old)
+        if (
+            old_path == path
+            or not old.endswith(".parquet")
+            or old.rsplit("-", 1)[0] != name
+        ):
+            continue
+        try:
+            if os.stat(old_path).st_mtime > horizon:
+                continue
+        except OSError:
+            continue
+        shutil.rmtree(old_path, ignore_errors=True)
+
+
+def snapshot(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    key: str,
+    build: Callable[[], DataFrame],
+    partition_by: Sequence[str] = (),
+) -> DataFrame:
+    """The snapshot ``name`` for this sf_dir and ``key``, built on first
+    use. ``build`` returns the DataFrame to persist; its partitioning is
+    the file layout (one file per task, hive directories on
+    ``partition_by``). A failed build removes its tmp directory and
+    re-raises."""
+    path = _snapshot_path(sf_dir, name, key)
+    if not os.path.exists(path):
+        tmp = f"{path}.tmp-{os.getpid()}"
+        try:
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            write_dataset(build(), tmp, partition_by=partition_by)
+            # the schema as a reader infers it from the written files
+            # (nullability, partition columns last) — inferred once, here
+            with open(os.path.join(tmp, _SCHEMA_FILE), "w") as fh:
+                fh.write(spark.read.parquet(tmp).schema.json())
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        try:
+            os.rename(tmp, path)
+        except OSError:  # lost a concurrent race; ours is equivalent
+            shutil.rmtree(tmp, ignore_errors=True)
+        _reap_stale(path, name)
+    with open(os.path.join(path, _SCHEMA_FILE)) as fh:
+        schema = StructType.fromJson(json.load(fh))
+    return spark.read.schema(schema).parquet(path)
 
 
 # (application id, fixture) -> sf_dir currently backing the view;
@@ -648,14 +734,30 @@ def invalidate_fixture(spark: SparkSession, name: str) -> None:
     _REGISTERED.pop((_session_key(spark), name), None)
 
 
+def _generate(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One fixture's derivation, laid out for its snapshot.
+
+    Partition the GENERATION, not the output: the events input is tiny
+    (1-2 parquet files -> 1-2 tasks), so range-partition it into one
+    slice per core BEFORE the cross-join derivations fan out (57M rows
+    for landfire_pixels at sf0.1) — a 100k-row shuffle instead of a
+    57M-row one. The write keeps that layout: one file per core in each
+    hive partition (more only past write_dataset's per-file row cap),
+    each holding one contiguous event_id range. request_id is the
+    zero-padded event_id, so a point filter on it skips every other
+    file's row groups by their min/max stats."""
+    table(spark, sf_dir, "events").repartitionByRange(
+        spark.sparkContext.defaultParallelism, "event_id"
+    ).createOrReplaceTempView("_events_gen")
+    return spark.sql(FIXTURES[name]["spark"].replace("FROM events e", "FROM _events_gen e"))
+
+
 def ensure_fixtures(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None) -> None:
     """Register base views + fixture tables on the Spark side.
 
-    Each fixture is snapshotted to Parquet on first use (atomic
-    directory rename so concurrent sessions can't observe a partial
-    write); the registered view is then a plain Parquet scan. Falls
-    back to a lazy derived view if the snapshot directory is not
-    writable."""
+    Each fixture is a snapshot in the store (see ``snapshot``); the
+    registered view is then a plain Parquet scan. Falls back to a lazy
+    derived view if the snapshot cannot be written."""
     sid = _session_key(spark)
     wanted = [
         n
@@ -666,71 +768,19 @@ def ensure_fixtures(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | N
         return
     register_views(spark, sf_dir)
     for name in wanted:
-        path = _snapshot_path(sf_dir, name)
-        if not os.path.exists(path):
-            tmp = f"{path}.tmp-{os.getpid()}"
-            try:
-                os.makedirs(os.path.dirname(path), exist_ok=True)
-                # Partition the GENERATION, not the output: the events
-                # input is tiny (1-2 parquet files -> 1-2 tasks), so
-                # range-partition it into one slice per core BEFORE the
-                # cross-join derivations fan out (57M rows for
-                # landfire_pixels at sf0.1) — a 100k-row shuffle instead
-                # of a 57M-row one. The write keeps that layout: one
-                # file per core in each hive partition (more only past
-                # write_dataset's per-file row cap), each holding one
-                # contiguous event_id range. request_id is the
-                # zero-padded event_id, so a point filter on it skips
-                # every other file's row groups by their min/max stats.
-                from env_data_pipeline_spark.catalog import table as _table
-
-                _table(spark, sf_dir, "events").repartitionByRange(
-                    spark.sparkContext.defaultParallelism, "event_id"
-                ).createOrReplaceTempView("_events_gen")
-                sql = FIXTURES[name]["spark"].replace("FROM events e", "FROM _events_gen e")
-                write_dataset(
-                    spark.sql(sql), tmp, partition_by=_SNAPSHOT_PARTITION.get(name, ())
-                )
-                try:
-                    os.rename(tmp, path)
-                except OSError:  # lost a concurrent race; ours is equivalent
-                    shutil.rmtree(tmp, ignore_errors=True)
-                # AFTER the new snapshot is live: drop snapshots keyed
-                # to older SQL/source vintages (unreachable once the
-                # key moved on); a failed generation must never have
-                # deleted the previous vintage first. AGE-GATED: a
-                # concurrently running session from another checkout
-                # (same sf_dir, different fixture SQL -> different
-                # key) may still hold temp views over a fresh
-                # other-keyed snapshot; only reap snapshots old
-                # enough that no live session can be reading them.
-                import time
-
-                horizon = time.time() - _STALE_SNAPSHOT_SECONDS
-                for old in os.listdir(os.path.dirname(path)):
-                    old_path = os.path.join(os.path.dirname(path), old)
-                    if (
-                        old.startswith(f"{name}-")
-                        and old.endswith(".parquet")
-                        and old != os.path.basename(path)
-                    ):
-                        try:
-                            if os.stat(old_path).st_mtime > horizon:
-                                continue
-                        except OSError:
-                            continue
-                        shutil.rmtree(old_path, ignore_errors=True)
-            except Exception:
-                # a failed write leaves its partial tmp directory, which
-                # the stale-snapshot reaper (names ending .parquet)
-                # never matches
-                shutil.rmtree(tmp, ignore_errors=True)
-                spark.sql(
-                    f"CREATE OR REPLACE TEMPORARY VIEW {name} AS {FIXTURES[name]['spark']}"
-                )
-                _REGISTERED[(sid, name)] = sf_dir
-                continue
-        spark.read.parquet(path).createOrReplaceTempView(name)
+        try:
+            snapshot(
+                spark,
+                sf_dir,
+                name,
+                _fixture_key(name),
+                lambda: _generate(spark, sf_dir, name),
+                partition_by=_SNAPSHOT_PARTITION.get(name, ()),
+            ).createOrReplaceTempView(name)
+        except Exception:
+            spark.sql(
+                f"CREATE OR REPLACE TEMPORARY VIEW {name} AS {FIXTURES[name]['spark']}"
+            )
         _REGISTERED[(sid, name)] = sf_dir
 
 

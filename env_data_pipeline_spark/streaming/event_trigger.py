@@ -32,33 +32,20 @@ def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source replay of events with the ts vintage detected from
-    the on-disk parquet (see catalog.events_ts_vintage): nanos-era
-    files are declared long and converted, micros-era files are read
-    as TIMESTAMP_NTZ and cast — declaring the wrong one would not
-    error, it would silently build 1970-era timestamps."""
-    from env_data_pipeline_spark.catalog import events_ts_vintage
+    the on-disk parquet (catalog.read_events): declaring the wrong one
+    would not error, it would silently build 1970-era timestamps."""
+    from env_data_pipeline_spark.catalog import read_events
 
-    vintage = events_ts_vintage(spark, sf_dir)
-    if vintage == "bigint":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        schema = _events_stream_schema(T.LongType())
-    elif vintage == "timestamp_ntz":
-        schema = _events_stream_schema(T.TimestampNTZType())
-    else:
-        schema = _events_stream_schema(T.TimestampType())
     # the file stream source requires a directory: load sf_dir and
     # glob-filter down to the events file
-    raw = (
-        spark.readStream.schema(schema)
+    return read_events(
+        spark,
+        sf_dir,
+        lambda ts_type: spark.readStream.schema(_events_stream_schema(ts_type))
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
+        .load(sf_dir),
     )
-    if vintage == "bigint":
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if vintage == "timestamp_ntz":
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
 
 
 def _drain(spark: SparkSession, df: DataFrame, name: str, mode: str) -> DataFrame:

@@ -61,8 +61,8 @@ def test_plan_normaliser_drops_session_counters_and_hash_dirs():
         "Output [2]: [doc_id#1234L, text#56]\n"
         "Arguments: [a#7L], MapPartitionsRDD[17091] at localCheckpoint, [plan_id=386700]\n"
         "lambdafunction((lambda x_1844#9 * lambda y_1845#10), lambda x_1844#9)\n"
-        "Location: InMemoryFileIndex [file:/tmp/edps_index_artifacts/"
-        "0de822772d6de3b8/ivf_centroids]\n"
+        "Location: InMemoryFileIndex [file:/srv/app/.fixtures/"
+        "sf0.1-ddbe14/ivf_invlists-0de822772d.parquet/cell=3]\n"
         "Location: InMemoryFileIndex [file:/srv/app/.fixtures/"
         "sf0.1-ddbe14/landfire_grids-7c7e2d2029.parquet]\n"
         "Location: InMemoryFileIndex [file:/data/sf0.1/documents.parquet]\n"
@@ -72,8 +72,8 @@ def test_plan_normaliser_drops_session_counters_and_hash_dirs():
         "Output [2]: [doc_id#NL, text#N]\n"
         "Arguments: [a#NL], MapPartitionsRDD[N] at localCheckpoint, [plan_id=N]\n"
         "lambdafunction((lambda x_N#N * lambda y_N#N), lambda x_N#N)\n"
-        "Location: InMemoryFileIndex [file:/tmp/edps_index_artifacts/"
-        "<hash>/ivf_centroids]\n"
+        "Location: InMemoryFileIndex [file:/srv/app/.fixtures/"
+        "sf0.1-<hash>/ivf_invlists-<hash>.parquet/cell=3]\n"
         "Location: InMemoryFileIndex [file:/srv/app/.fixtures/"
         "sf0.1-<hash>/landfire_grids-<hash>.parquet]\n"
         "Location: InMemoryFileIndex [file:/data/sf0.1/documents.parquet]\n"

@@ -1,10 +1,14 @@
 """Physical layout of the fixture snapshots: one file per core in each
 hive partition, each file one contiguous ``request_id`` range, so a
-point lookup reads one file's row groups per snapshot."""
+point lookup reads one file's row groups per snapshot. Also the
+snapshot store's contract for every caller: a warm read runs no Spark
+job, a failed build leaves no tmp directory, stale other-keyed
+snapshots are reaped."""
 
 from __future__ import annotations
 
 import os
+import time
 from collections import defaultdict
 
 import pyarrow.parquet as pq
@@ -12,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from env_data_pipeline_spark.observe import observe
+from env_data_pipeline_spark.plans.collect import _WIDE_FIXTURES
 from env_data_pipeline_spark.sources import fixtures
 
 _CLUSTERED = ("requests", "weather_forecast", "landfire_grids")
@@ -91,3 +96,66 @@ def test_failed_snapshot_write_leaves_no_tmp_dir(spark, sf_dir, tmp_path, monkey
     finally:
         fixtures.invalidate_fixture(spark, name)
         spark.catalog.dropTempView(name)
+
+
+def _no_build():
+    raise AssertionError("a warm snapshot read must not build")
+
+
+def test_warm_snapshot_read_runs_no_spark_job(spark, sf_dir):
+    """The stored schema stands in for footer inference, so opening a
+    published snapshot is driver-only work."""
+    fixtures.ensure_fixtures(spark, sf_dir, _WIDE_FIXTURES)
+    for name in _WIDE_FIXTURES:
+        record = observe(
+            spark,
+            lambda: fixtures.snapshot(
+                spark, sf_dir, name, fixtures._fixture_key(name), _no_build
+            ),
+        )
+        assert record["jobs"] == 0, (name, record["jobs"])
+        assert record["value"].schema == spark.table(name).schema, name
+
+
+def test_failed_artifact_build_raises_and_leaves_no_tmp_dir(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """An artifact build that fails inside a task re-raises (there is no
+    lazy fallback for a trained artifact) and removes its partial
+    ``.tmp-<pid>`` directory."""
+    monkeypatch.setattr(fixtures, "_CACHE_ROOT", str(tmp_path))
+    name, key = "_failing_artifact", "v1"
+
+    def build():
+        return spark.range(10).selectExpr(
+            "raise_error(concat('boom ', cast(id AS STRING))) AS x"
+        )
+
+    with pytest.raises(Exception, match="boom"):
+        fixtures.snapshot(spark, sf_dir, name, key, build)
+    path = fixtures._snapshot_path(sf_dir, name, key)
+    assert not os.path.exists(path)
+    assert os.listdir(os.path.dirname(path)) == []
+
+
+def test_stale_other_keyed_artifact_is_reaped(spark, sf_dir, tmp_path, monkeypatch):
+    """Publishing a snapshot drops other-keyed snapshots of the same
+    name older than the horizon, and keeps younger ones and other
+    names' snapshots."""
+    monkeypatch.setattr(fixtures, "_CACHE_ROOT", str(tmp_path))
+
+    def build():
+        return spark.range(3).coalesce(1)
+
+    stale = time.time() - fixtures._STALE_SNAPSHOT_SECONDS - 60
+    paths = {}
+    for name, key in (("_artifact", "v1"), ("_artifact", "v2"), ("_artifact_x", "v1")):
+        fixtures.snapshot(spark, sf_dir, name, key, build)
+        paths[name, key] = fixtures._snapshot_path(sf_dir, name, key)
+    for old in (paths["_artifact", "v1"], paths["_artifact_x", "v1"]):
+        os.utime(old, (stale, stale))
+    fixtures.snapshot(spark, sf_dir, "_artifact", "v3", build)
+    assert not os.path.exists(paths["_artifact", "v1"])
+    assert os.path.exists(paths["_artifact", "v2"])
+    assert os.path.exists(paths["_artifact_x", "v1"])
+    assert os.path.exists(fixtures._snapshot_path(sf_dir, "_artifact", "v3"))

@@ -138,14 +138,14 @@ def test_classifier_auc_floor_on_planted_labels(spark, mixed_docs):
 def test_weights_artifact_is_persisted_and_reused(spark, sf_dir):
     import os
 
-    from env_data_pipeline_spark.plans.artifacts import artifact_path
     from env_data_pipeline_spark.plans.qualityclf import (
         QC_ARTIFACT_PARAMS,
         quality_weights_artifact,
     )
+    from env_data_pipeline_spark.sources.fixtures import _snapshot_path
 
     quality_weights_artifact(spark, sf_dir).collect()
-    d = artifact_path(sf_dir, "documents", "quality_clf_weights", QC_ARTIFACT_PARAMS)
+    d = _snapshot_path(sf_dir, "quality_clf_weights", QC_ARTIFACT_PARAMS)
     assert os.path.exists(d)
     before = os.path.getmtime(d)
     w = quality_weights_artifact(spark, sf_dir)

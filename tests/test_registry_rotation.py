@@ -1,46 +1,12 @@
-"""The driver samples only the FIRST 50 registered queries for
-CORRECTNESS_r{N}; these tests pin the evidence plan: every query that
-has never received a driver-stamped green row must sit inside that
-window, and the rotation must be stable across repeated load_all()
-calls (the driver and the tests both call it)."""
+"""The registry is stable across repeated load_all() calls (the entry
+point and the tests both call it), and its oracles line up with its
+queries."""
 
 from __future__ import annotations
 
 from env_data_pipeline_spark.plans import registry
 
 registry.load_all()
-
-DRIVER_SAMPLE_CAP = 50
-
-# Consciously staged past this round's sample window. After the r8
-# fold of all 50 CORRECTNESS_r07 greens into DRIVER_STAMPED, the 29
-# remaining never-stamped queries all fit inside the 50-slot window,
-# so nothing needs staging. New queries added during r8 beyond the
-# window's free capacity (50 - 29 carryover = 21) must be listed here
-# — a stale (already-stamped) entry fails
-# test_staged_names_are_unstamped_and_registered.
-STAGED_NEXT_ROUND: set[str] = set()
-
-
-def test_never_stamped_queries_inside_driver_window():
-    names = list(registry.QUERIES)
-    unstamped = [n for n in names if n not in registry.DRIVER_STAMPED]
-    assert len(unstamped) <= DRIVER_SAMPLE_CAP + len(STAGED_NEXT_ROUND), (
-        "more never-stamped queries than the driver can sample — "
-        "prune DRIVER_STAMPED or stage the rollout across rounds"
-    )
-    window = set(names[:DRIVER_SAMPLE_CAP])
-    outside = [n for n in unstamped if n not in window]
-    assert set(outside) <= STAGED_NEXT_ROUND, (
-        f"never-driver-stamped queries outside the sample window and "
-        f"not consciously staged: {sorted(set(outside) - STAGED_NEXT_ROUND)}"
-    )
-
-
-def test_staged_names_are_unstamped_and_registered():
-    assert STAGED_NEXT_ROUND <= set(registry.QUERIES)
-    stale = STAGED_NEXT_ROUND & registry.DRIVER_STAMPED
-    assert not stale, f"staged queries already stamped — remove: {stale}"
 
 
 def test_load_all_idempotent_and_consistent():
@@ -51,10 +17,3 @@ def test_load_all_idempotent_and_consistent():
     assert set(registry.ORACLES) <= set(registry.QUERIES)
     oracle_order = [n for n in registry.QUERIES if n in registry.ORACLES]
     assert list(registry.ORACLES) == oracle_order
-
-
-def test_driver_stamped_names_exist():
-    # a typo'd name in DRIVER_STAMPED would silently shrink the
-    # rotated-out set and waste window slots
-    missing = registry.DRIVER_STAMPED - set(registry.QUERIES)
-    assert not missing, f"DRIVER_STAMPED contains unknown queries: {missing}"

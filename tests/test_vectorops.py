@@ -382,19 +382,20 @@ def test_served_artifact_is_persisted_and_reused(spark, sf_dir):
     import os
 
     from env_data_pipeline_spark.plans import vectorops as V
+    from env_data_pipeline_spark.sources.fixtures import _snapshot_path
 
     V.similarity_topk_ivf_served(spark, sf_dir).collect()
     n = V._pts(spark, sf_dir).count()
     params = V._ivf_scaled_params_str(V._ivf_scale_k(n))
-    cd = V._artifact_path(sf_dir, "ivf_centroids_scaled", params)
-    ld = V._artifact_path(sf_dir, "ivf_invlists", params)
+    cd = _snapshot_path(sf_dir, "ivf_centroids_scaled", params)
+    ld = _snapshot_path(sf_dir, "ivf_invlists", params)
     assert os.path.exists(cd) and os.path.exists(ld)
     # the inverted lists are laid out one directory per cell — the
     # physical layout the probe-set join prunes against
     assert any(p.startswith("cell=") for p in os.listdir(ld))
     # a different hyperparameter string must map to a DIFFERENT cache
     # slot — the stale-index hazard the params key exists to prevent
-    assert V._artifact_path(sf_dir, "ivf_centroids_scaled", "k=9,v1") != cd
+    assert _snapshot_path(sf_dir, "ivf_centroids_scaled", "k=9,v1") != cd
     before_c, before_l = os.path.getmtime(cd), os.path.getmtime(ld)
     V.similarity_topk_ivf_served(spark, sf_dir).collect()
     assert os.path.getmtime(cd) == before_c
