@@ -1,10 +1,11 @@
-"""Catalog: load the deterministic test tables and register views.
+"""Catalog: read the deterministic test tables.
 
 The driver-generated tables (TESTDATA.md) are the engine's base
-relations. ``load_tables`` reads them as Parquet scans (columnar,
-pushdown-capable); ``register_views`` exposes them to spark.sql so
-fixture CTEs (fixtures.py) can be shared verbatim with the DuckDB
-oracle.
+relations. ``table`` reads one as a Parquet scan (columnar,
+pushdown-capable). ``register_views`` exposes all of them to spark.sql
+under their DuckDB names; only a fixture snapshot build (fixtures.py)
+needs that, because the fixture SQL is shared verbatim with the DuckDB
+oracle. Plans get fixtures as DataFrames from ``ensure_fixtures``.
 """
 
 from __future__ import annotations
@@ -214,10 +215,6 @@ def table(
     if key_col is not None:
         df = _with_scan_parallelism(spark, df, path, key_col)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -195,10 +195,8 @@ def word_tokens_for(spark, sf_dir: str) -> DataFrame:
     from env_data_pipeline_spark.catalog import table
     from env_data_pipeline_spark.sources.fixtures import ensure_fixtures
 
-    ensure_fixtures(spark, sf_dir, ("bpe_vocab",))
-    return word_tokens(
-        table(spark, sf_dir, "documents"), spark.table("bpe_vocab")
-    )
+    (vocab,) = ensure_fixtures(spark, sf_dir, ("bpe_vocab",))
+    return word_tokens(table(spark, sf_dir, "documents"), vocab)
 
 
 def group_tokens(docs: DataFrame, wordtok: DataFrame, *keys: str) -> DataFrame:

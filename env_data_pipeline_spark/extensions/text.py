@@ -90,10 +90,6 @@ def lang_scores_w(w: Column) -> dict[str, Column]:
     }
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    return lang_scores_w(words(text))
-
-
 def predicted_lang_w(w: Column) -> Column:
     """Argmax of marker-word overlap over an already-split word array,
     ties broken by language code order (deterministic)."""

@@ -39,20 +39,6 @@ _ALL_FIXTURES = (
     "elevation_cells",
 )
 
-# every snapshot the wide record's plan scans, its branches' included,
-# ensured in one call: each call that registers a fixture re-registers
-# the ten base views, one footer-inference job each
-_WIDE_FIXTURES = (
-    "requests",
-    "weather_current",
-    "weather_forecast",
-    "modis_observations",
-    "landfire_grid_meta",
-    "landfire_grids",
-    "landfire_attributes",
-    "elevation_cells",
-)
-
 _ORACLE = f"""
     {duck_with(*_ALL_FIXTURES)},
     valid AS (
@@ -176,9 +162,13 @@ def _wide_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     data, 0.8 when it produced degraded data (missing wind fields /
     no valid NDVI / unclassifiable pixel / majority-nodata DEM),
     0.0 when the source produced nothing for the request."""
-    ensure_fixtures(spark, sf_dir, _WIDE_FIXTURES)
+    requests, current, obs, cells = ensure_fixtures(
+        spark,
+        sf_dir,
+        ("requests", "weather_current", "modis_observations", "elevation_cells"),
+    )
     valid = (
-        V.validate_requests(spark.table("requests"))
+        V.validate_requests(requests)
         .filter(F.col("is_valid"))
         .select("request_id", "event_id", "latitude", "longitude", "buffer_meters", "ts")
     )
@@ -188,7 +178,7 @@ def _wide_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     # weather branch: one scan carrying the degradation flag (the
     # fixture nulls wind fields together — weather_container.py:153's
     # defaulted-zero path) and the observation epoch for P14 latency
-    wc = spark.table("weather_current").select(
+    wc = current.select(
         "request_id",
         "temperature_celsius",
         C.fire_weather_risk(
@@ -206,7 +196,6 @@ def _wide_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle keeps separate ndl/mas CTEs, so parity pins the fusion:
     # requests with modis rows but no NDVI rows keep NULL health (not
     # 'UNKNOWN'), matching the missing-ndl-row left join.
-    obs = spark.table("modis_observations")
     is_nd = (
         (F.col("product") == "MOD13Q1")
         & (F.col("band") == "250m_16_days_NDVI")
@@ -240,8 +229,7 @@ def _wide_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
         "request_id", "fire_risk_landfire", unknown_cls.alias("_lf_unknown")
     )
     dem = (
-        spark.table("elevation_cells")
-        .filter(F.col("elevation") != F.col("nodata"))
+        cells.filter(F.col("elevation") != F.col("nodata"))
         .groupBy("request_id")
         .agg(
             F.round(F.avg("elevation"), 4).alias("mean_elevation_m"),
@@ -950,30 +938,25 @@ def collect_event_id_coordination(spark: SparkSession, sf_dir: str) -> DataFrame
     countDistinct(event_id) per request. The distinct projections
     reduce each source to its request keys BEFORE the union, so the
     shuffle carries one row per (source, request)."""
-    ensure_fixtures(
+    requests, wc, obs, meta, cells = ensure_fixtures(
         spark,
         sf_dir,
         ("requests", "weather_current", "modis_observations",
          "landfire_grid_meta", "elevation_cells"),
     )
     outputs = (
-        spark.table("weather_current").select(F.lit("weather").alias("source"), "request_id")
+        wc.select(F.lit("weather").alias("source"), "request_id")
         .unionByName(
-            spark.table("modis_observations").select(
-                F.lit("modis").alias("source"), "request_id").distinct()
+            obs.select(F.lit("modis").alias("source"), "request_id").distinct()
         )
         .unionByName(
-            spark.table("landfire_grid_meta").select(
-                F.lit("landfire").alias("source"), "request_id").distinct()
+            meta.select(F.lit("landfire").alias("source"), "request_id").distinct()
         )
         .unionByName(
-            spark.table("elevation_cells").select(
-                F.lit("topography").alias("source"), "request_id").distinct()
+            cells.select(F.lit("topography").alias("source"), "request_id").distinct()
         )
     )
-    tagged = outputs.join(
-        spark.table("requests").select("request_id", "event_id"), "request_id"
-    )
+    tagged = outputs.join(requests.select("request_id", "event_id"), "request_id")
     return tagged.groupBy("request_id").agg(
         F.countDistinct("source").alias("n_sources"),
         F.countDistinct("event_id").alias("n_event_ids"),
@@ -1010,14 +993,13 @@ def source_health_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     counterpart in a batch/streaming analytics engine — the engine-side
     notion of "a source is up" is "its table exists and has rows",
     which is exactly what this query reports."""
-    ensure_fixtures(spark, sf_dir, _ALL_FIXTURES)
     dfs = [
-        spark.table(t).agg(
+        df.agg(
             F.lit(t).alias("source_table"),
             F.count("*").alias("row_count"),
             F.when(F.count("*") > 0, "UP").otherwise("DOWN").alias("status"),
         )
-        for t in _HEALTH_TABLES
+        for t, df in zip(_HEALTH_TABLES, ensure_fixtures(spark, sf_dir, _HEALTH_TABLES))
     ]
     out = dfs[0]
     for d in dfs[1:]:

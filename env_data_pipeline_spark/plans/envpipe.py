@@ -41,8 +41,8 @@ def validate_requests(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1-F5 validation family over the requests fixture (SURVEY.md
     §2.3; reference orchestrator.py:89-212). Pure row-local filter
     logic — no shuffle at any scale."""
-    ensure_fixtures(spark, sf_dir, ("requests",))
-    return V.validate_requests(spark.table("requests")).select(
+    (requests,) = ensure_fixtures(spark, sf_dir, ("requests",))
+    return V.validate_requests(requests).select(
         "request_id", "reject_reason", "is_valid"
     )
 
@@ -60,9 +60,9 @@ def validate_requests(spark: SparkSession, sf_dir: str) -> DataFrame:
 def validation_reject_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reject-reason histogram (the engine-side A10-style summary of
     the validation stage)."""
-    ensure_fixtures(spark, sf_dir, ("requests",))
+    (requests,) = ensure_fixtures(spark, sf_dir, ("requests",))
     return (
-        V.validate_requests(spark.table("requests"))
+        V.validate_requests(requests)
         .groupBy(F.coalesce(F.col("reject_reason"), F.lit("VALID")).alias("reason"))
         .agg(F.count("*").alias("n"))
         .orderBy("reason")
@@ -109,8 +109,7 @@ def weather_current_conditions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1 projection/rename + P3 epoch->ISO + fire_weather_risk
     classifier (weather_container.py:146-165, 187-233). Defaulted-zero
     fields via coalesce (P1 note)."""
-    ensure_fixtures(spark, sf_dir, ("weather_current",))
-    wc = spark.table("weather_current")
+    (wc,) = ensure_fixtures(spark, sf_dir, ("weather_current",))
     return wc.select(
         "request_id",
         F.date_format(S.epoch_to_timestamp(F.col("dt")), "yyyy-MM-dd HH:mm:ss").alias(
@@ -164,8 +163,7 @@ def weather_forecast_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     (weather_container.py:167-185, 357-371). One hash agg keyed on
     request_id — the high-risk filter folds into a conditional sum so
     the forecast table is scanned once."""
-    ensure_fixtures(spark, sf_dir, ("weather_forecast",))
-    fc = spark.table("weather_forecast")
+    (fc,) = ensure_fixtures(spark, sf_dir, ("weather_forecast",))
     risk = C.fire_weather_score(
         F.col("temperature_celsius"), F.col("humidity_percent"), F.col("wind_speed_mps")
     )
@@ -235,8 +233,7 @@ def modis_ndvi_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's implicit iteration order made explicit (SURVEY.md
     §7.3.1). Requests whose every observation is invalid keep a row
     with NULL ndvi and UNKNOWN health (modis_container.py:261-262)."""
-    ensure_fixtures(spark, sf_dir, ("modis_observations",))
-    obs = spark.table("modis_observations")
+    (obs,) = ensure_fixtures(spark, sf_dir, ("modis_observations",))
     nd = (
         obs.filter(
             (F.col("product") == "MOD13Q1")
@@ -295,8 +292,7 @@ def modis_lst_first_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2 first-valid-LST: the reference breaks on the FIRST
     plausibility-passing observation in date order
     (modis_container.py:291-301) — note the asymmetry with W1."""
-    ensure_fixtures(spark, sf_dir, ("modis_observations",))
-    obs = spark.table("modis_observations")
+    (obs,) = ensure_fixtures(spark, sf_dir, ("modis_observations",))
     lst = obs.filter(
         (F.col("product") == "MOD11A2")
         & (F.col("band") == "LST_Day_1km")
@@ -335,8 +331,7 @@ def modis_area_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7/A8/A9: observation counts, quality bucket, products list
     (modis_container.py:306-316). products_available is a sorted CSV
     so the hash comparison is order-stable."""
-    ensure_fixtures(spark, sf_dir, ("modis_observations",))
-    obs = spark.table("modis_observations")
+    (obs,) = ensure_fixtures(spark, sf_dir, ("modis_observations",))
     return (
         obs.groupBy("request_id")
         .agg(
@@ -368,8 +363,7 @@ def modis_area_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def modis_date_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P9 AYYYYDDD date-code round-trip (modis_container.py:96-98) —
     the recomputed code must equal the stored one."""
-    ensure_fixtures(spark, sf_dir, ("modis_observations",))
-    obs = spark.table("modis_observations")
+    (obs,) = ensure_fixtures(spark, sf_dir, ("modis_observations",))
     return (
         obs.select("calendar_date", "modis_date")
         .distinct()
@@ -416,8 +410,7 @@ def modis_request_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     (modis_container.py:88-98) — plus the P9 AYYYYDDD codes for both
     window endpoints. Pure column math over one scan of requests;
     every expression folds into the same codegen stage."""
-    ensure_fixtures(spark, sf_dir, ("requests",))
-    r = spark.table("requests")
+    (r,) = ensure_fixtures(spark, sf_dir, ("requests",))
     buf = F.coalesce(F.col("buffer_meters"), F.lit(1000))
     d = S.buffer_degrees(buf)
     days = (
@@ -470,8 +463,8 @@ def event_priority_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O5 priority routing (orchestrator.py:923-935): emergency -> all
     sources / 60 s; created -> all / 120 s; else weather-only / 30 s.
     F6 vocab filters applied first (orchestrator.py:214-234)."""
-    ensure_fixtures(spark, sf_dir, ("requests",))
-    req = spark.table("requests").filter(
+    (requests,) = ensure_fixtures(spark, sf_dir, ("requests",))
+    req = requests.filter(
         F.col("event_type").isin("created", "updated", "location_changed")
         & F.col("priority").isin("low", "normal", "high", "emergency")
     )
@@ -538,14 +531,13 @@ def weather_risk_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     One window + two hash aggs; the window partitions by request_id so
     state per key is the 40-period forecast, constant at any corpus
     size."""
-    ensure_fixtures(spark, sf_dir, ("weather_forecast",))
+    (fc,) = ensure_fixtures(spark, sf_dir, ("weather_forecast",))
     risk = C.fire_weather_score(
         F.col("temperature_celsius"), F.col("humidity_percent"), F.col("wind_speed_mps")
     )
     w = Window.partitionBy("request_id").orderBy("period_index")
     high = (
-        spark.table("weather_forecast")
-        .select("request_id", "period_index", risk.alias("risk_score"))
+        fc.select("request_id", "period_index", risk.alias("risk_score"))
         .filter(F.col("risk_score") >= 5)
         .withColumn("grp", F.col("period_index") - F.row_number().over(w))
     )
@@ -585,10 +577,9 @@ def request_cache_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     representative (min request_id) is the entry that would compute,
     n_requests - 1 are cache hits. One hash agg on the cache key —
     the same dropDuplicates shape at any scale."""
-    ensure_fixtures(spark, sf_dir, ("requests",))
+    (requests,) = ensure_fixtures(spark, sf_dir, ("requests",))
     return (
-        spark.table("requests")
-        .groupBy(
+        requests.groupBy(
             "latitude",
             "longitude",
             F.date_trunc("hour", F.col("ts")).alias("hour_bucket"),
@@ -621,10 +612,9 @@ def modis_products_available(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9: products_available = keys of the per-request product dict
     (modis_container.py:316) — collect_set + sort for determinism,
     serialized comma-joined so the result is hashable downstream."""
-    ensure_fixtures(spark, sf_dir, ("modis_observations",))
+    (obs,) = ensure_fixtures(spark, sf_dir, ("modis_observations",))
     return (
-        spark.table("modis_observations")
-        .groupBy("request_id")
+        obs.groupBy("request_id")
         .agg(
             F.array_join(F.array_sort(F.collect_set("product")), ",").alias(
                 "products_available"
@@ -657,8 +647,8 @@ def requests_web_mercator(spark: SparkSession, sf_dir: str) -> DataFrame:
     (topography_container.py:78-89 uses pyproj; the engine inlines the
     spherical-Mercator formula — radians/log/tan builtins, no UDF).
     Clamped to the Mercator latitude domain."""
-    ensure_fixtures(spark, sf_dir, ("requests",))
-    r = spark.table("requests").filter(
+    (requests,) = ensure_fixtures(spark, sf_dir, ("requests",))
+    r = requests.filter(
         F.col("latitude").between(-85.06, 85.06)
         & F.col("longitude").between(-180.0, 180.0)
     )
@@ -694,13 +684,13 @@ def weather_forecast_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3 smoothing: centered 3-period moving average over the ordered
     forecast — the explicit rowsBetween frame SURVEY §2.6 W3 calls
     for. One sort per request partition; frame state is 3 rows."""
-    ensure_fixtures(spark, sf_dir, ("weather_forecast",))
+    (fc,) = ensure_fixtures(spark, sf_dir, ("weather_forecast",))
     w = (
         Window.partitionBy("request_id")
         .orderBy("period_index")
         .rowsBetween(-1, 1)
     )
-    return spark.table("weather_forecast").select(
+    return fc.select(
         "request_id",
         "period_index",
         F.round("temperature_celsius", 4).alias("temperature_c"),
@@ -735,8 +725,8 @@ def weather_metrics_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     output rows per input); the equivalent UNION-ALL formulation the
     oracle uses would scan the table once per metric. Mixed int/double
     measures are cast to double so the value column is one type."""
-    ensure_fixtures(spark, sf_dir, ("weather_current",))
-    wide = spark.table("weather_current").select(
+    (wc,) = ensure_fixtures(spark, sf_dir, ("weather_current",))
+    wide = wc.select(
         "request_id",
         *[F.col(m).cast("double").alias(m) for m in _UNPIVOT_METRICS],
     )
@@ -821,8 +811,7 @@ def requests_spatial_neighbor_pairs(
     and all distance math is exact BIGINT (no trig, no doubles in
     the ordering). Cell ids shift coordinates non-negative first so
     integer division is floor division on both engines."""
-    ensure_fixtures(spark, sf_dir, ("requests",))
-    req = spark.table("requests")
+    (req,) = ensure_fixtures(spark, sf_dir, ("requests",))
     pts = (
         req.filter(
             F.col("latitude").between(-90, 90)
@@ -957,8 +946,7 @@ def requests_density_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     no join against the raw request stream and no pairwise work. The
     result join (cells x smoothed) is cell-keyed; only cell-grain
     rows ever shuffle."""
-    ensure_fixtures(spark, sf_dir, ("requests",))
-    req = spark.table("requests")
+    (req,) = ensure_fixtures(spark, sf_dir, ("requests",))
     cells = (
         req.filter(
             F.col("latitude").between(-90, 90)
@@ -1068,9 +1056,9 @@ def requests_user_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan."""
     from env_data_pipeline_spark.catalog import table as _table
 
-    ensure_fixtures(spark, sf_dir, ("requests",))
+    (requests,) = ensure_fixtures(spark, sf_dir, ("requests",))
     ev = _table(spark, sf_dir, "events").select("event_id", "user_id")
-    r = spark.table("requests").select(
+    r = requests.select(
         F.expr("CAST(substr(request_id, 5) AS BIGINT)").alias("eid"),
         "ts",
         F.col("latitude").alias("lat"),

@@ -61,8 +61,7 @@ def lineitem_dpp_month_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Money rides the half-up 1e-4 grid (sum exact integers, divide
     once at the end) so the value hash is float-order-proof."""
-    ensure_fixtures(spark, sf_dir, ("lineitem_by_month",))
-    fact = spark.table("lineitem_by_month")
+    (fact,) = ensure_fixtures(spark, sf_dir, ("lineitem_by_month",))
     dim = (
         table(spark, sf_dir, "orders")
         .filter(

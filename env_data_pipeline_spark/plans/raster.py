@@ -75,13 +75,11 @@ def landfire_center_classification(spark: SparkSession, sf_dir: str) -> DataFram
     element_at on the nested array) — the oracle recomputes from the
     long-form table, so the parity check also proves the two layouts
     hold identical pixels."""
-    ensure_fixtures(
+    meta, grids, attrs = ensure_fixtures(
         spark, sf_dir, ("landfire_grid_meta", "landfire_grids", "landfire_attributes")
     )
-    hit = pixel_at_coordinate_grids(
-        spark.table("landfire_grid_meta"), spark.table("landfire_grids")
-    )
-    return classify_pixels(hit, spark.table("landfire_attributes")).select(
+    hit = pixel_at_coordinate_grids(meta, grids)
+    return classify_pixels(hit, attrs).select(
         "request_id", "product", "row", "col", "pixel_value", "interpreted"
     )
 
@@ -128,12 +126,11 @@ def landfire_area_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     classify is broadcast-join; histogram is a two-level agg keyed by
     (grid_id, class) then a per-grid window — both shuffles hash on
     grid_id which is uniformly distributed."""
-    ensure_fixtures(spark, sf_dir, ("landfire_pixels", "landfire_attributes"))
+    px, attrs = ensure_fixtures(
+        spark, sf_dir, ("landfire_pixels", "landfire_attributes")
+    )
     classified = classify_pixels(
-        spark.table("landfire_pixels").filter(
-            F.col("product").isin("vegetation_type", "fuel_model")
-        ),
-        spark.table("landfire_attributes"),
+        px.filter(F.col("product").isin("vegetation_type", "fuel_model")), attrs
     )
     counts = classified.groupBy("grid_id", "request_id", "product", "interpreted").agg(
         F.count("*").alias("n")
@@ -200,13 +197,13 @@ def landfire_combined_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
     theta-style CASE over both columns. Reads the grid-shaped layout
     (point-lookup path); the product filter prunes 7/9 of the
     hive-partitioned snapshot before the scan."""
-    ensure_fixtures(
+    meta, grids, attrs = ensure_fixtures(
         spark, sf_dir, ("landfire_grid_meta", "landfire_grids", "landfire_attributes")
     )
-    hit = pixel_at_coordinate_grids(
-        spark.table("landfire_grid_meta"), spark.table("landfire_grids")
-    ).filter(F.col("product").isin("vegetation_type", "fuel_model"))
-    classified = classify_pixels(hit, spark.table("landfire_attributes"))
+    hit = pixel_at_coordinate_grids(meta, grids).filter(
+        F.col("product").isin("vegetation_type", "fuel_model")
+    )
+    classified = classify_pixels(hit, attrs)
     wide = classified.groupBy("request_id").agg(
         F.max(F.when(F.col("product") == "vegetation_type", F.col("interpreted"))).alias(
             "vegetation_class"
@@ -259,8 +256,7 @@ def elevation_grid_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one scan, one hash agg keyed by grid_id — partial aggregation
     makes this the cheapest possible plan; no window needed."""
-    ensure_fixtures(spark, sf_dir, ("elevation_cells",))
-    cells = spark.table("elevation_cells")
+    (cells,) = ensure_fixtures(spark, sf_dir, ("elevation_cells",))
     valid = cells.filter(F.col("elevation") != F.col("nodata"))
     stats = valid.groupBy("grid_id", "request_id").agg(
         F.round(F.min("elevation"), 4).alias("min_elevation_m"),
@@ -289,8 +285,7 @@ def elevation_center_pixel(spark: SparkSession, sf_dir: str) -> DataFrame:
     DEM grid (tests/test_pipeline.py:152-156 semantics). The (row,col)
     predicate pushes down to the scan — at scale this reads a tiny
     fraction of the pixel table."""
-    ensure_fixtures(spark, sf_dir, ("elevation_cells",))
-    cells = spark.table("elevation_cells")
+    (cells,) = ensure_fixtures(spark, sf_dir, ("elevation_cells",))
     return cells.filter(
         (F.col("row") == 8) & (F.col("col") == 8) & (F.col("elevation") != F.col("nodata"))
     ).select("grid_id", "request_id", F.col("elevation").alias("center_elevation_m"))
@@ -360,8 +355,9 @@ def landfire_viz_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     Row order inside each array is pinned by sort_array over
     (col, value) / (row, array) structs — Spark gives no implicit
     ordering (SURVEY.md §7.3.1)."""
-    ensure_fixtures(spark, sf_dir, ("landfire_pixels", "landfire_attributes"))
-    px = spark.table("landfire_pixels")
+    px, attrs = ensure_fixtures(
+        spark, sf_dir, ("landfire_pixels", "landfire_attributes")
+    )
     rows = px.groupBy("grid_id", "request_id", "product", "row").agg(
         F.transform(
             F.sort_array(F.collect_list(F.struct("col", "pixel_value"))),
@@ -377,7 +373,7 @@ def landfire_viz_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("arrays")
     )
     legends = (
-        classify_pixels(px, spark.table("landfire_attributes"))
+        classify_pixels(px, attrs)
         .select("grid_id", "pixel_value", "interpreted")
         .distinct()
         .withColumn(
@@ -444,13 +440,11 @@ def landfire_interpreted_products(spark: SparkSession, sf_dir: str) -> DataFrame
     the same pairs yields the MapType form at a real sink. Point
     lookups read the grid-shaped layout; the oracle recomputes from
     long form."""
-    ensure_fixtures(
+    meta, grids, attrs = ensure_fixtures(
         spark, sf_dir, ("landfire_grid_meta", "landfire_grids", "landfire_attributes")
     )
-    hit = pixel_at_coordinate_grids(
-        spark.table("landfire_grid_meta"), spark.table("landfire_grids")
-    )
-    cls = classify_pixels(hit, spark.table("landfire_attributes"))
+    hit = pixel_at_coordinate_grids(meta, grids)
+    cls = classify_pixels(hit, attrs)
     return cls.groupBy("request_id").agg(
         F.array_join(F.array_sort(F.collect_list("product")), ",").alias("products"),
         F.array_join(

@@ -713,27 +713,6 @@ def snapshot(
     return spark.read.schema(schema).parquet(path)
 
 
-# (application id, fixture) -> sf_dir currently backing the view;
-# avoids re-listing parquet footers and re-registering views on every
-# query build (the collect pipeline assembles 6 branches, each
-# ensuring its inputs), while a scale-factor switch correctly
-# re-registers. Keyed on applicationId, not id(spark): CPython can
-# reuse an object id after a stopped session is collected, which
-# would silently skip registration for the new session.
-_REGISTERED: dict[tuple[str, str], str] = {}
-
-
-def _session_key(spark: SparkSession) -> str:
-    return spark.sparkContext.applicationId
-
-
-def invalidate_fixture(spark: SparkSession, name: str) -> None:
-    """Drop the registration memo for one fixture so the next
-    ensure_fixtures re-registers it (used by tests that override a
-    view to simulate a source outage)."""
-    _REGISTERED.pop((_session_key(spark), name), None)
-
-
 def _generate(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One fixture's derivation, laid out for its snapshot.
 
@@ -745,43 +724,55 @@ def _generate(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     hive partition (more only past write_dataset's per-file row cap),
     each holding one contiguous event_id range. request_id is the
     zero-padded event_id, so a point filter on it skips every other
-    file's row groups by their min/max stats."""
+    file's row groups by their min/max stats.
+
+    The derivation SQL names base tables (``events``, ``documents``,
+    ``lineitem``), so building is the one place their views are
+    registered."""
+    register_views(spark, sf_dir)
     table(spark, sf_dir, "events").repartitionByRange(
         spark.sparkContext.defaultParallelism, "event_id"
     ).createOrReplaceTempView("_events_gen")
     return spark.sql(FIXTURES[name]["spark"].replace("FROM events e", "FROM _events_gen e"))
 
 
-def ensure_fixtures(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None) -> None:
-    """Register base views + fixture tables on the Spark side.
+# (application id, snapshot path) -> the frame ensure_fixtures returned
+# for it, snapshot or lazy fallback. Opening the 8 warm /collect inputs
+# costs 0.1-0.2 s of driver work on a 4-core host (a memo hit ~2 ms),
+# and a plan assembles several branches that each ensure their inputs.
+# The path encodes the source signature, the key text and the store
+# root, so an entry never goes stale. Keyed on applicationId, not
+# id(spark): CPython can reuse an object id after a stopped session is
+# collected.
+_OPENED: dict[tuple[str, str], DataFrame] = {}
 
-    Each fixture is a snapshot in the store (see ``snapshot``); the
-    registered view is then a plain Parquet scan. Falls back to a lazy
-    derived view if the snapshot cannot be written."""
-    sid = _session_key(spark)
-    wanted = [
-        n
-        for n in (names or tuple(FIXTURES))
-        if _REGISTERED.get((sid, n)) != sf_dir
-    ]
-    if not wanted:
-        return
-    register_views(spark, sf_dir)
-    for name in wanted:
-        try:
-            snapshot(
-                spark,
-                sf_dir,
-                name,
-                _fixture_key(name),
-                lambda: _generate(spark, sf_dir, name),
-                partition_by=_SNAPSHOT_PARTITION.get(name, ()),
-            ).createOrReplaceTempView(name)
-        except Exception:
-            spark.sql(
-                f"CREATE OR REPLACE TEMPORARY VIEW {name} AS {FIXTURES[name]['spark']}"
-            )
-        _REGISTERED[(sid, name)] = sf_dir
+
+def ensure_fixtures(spark: SparkSession, sf_dir: str, names: Sequence[str]) -> list[DataFrame]:
+    """One DataFrame per fixture in ``names``, in order; no view is
+    registered.
+
+    Each fixture is a snapshot in the store (see ``snapshot``), so the
+    frame is a plain Parquet scan. Falls back to the lazy derivation
+    over the base views if the snapshot cannot be written."""
+    sid = spark.sparkContext.applicationId
+    out = []
+    for name in names:
+        key = (sid, _snapshot_path(sf_dir, name))
+        if key not in _OPENED:
+            try:
+                _OPENED[key] = snapshot(
+                    spark,
+                    sf_dir,
+                    name,
+                    _fixture_key(name),
+                    lambda: _generate(spark, sf_dir, name),
+                    partition_by=_SNAPSHOT_PARTITION.get(name, ()),
+                )
+            except Exception:
+                register_views(spark, sf_dir)
+                _OPENED[key] = spark.sql(FIXTURES[name]["spark"])
+        out.append(_OPENED[key])
+    return out
 
 
 def duck_with(*names: str) -> str:

@@ -152,8 +152,8 @@ def enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     at scale this is a broadcast of the dimension into every batch."""
     from env_data_pipeline_spark.sources.fixtures import ensure_fixtures
 
-    ensure_fixtures(spark, sf_dir, ("requests",))
-    dim = spark.table("requests").select(
+    (requests,) = ensure_fixtures(spark, sf_dir, ("requests",))
+    dim = requests.select(
         F.expr("CAST(substring(request_id, 5) AS BIGINT)").alias("event_id"),
         "request_id",
         "priority",

@@ -275,37 +275,32 @@ def test_asof_join_semantics(spark):
     assert inclusive == {1: 101, 2: 103, 3: None}
 
 
-def test_collect_tolerates_missing_source(spark, sf_dir):
+def test_collect_tolerates_missing_source(spark, sf_dir, monkeypatch):
     """O3 graceful degradation: an empty topography source must not
     drop requests — left-join semantics keep the row, success_rate
     reflects the missing source."""
-    from env_data_pipeline_spark.plans.collect import _wide
-    from env_data_pipeline_spark.sources.fixtures import ensure_fixtures
+    from env_data_pipeline_spark.plans import collect
 
-    ensure_fixtures(spark, sf_dir)
-    full = _wide(spark, sf_dir)
+    full = collect._wide(spark, sf_dir)
     n_full = full.count()
     max_succ_full = full.agg(F.max("sources_successful")).collect()[0][0]
 
-    # simulate the topography container being down: empty view
-    # (ensure_fixtures memoization keeps this override in place)
-    empty = spark.table("elevation_cells").limit(0)
-    empty.createOrReplaceTempView("elevation_cells")
-    try:
-        degraded = _wide(spark, sf_dir)
-        assert degraded.count() == n_full, "requests must not be dropped"
-        stats = degraded.agg(
-            F.max("sources_successful").alias("mx"),
-            F.count(F.when(F.col("mean_elevation_m").isNotNull(), 1)).alias("topo_rows"),
-        ).collect()[0]
-        assert stats["topo_rows"] == 0
-        assert stats["mx"] == max_succ_full - 1
-    finally:
-        # restore the real view for later tests in this session
-        from env_data_pipeline_spark.sources.fixtures import invalidate_fixture
+    # simulate the topography container being down: an empty source
+    ensure = collect.ensure_fixtures
 
-        invalidate_fixture(spark, "elevation_cells")
-        ensure_fixtures(spark, sf_dir, ("elevation_cells",))
+    def ensure_without_topography(spark, sf_dir, names):
+        frames = ensure(spark, sf_dir, names)
+        return [f.limit(0) if n == "elevation_cells" else f for n, f in zip(names, frames)]
+
+    monkeypatch.setattr(collect, "ensure_fixtures", ensure_without_topography)
+    degraded = collect._wide(spark, sf_dir)
+    assert degraded.count() == n_full, "requests must not be dropped"
+    stats = degraded.agg(
+        F.max("sources_successful").alias("mx"),
+        F.count(F.when(F.col("mean_elevation_m").isNotNull(), 1)).alias("topo_rows"),
+    ).collect()[0]
+    assert stats["topo_rows"] == 0
+    assert stats["mx"] == max_succ_full - 1
 
 
 def test_connected_components_chain_and_islands(spark):

@@ -7,6 +7,8 @@ snapshots are reaped."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 import time
 from collections import defaultdict
@@ -16,23 +18,28 @@ import pytest
 from pyspark.sql import functions as F
 
 from env_data_pipeline_spark.observe import observe
-from env_data_pipeline_spark.plans.collect import _WIDE_FIXTURES
 from env_data_pipeline_spark.sources import fixtures
 
 _CLUSTERED = ("requests", "weather_forecast", "landfire_grids")
+# the snapshots the /collect wide record's plan scans, its branches' included
+_COLLECT_INPUTS = (
+    "requests",
+    "weather_current",
+    "weather_forecast",
+    "modis_observations",
+    "landfire_grid_meta",
+    "landfire_grids",
+    "landfire_attributes",
+    "elevation_cells",
+)
 
 
 @pytest.fixture
-def fresh_cache(spark, tmp_path, monkeypatch):
+def fresh_cache(tmp_path, monkeypatch):
     """An empty snapshot cache, so this session writes the snapshots
     under test (the snapshot key leaves the core count out, so the
     shared cache may hold ones another session's core count wrote)."""
     monkeypatch.setattr(fixtures, "_CACHE_ROOT", str(tmp_path))
-    for name in _CLUSTERED:
-        fixtures.invalidate_fixture(spark, name)
-    yield
-    for name in _CLUSTERED:
-        fixtures.invalidate_fixture(spark, name)
 
 
 def _files_by_partition(path: str) -> dict[str, list[str]]:
@@ -82,31 +89,33 @@ def test_point_filter_reads_one_file(spark, sf_dir, fresh_cache):
 
 
 def test_failed_snapshot_write_leaves_no_tmp_dir(spark, sf_dir, tmp_path, monkeypatch):
-    """A derivation that fails inside a task falls back to a lazy view
-    and removes its partial ``.tmp-<pid>`` directory."""
+    """A derivation that fails inside a task falls back to the lazy
+    derivation and removes its partial ``.tmp-<pid>`` directory."""
     name = "_failing_fixture"
     sql = "SELECT raise_error(concat('boom ', cast(e.event_id AS STRING))) AS x FROM events e"
     monkeypatch.setattr(fixtures, "_CACHE_ROOT", str(tmp_path))
     monkeypatch.setitem(fixtures.FIXTURES, name, {"spark": sql, "duck": sql})
-    try:
-        fixtures.ensure_fixtures(spark, sf_dir, (name,))
-        path = fixtures._snapshot_path(sf_dir, name)
-        assert not os.path.exists(path)
-        assert os.listdir(os.path.dirname(path)) == []
-    finally:
-        fixtures.invalidate_fixture(spark, name)
-        spark.catalog.dropTempView(name)
+    fixtures.ensure_fixtures(spark, sf_dir, (name,))
+    path = fixtures._snapshot_path(sf_dir, name)
+    assert not os.path.exists(path)
+    assert os.listdir(os.path.dirname(path)) == []
 
 
 def _no_build():
     raise AssertionError("a warm snapshot read must not build")
 
 
-def test_warm_snapshot_read_runs_no_spark_job(spark, sf_dir):
-    """The stored schema stands in for footer inference, so opening a
-    published snapshot is driver-only work."""
-    fixtures.ensure_fixtures(spark, sf_dir, _WIDE_FIXTURES)
-    for name in _WIDE_FIXTURES:
+def test_warm_snapshot_read_runs_no_spark_job(spark, sf_dir, monkeypatch):
+    """The stored schema stands in for footer inference, and base views
+    are registered only to build, so opening published snapshots is
+    driver-only work, through ensure_fixtures (reader memo emptied) and
+    through ``snapshot`` itself."""
+    fixtures.ensure_fixtures(spark, sf_dir, _COLLECT_INPUTS)
+    monkeypatch.setattr(fixtures, "_OPENED", {})
+    opened = observe(spark, lambda: fixtures.ensure_fixtures(spark, sf_dir, _COLLECT_INPUTS))
+    assert opened["jobs"] == 0, opened["jobs"]
+    assert len(fixtures._OPENED) == len(_COLLECT_INPUTS)
+    for name, frame in zip(_COLLECT_INPUTS, opened["value"]):
         record = observe(
             spark,
             lambda: fixtures.snapshot(
@@ -114,7 +123,7 @@ def test_warm_snapshot_read_runs_no_spark_job(spark, sf_dir):
             ),
         )
         assert record["jobs"] == 0, (name, record["jobs"])
-        assert record["value"].schema == spark.table(name).schema, name
+        assert record["value"].schema == frame.schema, name
 
 
 def test_failed_artifact_build_raises_and_leaves_no_tmp_dir(
@@ -159,3 +168,26 @@ def test_stale_other_keyed_artifact_is_reaped(spark, sf_dir, tmp_path, monkeypat
     assert os.path.exists(paths["_artifact", "v2"])
     assert os.path.exists(paths["_artifact_x", "v1"])
     assert os.path.exists(fixtures._snapshot_path(sf_dir, "_artifact", "v3"))
+
+
+def test_engine_reads_fixtures_only_through_ensure_fixtures():
+    """No engine module looks a fixture up as a session view by name:
+    ``ensure_fixtures`` returns the frames and registers no view."""
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "env_data_pipeline_spark"
+    )
+    found = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "table"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value in fixtures.FIXTURES
+            ):
+                found.append(f"{os.path.relpath(path, pkg)}:{node.lineno}")
+    assert not found, found

@@ -12,8 +12,7 @@ from tests.oracle import _multiset, run_duckdb
 
 @pytest.mark.parametrize("name", sorted(fixtures.FIXTURES))
 def test_fixture_parity(spark, sf_dir, name):
-    fixtures.ensure_fixtures(spark, sf_dir, (name,))
-    sdf = spark.table(name)
+    (sdf,) = fixtures.ensure_fixtures(spark, sf_dir, (name,))
     s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
     d_cols, d_rows = run_duckdb(
@@ -29,13 +28,15 @@ def test_fixture_parity(spark, sf_dir, name):
 
 
 def test_fixture_memo_reregisters_on_sf_switch(spark):
-    """The registration memo must not serve a stale view when the
-    scale factor changes mid-session."""
+    """The reader memo must not serve a stale frame when the scale
+    factor changes mid-session."""
     sf_a, sf_b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
-    fixtures.ensure_fixtures(spark, sf_a, ("weather_current",))
-    n_a = spark.table("weather_current").count()
-    fixtures.ensure_fixtures(spark, sf_b, ("weather_current",))
-    n_b = spark.table("weather_current").count()
+
+    def count(sf: str) -> int:
+        (wc,) = fixtures.ensure_fixtures(spark, sf, ("weather_current",))
+        return wc.count()
+
+    n_a = count(sf_a)
+    n_b = count(sf_b)
     assert n_b == 10 * n_a
-    fixtures.ensure_fixtures(spark, sf_a, ("weather_current",))
-    assert spark.table("weather_current").count() == n_a
+    assert count(sf_a) == n_a

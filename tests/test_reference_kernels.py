@@ -1285,8 +1285,7 @@ def test_bpe_word_tokens_match_python_greedy(spark, sf_dir):
     from env_data_pipeline_spark.sources.fixtures import ensure_fixtures
     from env_data_pipeline_spark.catalog import table
 
-    ensure_fixtures(spark, sf_dir, ("bpe_vocab",))
-    vocab_df = spark.table("bpe_vocab")
+    (vocab_df,) = ensure_fixtures(spark, sf_dir, ("bpe_vocab",))
     vocab = {r["piece"] for r in vocab_df.collect()}
     docs = table(spark, sf_dir, "documents")
     got = {
@@ -1457,12 +1456,8 @@ def test_spatial_neighbor_pairs_vs_bruteforce(spark, sf_dir):
     from env_data_pipeline_spark.plans.envpipe import _GEO_R2, _GEO_TOPK
     from env_data_pipeline_spark.sources.fixtures import ensure_fixtures
 
-    ensure_fixtures(spark, sf_dir, ("requests",))
-    rows = (
-        spark.table("requests")
-        .select("latitude", "longitude")
-        .collect()
-    )
+    (requests,) = ensure_fixtures(spark, sf_dir, ("requests",))
+    rows = requests.select("latitude", "longitude").collect()
     pts = Counter()
     for r in rows:
         la, lo = r["latitude"], r["longitude"]
@@ -1508,8 +1503,8 @@ def test_density_hotspots_python_replay(spark, sf_dir):
     )
     from env_data_pipeline_spark.sources.fixtures import ensure_fixtures
 
-    ensure_fixtures(spark, sf_dir, ("requests",))
-    pts = spark.table("requests").select("latitude", "longitude").collect()
+    (requests,) = ensure_fixtures(spark, sf_dir, ("requests",))
+    pts = requests.select("latitude", "longitude").collect()
     cells: Counter = Counter()
     for r in pts:
         la, lo = r["latitude"], r["longitude"]

@@ -334,7 +334,7 @@ def test_ivf_served_equals_inline_scaled_replay(spark, sf_dir):
     assert served == inline
 
 
-def test_ivf_scaled_recall_floor_on_clustered_corpus(spark, tmp_path):
+def test_ivf_scaled_recall_floor_on_clustered_corpus(spark, tmp_path, monkeypatch):
     """Recall@3 >= 0.93 for the scaled-K serving path, pinned on a
     PLANTED clustered corpus (40 tight clusters of 25, the workload
     IVF exists for). The shipped test embeddings are isotropic random
@@ -346,6 +346,11 @@ def test_ivf_scaled_recall_floor_on_clustered_corpus(spark, tmp_path):
     data the scaled index must actually find the neighbors: queries
     probe 6 of K=31 cells (~19% — and shrinking as sqrt(n) grows)."""
     import numpy as np
+
+    from env_data_pipeline_spark.sources import fixtures
+
+    # the corpus is thrown away with tmp_path, so are its trained artifacts
+    monkeypatch.setattr(fixtures, "_CACHE_ROOT", str(tmp_path / "store"))
 
     rng = np.random.default_rng(11)
     centers = rng.normal(size=(40, 64))
