@@ -10,8 +10,8 @@ topography), built Spark-first:
 - operators: declarative DataFrame / SQL plans optimized by Catalyst
   (predicate pushdown, broadcast joins, AQE) — no hand-scheduled
   execution;
-- rasters: long-form pixel tables so every raster op is relational
-  algebra (SURVEY.md §2.7);
+- rasters: one row per grid (a nested pixel array) or per pixel, so
+  every raster op is relational algebra (SURVEY.md §2.7);
 - streaming: Structured Streaming analog of the reference's
   event-trigger path (SURVEY.md §2.9);
 - scale extensions: dedup / similarity / text-analysis / multimodal

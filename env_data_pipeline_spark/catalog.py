@@ -39,18 +39,18 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # row group across tasks — so without this, every scan and every
 # pre-shuffle kernel fused into it (shingle/gram md5, minhash partial
 # aggregation, per-component vector math) runs as ONE task no matter
-# how many cores the session has. When a FACT table's files expose
-# fewer row groups than the session's parallelism, hash-repartition
-# on the table's primary key right after the read, restoring the
-# map-side parallelism the same plan has at production scale — where
-# fact files carry thousands of row groups and this rule is a no-op
-# (rgs >= parallelism short-circuits before any shuffle is added).
-# Hash-by-unique-key, not round-robin: assignment is deterministic
-# under task retry without round-robin's sort-before-repartition
-# pass, and a downstream groupBy on the same key reuses the exchange.
-# Dimension tables stay out of the map: they are bounded-size by the
-# data model and feed broadcast joins, where an extra exchange is
-# pure overhead.
+# how many cores the session has. When an opted-in table's files
+# expose fewer row groups than the session's parallelism,
+# hash-repartition on the table's primary key right after the read,
+# restoring the map-side parallelism the same plan has at production
+# scale — where the files carry thousands of row groups and this rule
+# is a no-op (rgs >= parallelism short-circuits before any shuffle is
+# added). Hash-by-unique-key, not round-robin: assignment is
+# deterministic under task retry without round-robin's
+# sort-before-repartition pass, and a downstream groupBy on the same
+# key reuses the exchange. Only ``documents`` is mapped: it is the one
+# table whose readers run a heavy map kernel above the scan (the
+# callers that pass ``parallel=True``).
 #
 # OPT-IN per call site (``table(..., parallel=True)``), not blanket:
 # measured per-task fixed cost on this host is ~50 ms (codegen
@@ -62,13 +62,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # the r12 A/B. SPARK_GRAFT_SCAN_FLOOR=0 disables globally (A/B lever).
 # ---------------------------------------------------------------------------
 
-_FACT_SCAN_KEYS = {
-    "lineitem": "l_orderkey",
-    "orders": "o_orderkey",
-    "events": "event_id",
-    "documents": "doc_id",
-    "embeddings": "vec_id",
-}
+_FACT_SCAN_KEYS = {"documents": "doc_id"}
 # floor on rows per task so the floor never manufactures near-empty
 # tasks at tiny SFs (scheduling overhead would then exceed the work).
 # 64 keeps the floor firing from sf0.01 up for the document corpus, so

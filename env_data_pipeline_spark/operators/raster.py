@@ -1,10 +1,11 @@
-"""Raster operators over long-form pixel tables (SURVEY.md §2.7).
+"""Raster operators over pixel grids (SURVEY.md §2.7).
 
 The reference holds rasters as GeoTIFF byte blobs and indexes them
-with rasterio; the engine models each grid as rows
-``(grid_id, row, col, pixel_value)`` plus a grid-metadata table with
-the affine transform — so every raster operation is relational algebra
-that Catalyst can prune, push down, and parallelize per grid.
+with rasterio; the engine models each LANDFIRE grid as one row with a
+16x16 nested array (DEM grids as ``(grid_id, row, col, elevation)``
+rows) plus a grid-metadata table with the affine transform — so every
+raster operation is relational algebra that Catalyst can prune, push
+down, and parallelize per grid.
 """
 
 from __future__ import annotations
@@ -34,9 +35,8 @@ def pixel_at_coordinate_grids(grid_meta: DataFrame, grids: DataFrame) -> DataFra
     The point-lookup access path: probes one row per grid instead of
     256 long-form rows — at 100 TB the same data volume is scanned
     (arrays decode whole), but per-row join/probe overhead drops 256x
-    and the output never explodes. Area aggregations keep using the
-    long-form table (same pixels by construction; see
-    sources/fixtures.py::_LANDFIRE_PIXEL_VALUE).
+    and the output never explodes. Area aggregations explode the same
+    grid rows (plans/raster.py::landfire_area_summary).
 
     Open finding (not fixed): a ``/collect`` point lookup still reads
     all 5,000 ``landfire_grids`` rows of both products at sf0.01, the

@@ -1,8 +1,9 @@
 """Raster/array query plans (SURVEY.md §2.7, §2.4 A1-A4, §2.5 J1/J2/J4).
 
-Long-form pixel tables + grid metadata; every query is relational and
-oracle-checked except the R5 array re-pivot (nested arrays — driver
-gets a rows-only check; exact values covered by a unit test).
+LANDFIRE pixels are read in one layout, the grid-form snapshot (one
+row per grid, a 16x16 nested array), plus grid metadata; every query
+is oracle-checked, and the oracles derive the pixels independently
+from the long-form fixture.
 """
 
 from __future__ import annotations
@@ -67,14 +68,11 @@ _DUCK_ATTR_JOINS = """
 def landfire_center_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R1 coordinate->pixel affine + R2 extraction + J1/J2
     classification with exact-over-range precedence
-    (landfire_container.py:86-132). The 16x16-per-grid pixel table
-    joins on (grid_id,row,col) after broadcasting the tiny target set;
-    the 1k-row attribute dim broadcasts for both lookup joins.
-
-    Point lookups read the grid-shaped layout (one row per grid,
-    element_at on the nested array) — the oracle recomputes from the
-    long-form table, so the parity check also proves the two layouts
-    hold identical pixels."""
+    (landfire_container.py:86-132). The tiny target set joins the grid
+    snapshot on grid_id and reads its pixel with element_at on the
+    nested array; the 1k-row attribute dim broadcasts for both lookup
+    joins. The oracle recomputes from the long-form derivation, so the
+    parity check also proves the two layouts hold identical pixels."""
     meta, grids, attrs = ensure_fixtures(
         spark, sf_dir, ("landfire_grid_meta", "landfire_grids", "landfire_attributes")
     )
@@ -122,16 +120,19 @@ def landfire_area_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's area summary is about vegetation interpretation,
     landfire_container.py:438-449; continuous rasters have no classes
     and would make every pixel value its own group). The product
-    filter is directory pruning on the hive-partitioned snapshot;
-    classify is broadcast-join; histogram is a two-level agg keyed by
-    (grid_id, class) then a per-grid window — both shuffles hash on
-    grid_id which is uniformly distributed."""
-    px, attrs = ensure_fixtures(
-        spark, sf_dir, ("landfire_pixels", "landfire_attributes")
+    filter is directory pruning on the hive-partitioned grid snapshot,
+    and each grid row explodes into its 256 pixels; classify is
+    broadcast-join; histogram is a two-level agg keyed by (grid_id,
+    class) then a per-grid window — both shuffles hash on grid_id
+    which is uniformly distributed."""
+    grids, attrs = ensure_fixtures(
+        spark, sf_dir, ("landfire_grids", "landfire_attributes")
     )
-    classified = classify_pixels(
-        px.filter(F.col("product").isin("vegetation_type", "fuel_model")), attrs
+    px = grids.filter(F.col("product").isin("vegetation_type", "fuel_model")).select(
+        "grid_id", "request_id", "product",
+        F.explode(F.flatten("arrays")).alias("pixel_value"),
     )
+    classified = classify_pixels(px, attrs)
     counts = classified.groupBy("grid_id", "request_id", "product", "interpreted").agg(
         F.count("*").alias("n")
     )
@@ -295,15 +296,15 @@ def elevation_center_pixel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "landfire_viz_arrays",
     oracle=f"""
     {{DUCK_WITH}},
-    -- ZERO-AGGREGATION oracle (r5): derive both the arrays JSON and
-    -- the legend value sets from the GRID-form fixture (one 16x16
-    -- nested array per grid, a pure generator expression) instead of
+    -- ZERO-AGGREGATION oracle: derive both the arrays JSON and the
+    -- legend value sets from the GRID-form fixture (one 16x16 nested
+    -- array per grid, a pure generator expression) instead of
     -- re-aggregating the 57.6M-row long form. The list()/string_agg
     -- ORDER BY aggregates buffer their whole input unspillably and
     -- could not materialize the sf0.1 tier inside one process's
-    -- memory-map budget; the grid form streams 225k rows. The two
-    -- fixtures generate the SAME pixel expression (fixtures.py), so
-    -- the engine's long-form re-pivot is still checked value-for-value.
+    -- memory-map budget; the grid form streams 225k rows. DuckDB's
+    -- generator is checked against the engine's Spark-built grid
+    -- snapshot value for value.
     grids AS (
       SELECT grid_id, request_id, product,
              to_json(arrays)::VARCHAR AS arrays
@@ -338,44 +339,31 @@ def elevation_center_pixel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def landfire_viz_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R5: re-pivot long-form pixels to the 2-D visualization array +
-    legend map (shared_schema.py:79-86; populated at
-    topography_container.py:357-376). The 2-D array and the legend are
-    serialized to JSON text so every output column is scalar (sortable
-    / hashable by any downstream comparator); a real sink would keep
-    the typed array/map forms one select earlier. The oracle assembles
-    byte-identical JSON text (DuckDB to_json list formatting and
-    string_agg-built object keys match Spark's to_json conventions;
-    one product per grid, so legend keys cannot collide).
+    """R5: the 2-D visualization array + legend map per grid
+    (shared_schema.py:79-86; populated at
+    topography_container.py:357-376). The grid snapshot stores the
+    array row-major, so nothing is re-pivoted. The 2-D array and the
+    legend are serialized to JSON text so every output column is
+    scalar (sortable / hashable by any downstream comparator); a real
+    sink would keep the typed array/map forms one select earlier. The
+    oracle assembles byte-identical JSON text (DuckDB to_json list
+    formatting and string_agg-built object keys match Spark's to_json
+    conventions; one product per grid, so legend keys cannot collide).
 
     Legend entries carry the reference's value -> {name, color} shape
     (shared_schema.py:250-264); color is a deterministic hex derived
-    from md5(name), so it is stable across runs and engines.
-
-    Row order inside each array is pinned by sort_array over
-    (col, value) / (row, array) structs — Spark gives no implicit
-    ordering (SURVEY.md §7.3.1)."""
-    px, attrs = ensure_fixtures(
-        spark, sf_dir, ("landfire_pixels", "landfire_attributes")
+    from md5(name), so it is stable across runs and engines. Each
+    grid's distinct values are classified once (both attribute joins
+    match at most one row)."""
+    grids, attrs = ensure_fixtures(
+        spark, sf_dir, ("landfire_grids", "landfire_attributes")
     )
-    rows = px.groupBy("grid_id", "request_id", "product", "row").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("col", "pixel_value"))),
-            lambda s: s.pixel_value,
-        ).alias("row_values")
-    )
-    grids = rows.groupBy("grid_id", "request_id", "product").agg(
-        F.to_json(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("row", "row_values"))),
-                lambda s: s.row_values,
-            )
-        ).alias("arrays")
+    px = grids.select(
+        "grid_id", "product",
+        F.explode(F.array_distinct(F.flatten("arrays"))).alias("pixel_value"),
     )
     legends = (
         classify_pixels(px, attrs)
-        .select("grid_id", "pixel_value", "interpreted")
-        .distinct()
         .withColumn(
             "color",
             F.concat(F.lit("#"), F.upper(F.substring(F.md5("interpreted"), 1, 6))),
@@ -398,7 +386,9 @@ def landfire_viz_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("legend")
         )
     )
-    return grids.join(legends, "grid_id")
+    return grids.select(
+        "grid_id", "request_id", "product", F.to_json("arrays").alias("arrays")
+    ).join(legends, "grid_id")
 
 
 # ---------------------------------------------------------------------------

@@ -25,13 +25,7 @@ from pyspark.sql.window import Window
 
 from env_data_pipeline_spark.catalog import table
 from env_data_pipeline_spark.plans.registry import query
-
-
-def _units(col):
-    return F.floor(col * 10000 + F.lit(0.5)).cast("bigint")
-
-
-_REV_UNITS_SQL = "CAST(floor(l_extendedprice * (1 - l_discount) * 10000 + 0.5) AS BIGINT)"
+from env_data_pipeline_spark.plans.relational_ext import _REV_UNITS_SQL, _units
 
 
 @query(

@@ -262,8 +262,8 @@ def _modis_sql(dialect: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# landfire_pixels + landfire_grid_meta — long-form 16x16 raster grids
-# per (request, product), 9 products (landfire_container.py:179-194:
+# landfire_grids + landfire_grid_meta — 16x16 raster grids per
+# (request, product), 9 products (landfire_container.py:179-194:
 # 6 vegetation/fuel/canopy + slope/aspect/elevation; FIXTURES.md §B5/B6).
 # Pixel values drawn from the attribute ranges at
 # landfire_container.py:68-84 (vegetation 2000-7999, fuel 90-149,
@@ -278,8 +278,9 @@ _LANDFIRE_PRODUCTS = """
 ) AS lp(product, p_idx)
 """
 
-# pixel-value formula shared by the long-form and grid-form layouts —
-# one template, two substitutions, so the layouts cannot drift
+# pixel-value formula shared by the grid-form snapshot and the
+# long-form oracle derivation — one template, two substitutions, so
+# the layouts cannot drift
 _LANDFIRE_PIXEL_VALUE = """CASE
     WHEN lp.product = 'vegetation_type' THEN
       CASE WHEN ({R} * 13 + {C} * 29 + e.event_id) % 31 = 0 THEN 9500
@@ -313,9 +314,10 @@ WHERE e.event_id % 4 = 0
 )
 
 # grid-form layout: SAME pixels, one row per grid, 16x16 nested array.
-# This is the point-lookup access path (SURVEY.md §1.4 R2): extracting
-# the center pixel probes one row per grid instead of 256 — the
-# long-form table stays the access path for area aggregation (R3/A12).
+# The one layout the engine reads (SURVEY.md §1.4 R2): a point lookup
+# probes one row per grid instead of 256, and area aggregation (R3/A12)
+# explodes the rows it keeps after product pruning. The long form above
+# is DuckDB-only: the oracles' independent derivation of the pixels.
 # Generated as a pure nested-HOF expression — no explode, no groupBy.
 _LANDFIRE_GRIDS_SELECT = """
 SELECT
@@ -440,7 +442,8 @@ def _grid_sql(body: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# assembled fixture dictionary: name -> {"spark": sql, "duck": sql}
+# assembled fixture dictionary: name -> {"spark": sql, "duck": sql};
+# an oracle-only fixture has no "spark" text
 # ---------------------------------------------------------------------------
 
 
@@ -456,7 +459,7 @@ FIXTURES: dict[str, dict[str, str]] = {
         "spark": _modis_sql("spark"),
         "duck": _modis_sql("duck"),
     },
-    "landfire_pixels": _both(_grid_sql(_LANDFIRE_PIXELS_BODY)),
+    "landfire_pixels": {"duck": _grid_sql(_LANDFIRE_PIXELS_BODY)},
     "landfire_grids": {
         "spark": _landfire_grids_sql("spark"),
         "duck": _landfire_grids_sql("duck"),
@@ -609,7 +612,6 @@ _STALE_SNAPSHOT_SECONDS = 6 * 3600
 # partition column (e.g. 2 of 9 LANDFIRE products) prune whole
 # directories instead of scanning and discarding
 _SNAPSHOT_PARTITION: dict[str, tuple[str, ...]] = {
-    "landfire_pixels": ("product",),
     "landfire_grids": ("product",),
     "lineitem_by_month": ("ship_month",),
 }
@@ -718,9 +720,9 @@ def _generate(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     Partition the GENERATION, not the output: the events input is tiny
     (1-2 parquet files -> 1-2 tasks), so range-partition it into one
-    slice per core BEFORE the cross-join derivations fan out (57M rows
-    for landfire_pixels at sf0.1) — a 100k-row shuffle instead of a
-    57M-row one. The write keeps that layout: one file per core in each
+    slice per core BEFORE the cross-join derivations fan out (6.4M rows
+    for elevation_cells at sf0.1) — a 100k-row shuffle instead of a
+    6.4M-row one. The write keeps that layout: one file per core in each
     hive partition (more only past write_dataset's per-file row cap),
     each holding one contiguous event_id range. request_id is the
     zero-padded event_id, so a point filter on it skips every other

@@ -35,16 +35,12 @@ def main() -> int:
         # default driver heap ON PURPOSE: the oracle compare streams
         # results via toLocalIterator (tests/oracle.py), so even the
         # widest sf0.1 result (landfire_viz_arrays, 225k JSON-array
-        # rows) must pass without a memory carve-out — r4 verdict item 4.
-        # Partition sizing for a 1 GB heap: the synthetic tables
-        # compress ~100:1 (57.6M pixel rows = 28 MB parquet), so
-        # byte-based defaults (128m splits, 4m file-open cost, 64m AQE
-        # advisory) bin-pack the landfire_pixels scan into ~10 tasks of
-        # 6M rows each and the partial collect_list aggregation blows
-        # the heap. Smaller split/advisory targets keep every task's
-        # working set heap-friendly — the same maxPartitionBytes /
-        # advisory sizing a real cluster job does, just tuned for a
-        # 1 GB local JVM instead of a 16 GB executor.
+        # rows) must pass without a memory carve-out. The synthetic
+        # tables compress ~100:1, so byte-based defaults (128m splits,
+        # 4m file-open cost, 64m AQE advisory) pack that result into a
+        # few partitions whose toLocalIterator task results overflow
+        # the 1 GB heap (OutOfMemoryError). Smaller split/advisory
+        # targets keep every task's result heap-friendly.
         .config("spark.sql.files.maxPartitionBytes", "1m")
         .config("spark.sql.files.openCostInBytes", "65536")
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")

@@ -206,6 +206,16 @@ def test_dimension_joins_broadcast(spark, sf_dir):
         assert "BroadcastHashJoin" in plan, name
 
 
+def test_landfire_pixel_queries_scan_only_grids(spark, sf_dir):
+    """The grid snapshot is the one pixel layout the engine reads, and
+    the area summary prunes to its 2 of 9 product directories before
+    it explodes the grids."""
+    for name in ("landfire_viz_arrays", "landfire_area_summary"):
+        plan = formatted_plan(spark, name, sf_dir)
+        assert "landfire_pixels-" not in plan and "landfire_grids-" in plan, name
+    assert re.search(r"PartitionFilters: \[[^\]]*product", plan), plan
+
+
 def test_pivot_single_scan(spark, sf_dir):
     """orders_status_pivot derives counts and totals from ONE pivot
     aggregation — the plan tree must contain exactly one scan of the
