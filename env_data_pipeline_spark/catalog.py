@@ -2,19 +2,24 @@
 
 The driver-generated tables (TESTDATA.md) are the engine's base
 relations. ``table`` reads one as a Parquet scan (columnar,
-pushdown-capable). ``register_views`` exposes all of them to spark.sql
-under their DuckDB names; only a fixture snapshot build (fixtures.py)
-needs that, because the fixture SQL is shared verbatim with the DuckDB
-oracle. Plans get fixtures as DataFrames from ``ensure_fixtures``.
+pushdown-capable). What the engine knows about a base-table file comes
+from one footer record per on-disk version (``_footer``): the Spark
+schema, inferred once with one job, and the row-group and row counts.
+Every read passes that schema, so a warm read runs no Spark job.
+``register_views`` exposes all tables to spark.sql under their DuckDB
+names; only a fixture snapshot build (fixtures.py) needs that, because
+the fixture SQL is shared verbatim with the DuckDB oracle. Plans get
+fixtures as DataFrames from ``ensure_fixtures``.
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import DataType
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -59,7 +64,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # gram kernels: 0.4-2 s of single-thread CPU); applying it to
 # light-map scans (k-means iteration inputs, plain relational
 # aggregates) multiplied total CPU several-fold for zero wall win in
-# the r12 A/B. SPARK_GRAFT_SCAN_FLOOR=0 disables globally (A/B lever).
+# the r12 A/B.
 # ---------------------------------------------------------------------------
 
 _FACT_SCAN_KEYS = {"documents": "doc_id"}
@@ -71,22 +76,46 @@ _FACT_SCAN_KEYS = {"documents": "doc_id"}
 # (where the rule is a no-op entirely).
 _SCAN_FLOOR_ROWS_PER_TASK = 64
 
-# (path, size, mtime_ns) -> (n_row_groups, n_rows); same probe-once
-# discipline as _TS_VINTAGE_CACHE (the driver regenerates testdata in
-# place between rounds)
-_LAYOUT_CACHE: dict[tuple[str, int, int], tuple[int, int]] = {}
+
+class _Footer(NamedTuple):
+    schema: StructType
+    row_groups: int
+    rows: int
 
 
-def _parquet_layout(path: str) -> tuple[int, int]:
-    """(total row groups, total rows) of a parquet file or directory."""
+# (path, size, mtime_ns) -> footer record. Keyed on the file's size and
+# mtime, NOT the path alone, because the driver regenerates
+# /root/testdata in place between rounds: a session that outlives a
+# refresh must re-probe, or it would read with the stale schema (same
+# signature discipline as fixtures._source_signature).
+_FOOTERS: dict[tuple[str, int, int], _Footer] = {}
+
+
+def _footer(spark: SparkSession, path: str) -> _Footer:
+    """The footer record of one base-table file (or directory of
+    files), probed once per on-disk version: one schema-inference job,
+    then a pyarrow read of the row-group and row counts.
+
+    A TIMESTAMP(NANOS) column only resolves under the ``nanosAsLong``
+    legacy flag (as ``bigint``), so the nanos resolution error sets the
+    flag and infers again. Any other failure (missing file
+    mid-regeneration, permissions) propagates and is not recorded."""
     st = os.stat(path)
     key = (path, st.st_size, st.st_mtime_ns)
-    hit = _LAYOUT_CACHE.get(key)
+    hit = _FOOTERS.get(key)
     if hit is not None:
         return hit
+    try:
+        schema = spark.read.parquet(path).schema
+    except Exception as ex:
+        msg = str(ex)
+        if "NANOS" not in msg and "Illegal Parquet type" not in msg:
+            raise
+        _read_nanos_as_long(spark)
+        schema = spark.read.parquet(path).schema
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
+    if os.path.isdir(path):  # a Spark-written table (the scale tiers)
         files = [
             os.path.join(path, fn)
             for fn in sorted(os.listdir(path))
@@ -94,36 +123,33 @@ def _parquet_layout(path: str) -> tuple[int, int]:
         ]
     else:
         files = [path]
-    rgs = rows = 0
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        rgs += md.num_row_groups
-        rows += md.num_rows
-    _LAYOUT_CACHE[key] = (rgs, rows)
-    return rgs, rows
+    mds = [pq.ParquetFile(f).metadata for f in files]
+    rec = _Footer(
+        schema, sum(md.num_row_groups for md in mds), sum(md.num_rows for md in mds)
+    )
+    _FOOTERS[key] = rec
+    return rec
+
+
+def _read_nanos_as_long(spark: SparkSession) -> None:
+    # Session-wide by necessity: nanosAsLong is a SQL conf, not a
+    # per-read datasource option. It only changes how physical
+    # TIMESTAMP(NANOS) columns resolve, so micros/timestamp co-reads on
+    # the same session are unaffected — pinned by
+    # tests/test_testdata_contract.py::
+    # test_nanos_flag_does_not_disturb_micros_coread.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
 def _with_scan_parallelism(spark: SparkSession, df: DataFrame, path: str, key_col: str) -> DataFrame:
-    if os.environ.get("SPARK_GRAFT_SCAN_FLOOR", "1") == "0":
-        return df
     par = spark.sparkContext.defaultParallelism
-    try:
-        rgs, rows = _parquet_layout(path)
-    except Exception:  # unreadable footer: scan as-is, Spark will report
-        return df
-    target = min(par, rows // _SCAN_FLOOR_ROWS_PER_TASK)
-    if rgs >= par or target <= rgs:
+    rec = _footer(spark, path)
+    target = min(par, rec.rows // _SCAN_FLOOR_ROWS_PER_TASK)
+    if rec.row_groups >= par or target <= rec.row_groups:
         return df
     from pyspark.sql import functions as F
 
     return df.repartition(target, F.col(key_col))
-
-# Probe each events file once per on-disk version. Keyed on
-# (path, size, mtime_ns) — NOT path alone — because the driver
-# regenerates /root/testdata in place between rounds; a session that
-# outlives a refresh must re-probe, or it would build timestamps with
-# the stale vintage (same signature discipline as fixtures._source_signature).
-_TS_VINTAGE_CACHE: dict[tuple[str, int, int], str] = {}
 
 
 def events_ts_vintage(spark: SparkSession, sf_dir: str) -> str:
@@ -136,56 +162,33 @@ def events_ts_vintage(spark: SparkSession, sf_dir: str) -> str:
     vintage so a testdata refresh cannot silently break every
     events-derived fixture again.
     """
-    path = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(path)
-    key = (path, st.st_size, st.st_mtime_ns)
-    if key in _TS_VINTAGE_CACHE:
-        return _TS_VINTAGE_CACHE[key]
-    try:
-        vintage = dict(spark.read.parquet(path).dtypes).get("ts", "missing")
-    except Exception as ex:
-        # ONLY the nanos schema-resolution error means legacy vintage;
-        # caching any transient failure (missing file mid-regeneration,
-        # permissions) as "bigint" would poison every later read
-        msg = str(ex)
-        if "NANOS" in msg or "Illegal Parquet type" in msg:
-            vintage = "bigint"
-        else:
-            raise
-    _TS_VINTAGE_CACHE[key] = vintage
-    return vintage
+    schema = _footer(spark, os.path.join(sf_dir, "events.parquet")).schema
+    return schema["ts"].dataType.simpleString()
 
 
 def read_events(
-    spark: SparkSession, sf_dir: str, read: Callable[[DataType], DataFrame]
+    spark: SparkSession, sf_dir: str, read: Callable[[StructType], DataFrame]
 ) -> DataFrame:
     """``events`` with ``ts`` normalized to session-TZ TimestampType,
     whatever the on-disk vintage (see ``events_ts_vintage``). ``read``
-    opens the file, as a batch or a streaming source, given the type
-    ``ts`` has on disk."""
+    opens the file, as a batch or a streaming source, given its
+    on-disk schema."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    vintage = events_ts_vintage(spark, sf_dir)
+    schema = _footer(spark, os.path.join(sf_dir, "events.parquet")).schema
+    vintage = schema["ts"].dataType.simpleString()
     if vintage == "bigint":
-        # Session-wide by necessity: nanosAsLong is a SQL conf, not a
-        # per-read datasource option. It only changes how physical
-        # TIMESTAMP(NANOS) columns resolve, so micros/timestamp
-        # co-reads on the same session are unaffected — pinned by
-        # tests/test_testdata_contract.py::
-        # test_nanos_flag_does_not_disturb_micros_coread.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # the record may come from another session's probe
+        _read_nanos_as_long(spark)
         # integer `div`, not `/`: float division loses precision at 1e18 ns
-        return read(T.LongType()).withColumn(
+        return read(schema).withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000"))
         )
     if vintage == "timestamp_ntz":
         # wall-clock-preserving cast; UTC session TZ keeps epoch
         # semantics aligned with the oracle as well
-        return read(T.TimestampNTZType()).withColumn(
-            "ts", F.col("ts").cast("timestamp")
-        )
-    return read(T.TimestampType())
+        return read(schema).withColumn("ts", F.col("ts").cast("timestamp"))
+    return read(schema)
 
 
 def table(
@@ -201,11 +204,10 @@ def table(
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key_col = _FACT_SCAN_KEYS.get(name) if parallel else None
     if name == "events":
-        df = read_events(spark, sf_dir, lambda _ts_type: spark.read.parquet(path))
-    else:
-        df = spark.read.parquet(path)
+        return read_events(spark, sf_dir, lambda s: spark.read.schema(s).parquet(path))
+    df = spark.read.schema(_footer(spark, path).schema).parquet(path)
+    key_col = _FACT_SCAN_KEYS.get(name) if parallel else None
     if key_col is not None:
         df = _with_scan_parallelism(spark, df, path, key_col)
     return df
@@ -218,39 +220,21 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-# Queries whose BUILDER runs Spark jobs (Lloyd training /
-# connected-components iteration with eager localCheckpoints) —
-# registering these as views costs real computation up front and pins
-# checkpoint blocks in executor storage, so the default excludes them.
-EAGER_BUILD_QUERIES = frozenset(
-    {"similarity_topk_ivf_trained", "similarity_topk_ivfpq", "dedup_clusters"}
-)
-
-
 def register_query_views(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
+    spark: SparkSession, sf_dir: str, names: list[str]
 ) -> list[str]:
-    """Expose registered engine queries as SQL temp views (view name =
+    """Expose the named engine queries as SQL temp views (view name =
     query name), so users compose plain spark.sql over them — e.g.
-    ``SELECT * FROM revenue_by_region WHERE revenue > 1e6``. For the
-    default set, each view is a lazy logical plan: Catalyst fuses the
-    user's SQL with the query plan (filters push INTO the view) and
-    nothing materializes until an action. Returns the names registered.
-
-    Two families are excluded by default because their BUILDERS are
-    not lazy: ``streaming_*`` queries execute a full replay, and
-    ``EAGER_BUILD_QUERIES`` run training / iterative jobs with eager
-    checkpoints at build time. Pass them via ``names`` explicitly if
-    that cost is intended."""
+    ``SELECT * FROM revenue_by_region WHERE revenue > 1e6``. A lazy
+    builder's view is a logical plan: Catalyst fuses the user's SQL
+    with the query plan (filters push INTO the view) and nothing
+    materializes until an action. Some builders are not lazy
+    (``streaming_*`` queries run a full replay; training and iterative
+    queries run eager checkpoints), so the caller names what it wants.
+    Returns the names registered."""
     from env_data_pipeline_spark.plans import registry
 
     registry.load_all()
-    if names is None:
-        names = [
-            n
-            for n in registry.QUERIES
-            if not n.startswith("streaming_") and n not in EAGER_BUILD_QUERIES
-        ]
     registered = []
     for name in names:
         registry.QUERIES[name](spark, sf_dir).createOrReplaceTempView(name)

@@ -352,9 +352,12 @@ def landfire_viz_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Legend entries carry the reference's value -> {name, color} shape
     (shared_schema.py:250-264); color is a deterministic hex derived
-    from md5(name), so it is stable across runs and engines. Each
-    grid's distinct values are classified once (both attribute joins
-    match at most one row)."""
+    from md5(name), so it is stable across runs and engines. A class
+    depends only on ``(product, pixel_value)``, and grids repeat few
+    pairs (about 6.8k at sf0.1 against 225k grids of up to 256 values),
+    so each distinct pair is classified once and joined back to every
+    grid's distinct values (both attribute joins match at most one
+    row)."""
     grids, attrs = ensure_fixtures(
         spark, sf_dir, ("landfire_grids", "landfire_attributes")
     )
@@ -362,12 +365,22 @@ def landfire_viz_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
         "grid_id", "product",
         F.explode(F.array_distinct(F.flatten("arrays"))).alias("pixel_value"),
     )
+    entries = classify_pixels(
+        px.select("product", "pixel_value").distinct(), attrs
+    ).select(
+        "product",
+        "pixel_value",
+        F.struct(
+            F.col("interpreted").alias("name"),
+            F.concat(
+                F.lit("#"), F.upper(F.substring(F.md5("interpreted"), 1, 6))
+            ).alias("color"),
+        ).alias("entry"),
+    )
+    # the pair set is bounded by the attribute value ranges, not the
+    # grid count, so it is broadcast at any scale
     legends = (
-        classify_pixels(px, attrs)
-        .withColumn(
-            "color",
-            F.concat(F.lit("#"), F.upper(F.substring(F.md5("interpreted"), 1, 6))),
-        )
+        px.join(F.broadcast(entries), ["product", "pixel_value"])
         .groupBy("grid_id")
         .agg(
             F.to_json(
@@ -376,9 +389,7 @@ def landfire_viz_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.collect_list(
                             F.struct(
                                 F.col("pixel_value").alias("key"),
-                                F.struct(
-                                    F.col("interpreted").alias("name"), F.col("color")
-                                ).alias("value"),
+                                F.col("entry").alias("value"),
                             )
                         )
                     )

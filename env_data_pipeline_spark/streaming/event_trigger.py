@@ -15,25 +15,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
 
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source replay of events with the ts vintage detected from
-    the on-disk parquet (catalog.read_events): declaring the wrong one
-    would not error, it would silently build 1970-era timestamps."""
+    """File-source replay of events, declared with the on-disk schema
+    from the catalog's footer record (catalog.read_events): declaring
+    the wrong ts vintage would not error, it would silently build
+    1970-era timestamps."""
     from env_data_pipeline_spark.catalog import read_events
 
     # the file stream source requires a directory: load sf_dir and
@@ -41,7 +29,7 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_events(
         spark,
         sf_dir,
-        lambda ts_type: spark.readStream.schema(_events_stream_schema(ts_type))
+        lambda schema: spark.readStream.schema(schema)
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir),

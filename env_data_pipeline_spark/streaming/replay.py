@@ -28,6 +28,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # persistent fold state: one frame, several frames, or none yet
 State = DataFrame | tuple[DataFrame, ...] | None
@@ -47,18 +48,23 @@ def write_shards(df: DataFrame, out_dir: str, n_shards: int, key: str) -> None:
         shutil.rmtree(shard_tmp)
 
 
-def _write_state(state: State, path: str) -> None:
+def _write_state(state: State, path: str) -> tuple[StructType, ...]:
+    """Persist ``state`` under ``path``; returns the schemas it was
+    written with, so the read-back runs no schema-inference job."""
     frames = (state,) if isinstance(state, DataFrame) else state
     for i, frame in enumerate(frames):
         frame.write.mode("overwrite").parquet(os.path.join(path, str(i)))
+    return tuple(frame.schema for frame in frames)
 
 
-def _read_state(spark: SparkSession, path: str) -> State:
-    if not os.path.exists(path):
+def _read_state(
+    spark: SparkSession, path: str, schemas: tuple[StructType, ...] | None
+) -> State:
+    if schemas is None:
         return None
     frames = tuple(
-        spark.read.parquet(os.path.join(path, str(i)))
-        for i in range(len(os.listdir(path)))
+        spark.read.schema(schema).parquet(os.path.join(path, str(i)))
+        for i, schema in enumerate(schemas)
     )
     return frames[0] if len(frames) == 1 else frames
 
@@ -66,14 +72,15 @@ def _read_state(spark: SparkSession, path: str) -> State:
 def _replay_foreachbatch(
     spark: SparkSession,
     delta_dir: str,
+    schema: StructType,
     ckpt_dir: str,
     n_shards: int,
     apply_fn: Callable[[DataFrame, int], None],
     what: str,
 ) -> None:
-    """Stream ``delta_dir`` one file per trigger through ``apply_fn``
-    and raise unless exactly ``n_shards`` micro-batches ran."""
-    schema = spark.read.parquet(os.path.join(delta_dir, "batch_0.parquet")).schema
+    """Stream ``delta_dir`` (files of ``schema``) one file per trigger
+    through ``apply_fn`` and raise unless exactly ``n_shards``
+    micro-batches ran."""
     stream = (
         spark.readStream.schema(schema)
         .format("parquet")
@@ -128,28 +135,36 @@ def replay_fold(
         state_dirs = [os.path.join(work, "state_a"), os.path.join(work, "state_b")]
         os.makedirs(delta_dir)
         write_shards(source, delta_dir, n_shards, shard_key)
+        # what each state dir and the emitted rows were written with
+        written: dict[str, tuple[StructType, ...]] = {}
         if seed is not None:
-            _write_state(seed, state_dirs[1])
+            written[state_dirs[1]] = _write_state(seed, state_dirs[1])
 
         def _apply(batch_df: DataFrame, batch_id: int) -> None:
-            prev = _read_state(batch_df.sparkSession, state_dirs[(batch_id + 1) % 2])
+            prev_dir = state_dirs[(batch_id + 1) % 2]
+            prev = _read_state(batch_df.sparkSession, prev_dir, written.get(prev_dir))
             state, emitted = step(batch_df, batch_id, prev)
             if state is not None:
-                _write_state(state, state_dirs[batch_id % 2])
+                out_dir = state_dirs[batch_id % 2]
+                written[out_dir] = _write_state(state, out_dir)
             if emitted is not None:
                 emitted.write.mode("overwrite").parquet(
                     os.path.join(emit_dir, f"batch={batch_id}")
                 )
+                written[emit_dir] = (emitted.schema,)
 
         _replay_foreachbatch(
-            spark, delta_dir, os.path.join(work, "ckpt"), n_shards, _apply, prefix
+            spark, delta_dir, source.schema, os.path.join(work, "ckpt"),
+            n_shards, _apply, prefix,
         )
+        # the read appends the batch=<id> partition column
         emitted = (
-            spark.read.parquet(emit_dir).drop("batch")
-            if os.path.exists(emit_dir)
+            spark.read.schema(written[emit_dir][0]).parquet(emit_dir).drop("batch")
+            if emit_dir in written
             else None
         )
-        final = _read_state(spark, state_dirs[(n_shards + 1) % 2])
+        final_dir = state_dirs[(n_shards + 1) % 2]
+        final = _read_state(spark, final_dir, written.get(final_dir))
         return finish(final, emitted).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)

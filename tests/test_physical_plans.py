@@ -295,20 +295,29 @@ def test_rolling_fingerprint_shuffles_hash_not_text(spark, sf_dir, monkeypatch):
     """The fingerprint groupBy must exchange on the 8-byte fingerprint
     only — document text must never cross the wire (X4 scale shape).
 
-    The scale shape is pinned with the catalog scan floor disabled:
-    at production scale the floor is a structural no-op (row groups >=
-    parallelism short-circuits it), so the floor-off plan IS the
-    at-scale plan. With the floor on (the local-layout repair, r12),
-    the only extra exchange allowed is the doc_id-keyed layout floor
-    itself."""
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_FLOOR", "0")
-    plan = formatted_plan(spark, "text_rolling_fingerprint", sf_dir)
+    The scale shape is pinned with the catalog footer record reporting
+    at least ``defaultParallelism`` row groups: at production scale the
+    scan floor is a structural no-op (row groups >= parallelism
+    short-circuits it), so that plan IS the at-scale plan. With the
+    local layout (the floor's repair, r12), the only extra exchange
+    allowed is the doc_id-keyed layout floor itself."""
+    from env_data_pipeline_spark import catalog
+
+    footer = catalog._footer
+    par = spark.sparkContext.defaultParallelism
+
+    def at_scale(session, path):
+        rec = footer(session, path)
+        return rec._replace(row_groups=max(rec.row_groups, par))
+
+    with monkeypatch.context() as m:
+        m.setattr(catalog, "_footer", at_scale)
+        plan = formatted_plan(spark, "text_rolling_fingerprint", sf_dir)
     ex = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
     assert ex, "expected one hash exchange for the fingerprint agg"
     for keys in ex:
         assert "fingerprint" in keys
         assert "text" not in keys
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_FLOOR", "1")
     plan = formatted_plan(spark, "text_rolling_fingerprint", sf_dir)
     for keys in re.findall(r"hashpartitioning\(([^)]*)\)", plan):
         assert "fingerprint" in keys or keys.startswith("doc_id"), keys

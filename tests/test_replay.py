@@ -56,11 +56,12 @@ def test_replay_guard_rejects_collapsed_replay(spark, tmp_path):
 
     delta_dir = tmp_path / "deltas"
     delta_dir.mkdir()
-    write_shards(spark.range(10), str(delta_dir), 1, "id")
+    source = spark.range(10)
+    write_shards(source, str(delta_dir), 1, "id")
     with pytest.raises(
         RuntimeError, match=r"collapsed to 1 batch\(es\); expected 2"
     ):
         _replay_foreachbatch(
-            spark, str(delta_dir), str(tmp_path / "ckpt"), 2,
+            spark, str(delta_dir), source.schema, str(tmp_path / "ckpt"), 2,
             lambda _df, _batch_id: None, "guard",
         )

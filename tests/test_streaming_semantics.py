@@ -14,11 +14,19 @@ from pyspark.sql import functions as F
 
 from pyspark.sql import types as T
 
-from env_data_pipeline_spark.streaming.event_trigger import _events_stream_schema
-
-# this suite stages its own nanos-as-long files (the legacy vintage),
-# so the long-typed schema is always the right declaration here
-EVENTS_STREAM_SCHEMA = _events_stream_schema(T.LongType())
+# this suite stages its own events files with ts as nanos-since-epoch
+# longs (the legacy vintage as Spark reads it), so it declares their
+# schema itself
+EVENTS_STREAM_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.LongType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
 
 BASE_S = 1_700_000_000  # epoch seconds; windows floor to the hour
 

@@ -15,6 +15,7 @@ import os
 from pyspark.sql import functions as F
 
 from env_data_pipeline_spark.catalog import TABLES, events_ts_vintage, table
+from env_data_pipeline_spark.observe import observe
 
 
 def test_every_base_table_loads(spark, sf_dir):
@@ -58,7 +59,7 @@ def test_all_sf_dirs_share_events_vintage(spark, sf_dir):
 
 def test_vintage_cache_invalidates_on_regeneration(spark, tmp_path):
     """The driver regenerates testdata at the SAME path between rounds;
-    the vintage probe must re-run when the file changes (size/mtime),
+    the footer probe must re-run when the file changes (size/mtime),
     or a long-lived session would build timestamps with the stale
     vintage — the exact failure class the probe exists to prevent."""
     import shutil
@@ -68,21 +69,34 @@ def test_vintage_cache_invalidates_on_regeneration(spark, tmp_path):
     src = tmp_path / "sfY"
     src.mkdir()
     shutil.copy("/root/testdata/sf0.001/events.parquet", src / "events.parquet")
+
+    def n_records() -> int:
+        return sum(1 for k in catalog._FOOTERS if k[0].startswith(str(src)))
+
     v1 = events_ts_vintage(spark, str(src))
-    n_before = sum(1 for k in catalog._TS_VINTAGE_CACHE if k[0].startswith(str(src)))
-    assert n_before == 1
+    assert n_records() == 1
     # same bytes, same mtime -> cached (no new entry)
     events_ts_vintage(spark, str(src))
-    assert (
-        sum(1 for k in catalog._TS_VINTAGE_CACHE if k[0].startswith(str(src))) == 1
-    )
+    assert n_records() == 1
     # touch the file (regeneration surrogate) -> must re-probe under a new key
     os.utime(src / "events.parquet")
     v2 = events_ts_vintage(spark, str(src))
     assert v2 == v1
-    assert (
-        sum(1 for k in catalog._TS_VINTAGE_CACHE if k[0].startswith(str(src))) == 2
-    )
+    assert n_records() == 2
+
+
+def test_warm_base_table_read_runs_no_spark_job(spark, sf_dir):
+    """Once a base table's footer record exists, ``table`` reads with
+    the recorded schema: a second read of every base table (events and
+    its ts normalization included) runs no schema-inference job."""
+    for name in TABLES:
+        table(spark, sf_dir, name)
+    record = observe(spark, lambda: [table(spark, sf_dir, n) for n in TABLES])
+    assert record["jobs"] == 0, record["jobs"]
+    for name, df in zip(TABLES, record["value"]):
+        if name != "events":  # its ts is normalized (pinned above)
+            path = os.path.join(sf_dir, f"{name}.parquet")
+            assert df.schema == spark.read.parquet(path).schema, name
 
 
 def test_nanos_flag_does_not_disturb_micros_coread(spark, sf_dir):
