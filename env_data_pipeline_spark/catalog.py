@@ -84,10 +84,10 @@ class _Footer(NamedTuple):
 
 
 # (path, size, mtime_ns) -> footer record. Keyed on the file's size and
-# mtime, NOT the path alone, because the driver regenerates
-# /root/testdata in place between rounds: a session that outlives a
-# refresh must re-probe, or it would read with the stale schema (same
-# signature discipline as fixtures._source_signature).
+# mtime, NOT the path alone, because the test tables are regenerated in
+# place: a session that outlives a refresh must re-probe, or it would
+# read with the stale schema (same signature discipline as
+# fixtures._source_signature).
 _FOOTERS: dict[tuple[str, int, int], _Footer] = {}
 
 
