@@ -112,6 +112,15 @@ def _stats(rs: list[float]) -> tuple[float, float]:
     return med, ((rs[-1] - rs[0]) / med if med else 0.0)
 
 
+def _missing_path(ex) -> str | None:
+    """The path a Spark ``AnalysisException`` failed to find, or None
+    for any other analysis error: how the x10 tier tells a table it
+    does not replicate from a real failure."""
+    if ex.getCondition() != "PATH_NOT_FOUND":
+        return None
+    return ex.getMessageParameters()["path"]
+
+
 def timed_runs(execute, runs: int, floor: float, clock=time.perf_counter) -> list[float]:
     """``runs`` recorded runs of ``execute``. Each run calls it back to
     back until ``floor`` seconds of ``clock`` have passed and records
@@ -503,9 +512,9 @@ def main() -> None:
                 try:
                     x10[n] = _measure_query(spark, n, x10_dir, sample_shuffle=False)
                 except AnalysisException as ex:
-                    if ex.getCondition() != "PATH_NOT_FOUND":
+                    path = _missing_path(ex)
+                    if path is None:
                         raise
-                    path = ex.getMessageParameters()["path"]
                     skipped[n] = f"reads {path}, which the x10 tier does not replicate"
             return n in x10
 

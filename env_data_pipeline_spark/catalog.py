@@ -34,8 +34,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # ---------------------------------------------------------------------------
 # Layout-adaptive scan-parallelism floor (optimization guide §2.5:
 # "input skew — one huge unsplittable file … otherwise repartition
@@ -98,9 +96,14 @@ def _footer(spark: SparkSession, path: str) -> _Footer:
 
     A TIMESTAMP(NANOS) column only resolves under the ``nanosAsLong``
     legacy flag (as ``bigint``), so the nanos resolution error sets the
-    flag and infers again. Any other failure (missing file
-    mid-regeneration, permissions) propagates and is not recorded."""
-    st = os.stat(path)
+    flag and infers again. A missing file raises Spark's PATH_NOT_FOUND
+    error (bench.py's x10 tier skips on it); any other failure
+    propagates. A failed probe is not recorded."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        spark.read.parquet(path)  # raises AnalysisException(PATH_NOT_FOUND)
+        raise
     key = (path, st.st_size, st.st_mtime_ns)
     hit = _FOOTERS.get(key)
     if hit is not None:
@@ -176,7 +179,7 @@ def read_events(
     from pyspark.sql import functions as F
 
     schema = _footer(spark, os.path.join(sf_dir, "events.parquet")).schema
-    vintage = schema["ts"].dataType.simpleString()
+    vintage = events_ts_vintage(spark, sf_dir)
     if vintage == "bigint":
         # the record may come from another session's probe
         _read_nanos_as_long(spark)

@@ -291,10 +291,6 @@ def scd2_apply(
     )
 
 
-#: the mergeable partial-aggregate state this module maintains
-PARTIAL_AGGS = ("n_rows", "sum_value", "min_value", "max_value")
-
-
 def partial_aggs(df: DataFrame, keys: list[str], value: str) -> DataFrame:
     """Per-group mergeable state: count/sum/min/max over ``value``.
     Everything derivable from these (avg = sum/count) is computed at

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from env_data_pipeline_spark.catalog import TABLES, events_ts_vintage, table
@@ -97,6 +98,34 @@ def test_warm_base_table_read_runs_no_spark_job(spark, sf_dir):
         if name != "events":  # its ts is normalized (pinned above)
             path = os.path.join(sf_dir, f"{name}.parquet")
             assert df.schema == spark.read.parquet(path).schema, name
+
+
+def test_missing_base_table_raises_spark_path_not_found(spark, tmp_path, monkeypatch):
+    """A tier that replicates only some tables (bench.py's x10 tier
+    copies documents, embeddings, lineitem and events) must fail a read
+    of any other table with Spark's PATH_NOT_FOUND error, through
+    ``table`` and through the fixture fallback alike, so the bench
+    skips that query instead of crashing."""
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    import bench
+    from env_data_pipeline_spark.sources import fixtures
+
+    monkeypatch.setattr(fixtures, "_CACHE_ROOT", str(tmp_path / "store"))
+    src = tmp_path / "sfX"
+    src.mkdir()
+    shutil.copy("/root/testdata/sf0.001/events.parquet", src / "events.parquet")
+    for read in (
+        lambda: table(spark, str(src), "region"),
+        lambda: fixtures.ensure_fixtures(spark, str(src), ["requests"]),
+    ):
+        with pytest.raises(AnalysisException) as info:
+            read()
+        path = bench._missing_path(info.value)
+        assert path is not None and path.endswith(".parquet"), path
+        assert os.path.basename(path) in {f"{n}.parquet" for n in TABLES}, path
 
 
 def test_nanos_flag_does_not_disturb_micros_coread(spark, sf_dir):
