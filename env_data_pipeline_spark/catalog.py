@@ -233,7 +233,9 @@ def register_query_views(
     with the query plan (filters push INTO the view) and nothing
     materializes until an action. Some builders are not lazy
     (``streaming_*`` queries run a full replay; training and iterative
-    queries run eager checkpoints), so the caller names what it wants.
+    queries materialize their lineage cuts, each ``localCheckpoint``
+    running its jobs when it is called), so the caller names what it
+    wants.
     Returns the names registered."""
     from env_data_pipeline_spark.plans import registry
 

@@ -386,11 +386,13 @@ def connected_components(
     """
     fwd = pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     edges = fwd.union(fwd.select(F.col("d").alias("s"), F.col("s").alias("d")))
+    # lineage cut (a): every pass reads the edge set
     edges = edges.distinct().localCheckpoint()
     labels = (
         edges.select(F.col("s").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
+        # lineage cut (a): the first pass and the first probe read it
         .localCheckpoint()
     )
     # Probe convergence only every PROBE_EVERY passes: each probe is a
@@ -409,6 +411,7 @@ def connected_components(
             prop.unionByName(labels.select("node", "label"))
             .groupBy("node")
             .agg(F.min("label").alias("label"))
+            # lineage cut (a): the plan would otherwise grow with every pass
             .localCheckpoint()
         )
         labels = new

@@ -756,17 +756,11 @@ def dsir_scored_docs(
     from pyspark.sql import Window
 
     if ilr is None:
-        # ONE gram+md5 pass (r12): the ilr build needs the full
-        # corpus's gram stream and the scorer needs the raw subset of
-        # the SAME stream — materialize it once (gram string dropped
-        # first; only the hash and identity columns persist) and feed
-        # both. The two consumers are dependency-ordered (scoring
-        # joins the broadcast ilr), so the lazy checkpoint cannot be
-        # raced into double materialization.
+        # lineage cut (b): the ratio build and the scorer read one gram stream
         grams_all = (
             _dsir_grams(docs)
             .select("doc_id", "lang", "source", "gram_hash")
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
         ilr = dsir_bucket_logratios(grams_all, target_source, buckets)
         keyed = dsir_score_against(
@@ -896,9 +890,10 @@ def importance_kl_shift(
     (counts, scoring, selected-gram counts)."""
     from pyspark.sql import Window
 
+    # lineage cut (b): the scoring ratios and the KL terms both read the counts
     counts = dsir_bucket_counts(
         _dsir_grams(docs), target_source, buckets
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint()
     w = Window.partitionBy()
     ilr = counts.select(
         "b",

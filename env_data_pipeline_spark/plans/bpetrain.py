@@ -10,7 +10,7 @@ included, exactly as the reference implementation counts — then
 (b) merge the single most frequent pair everywhere it occurs,
 leftmost-first non-overlapping within each word.
 
-Engine shape: the same bounded driver-loop-with-lazy-checkpoint idiom
+Engine shape: the same bounded driver-loop-with-lineage-cut idiom
 as k-core / PageRank (plans/graphops.py) — _BPE_ROUNDS (24) rounds,
 each one |distinct words|-sized state scan + a pair-count groupBy + a
 1-row argmax broadcast back onto the state. The segmentation is a
@@ -161,6 +161,7 @@ def train_merges(words: DataFrame, rounds: int) -> DataFrame:
     """Learn ``rounds`` BPE merges from a (word, wc) frame; returns
     (merge_round, pair_left, pair_right, merged, freq). THE kernel —
     the registered query and tests share it."""
+    # lineage cut (a): the first round's pair count and merge both read it
     state = words.select(
         # the wrapped-piece encoding needs '|'-free words; corpus
         # words are whitespace-split so the only reachable violation
@@ -180,14 +181,15 @@ def train_merges(words: DataFrame, rounds: int) -> DataFrame:
         .alias("word"),
         "wc",
         F.regexp_replace("word", "(.)", "|$1|").alias("seg"),
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     merge_frames: list[DataFrame] = []
     for i in range(rounds):
         best = (
             _pair_counts(state)
             .orderBy(F.desc("freq"), "l", "r")
             .limit(1)
-            .localCheckpoint(eager=False)
+            # lineage cut (a): the merge list and the state update both read it
+            .localCheckpoint()
         )
         merge_frames.append(
             best.select(
@@ -223,7 +225,8 @@ def train_merges(words: DataFrame, rounds: int) -> DataFrame:
                 .otherwise(F.replace(F.col("seg"), pat, rep))
                 .alias("seg"),
             )
-            .localCheckpoint(eager=False)
+            # lineage cut (a): the plan would otherwise grow with every round
+            .localCheckpoint()
         )
     out = merge_frames[0]
     for mf in merge_frames[1:]:

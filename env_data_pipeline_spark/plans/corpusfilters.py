@@ -202,9 +202,8 @@ def streaming_perplexity_tier_refresh(
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "text"
     )
-    lm = L.ppl_unigram_lm(
-        docs, _EVAL_SOURCE, _PPL_B
-    ).localCheckpoint(eager=True)
+    # lineage cut (b): the offline ranking and every batch read the frozen LM
+    lm = L.ppl_unigram_lm(docs, _EVAL_SOURCE, _PPL_B).localCheckpoint()
     offline = L.ppl_scored_docs(
         docs, _EVAL_SOURCE, _PPL_B, _PPL_STRATA, lm=lm
     )
@@ -237,7 +236,8 @@ def streaming_perplexity_tier_refresh(
             "m_i",
             "m_d",
         )
-        .localCheckpoint(eager=True)
+        # lineage cut (b): every batch reads the standing boundaries
+        .localCheckpoint()
     )
     raw = docs.filter(F.col("source") != _EVAL_SOURCE)
     empty = spark.createDataFrame(

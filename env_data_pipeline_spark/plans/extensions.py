@@ -373,14 +373,8 @@ def dedup_lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts onto the shingle stream; the intersection count
     shuffles (doc_a, doc_b) pair keys only.
     """
-    # lazy checkpoint: cand feeds three consumers (doc filter, pair
-    # broadcast, final assembly) — one LSH run, not three; eager=False
-    # keeps query construction side-effect-free (laziness discipline)
-    cand = (
-        _lsh_pairs(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=False)
-    )
+    # lineage cut (b): the doc filter, the pair broadcast and the assembly read it
+    cand = _lsh_pairs(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint()
     sh = D.shingles(_aug_docs(spark, sf_dir), distinct=True)
     # restrict the shingle stream to docs that appear in ANY candidate
     # pair BEFORE anything shuffles — the corpus never re-shuffles
@@ -501,14 +495,10 @@ def dedup_delta_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing, same discipline as dedup_lsh_verified_pairs."""
     aug = _aug_docs(spark, sf_dir)
     is_delta = F.col("doc_id") % _DELTA_MOD == _DELTA_REM
-    # lazy-checkpointed: the delta and corpus branches below otherwise
-    # EACH re-derive the whole shingle->minhash pipeline (the query's
-    # single most expensive kernel) — one materialization of the
-    # |docs|x4-row band table halves the signature work and collapses
-    # the r11 plan's ~35 exchanges (guide §2.4 / §3.3 plan truncation)
+    # lineage cut (b): the delta and the corpus branches both read the band table
     bands = D.band_table(
         D.minhash_signatures(D.shingles(aug, distinct=False))
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     delta_bands = bands.filter(is_delta).select(
         F.col("doc_id").alias("delta_id"), "band", "band_key"
     )
@@ -517,7 +507,8 @@ def dedup_delta_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_bands.join(F.broadcast(delta_bands), ["band", "band_key"])
         .select("delta_id", F.col("doc_id").alias("corpus_id"))
         .distinct()
-        .localCheckpoint(eager=False)
+        # lineage cut (b): the doc filter, the delta side and the scoring read it
+        .localCheckpoint()
     )
     sh = D.shingles(aug, distinct=True)
     cand_docs = (
@@ -2185,7 +2176,8 @@ def multimodal_phash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
             "gain",
         )
     )
-    fp = M.phash_fingerprints(assets).localCheckpoint(eager=False)
+    # lineage cut (b): the band table and both fingerprint lookups read it
+    fp = M.phash_fingerprints(assets).localCheckpoint()
     bands = fp.select(
         "asset_id",
         F.explode(

@@ -5,10 +5,10 @@ cover:
 
 - ``part_pagerank_copurchase``: PageRank power iteration over the part
   co-purchase graph — the canonical ITERATIVE algorithm done the way
-  Spark wants it (a driver loop of narrow join+agg stages with lazy
-  lineage checkpoints), with every arithmetic step in exact BIGINT
-  fixed-point so a DuckDB oracle can replay all five iterations as
-  unrolled CTEs and hash-match.
+  Spark wants it (a driver loop of narrow join+agg stages with a
+  lineage cut every other iteration), with every arithmetic step in
+  exact BIGINT fixed-point so a DuckDB oracle can replay all five
+  iterations as unrolled CTEs and hash-match.
 - ``join_key_skew_profile``: the pre-flight skew audit a 100 TB join
   plan starts from — per join-key family, the hottest key, its mass,
   and the hot/mean ratio that decides whether salting is needed.
@@ -110,7 +110,8 @@ def _power_iterate(edges: DataFrame, rank: DataFrame, iters: int) -> DataFrame:
             ),
         )
         if i % 2 == 1:
-            rank = rank.localCheckpoint(eager=False)
+            # lineage cut (a): the plan would otherwise grow with every iteration
+            rank = rank.localCheckpoint()
     return rank
 
 
@@ -136,17 +137,14 @@ def part_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges⋈contrib equi-join + dst-keyed partial-agg shuffle, and one
     shuffle_hash join back onto the |parts|-sized rank table (see
     _power_iterate — contrib/inc grow with the data, so they are never
-    broadcast); lazy localCheckpoints every other iteration stop
-    lineage/plan blow-up exactly as connected_components does
+    broadcast); a localCheckpoint every other iteration stops the
+    plan growing with the iteration count, as connected_components does
     (extensions/dedup.py). Edges are bounded by sum(basket²) and nodes
     by |parts|, so the per-iteration shuffle carries (node, bigint)
     pairs only — vectors of state never widen with iteration count.
     """
-    edges = (
-        _copurchase_edges(spark, sf_dir)
-        .repartition("src")
-        .localCheckpoint(eager=False)
-    )
+    # lineage cut (a): every iteration's join reads the edge set
+    edges = _copurchase_edges(spark, sf_dir).repartition("src").localCheckpoint()
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -164,7 +162,9 @@ def part_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(15 * base_unit) div 100").alias("base"),
             F.col("base_unit").alias("rank"),
         )
-        .localCheckpoint(eager=False)
+        # lineage cut (a): the loop's first two iterations read it four times;
+        # without it sf0.1 qprofile medians were 6.72/6.92 s against 6.32/5.04 s
+        .localCheckpoint()
     )
     rank = _power_iterate(edges, rank, _PR_ITERS)
     return (
@@ -376,16 +376,9 @@ def _oriented_triangle_stream(edges):
     where ``tri`` has one row (a, b, c) per closed triangle. See
     part_triangle_participation's docstring for the scale argument;
     both the exact query and the sampled estimator run this same
-    pipeline, differing only in the edge set fed in.
-
-    Both checkpoints are EAGER (r12): the wedge x/y sides, the closure
-    probe and the degree frame all consume these frames, and AQE
-    materializes independent downstream stages CONCURRENTLY — a lazy
-    checkpoint is then computed several times in parallel before any
-    copy lands in the block store (measured: run-to-run swings up to
-    10x on the sampled tier from exactly this race). Eager = one
-    synchronous materialization; every consumer reads stored blocks."""
-    edges = edges.localCheckpoint(eager=True)
+    pipeline, differing only in the edge set fed in."""
+    # lineage cut (b): the degree frame and the orientation both read the edges
+    edges = edges.localCheckpoint()
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -399,7 +392,8 @@ def _oriented_triangle_stream(edges):
             | ((F.col("dega") == F.col("degb")) & (F.col("src") < F.col("dst")))
         )
         .select(F.col("src").alias("a"), F.col("dst").alias("b"), F.col("degb"))
-        .localCheckpoint(eager=True)
+        # lineage cut (b): both wedge sides and the closure probe read it
+        .localCheckpoint()
     )
     x = oriented.select(F.col("a"), F.col("b"), F.col("degb"))
     y = oriented.select(
@@ -722,16 +716,16 @@ def part_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the edge build is the merge-hinted basket self-join the
     triangle queries already pay. Each peel round is edge⋈nodes
     semi-joins + a groupBy on src — node-frame-sized state, with a
-    LAZY localCheckpoint per round truncating the logical plan so
+    localCheckpoint per round truncating the logical plan so
     analysis cost stays linear in rounds (the driver loop is the
-    Spark idiom for bounded iteration; cf. PageRank above, same lazy
-    checkpoints). At 100 TB the
+    Spark idiom for bounded iteration; cf. PageRank above). At 100 TB the
     node frame shuffles on its key — no broadcast of a data-sized
     side, no driver collect. Rounds are bounded (=14) and both
     engines run all of them, so the comparison never depends on a
     convergence test; tests/test_graphops.py asserts fixpoint on the
     shipped data so the bounded answer IS the true core."""
-    edges = _support_edges(spark, sf_dir).localCheckpoint(eager=False)
+    # lineage cut (a): every peel round reads the edge set
+    edges = _support_edges(spark, sf_dir).localCheckpoint()
     nodes = edges.select(F.col("src").alias("node")).distinct()
     for _ in range(_KCORE_ITERS):
         a = nodes.select(F.col("node").alias("src"))
@@ -743,7 +737,8 @@ def part_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= _KCORE_K)
             .select(F.col("src").alias("node"))
-            .localCheckpoint(eager=False)
+            # lineage cut (a): the plan would otherwise grow with every round
+            .localCheckpoint()
         )
     a = nodes.select(F.col("node").alias("src"))
     b = nodes.select(F.col("node").alias("dst"))
@@ -789,7 +784,9 @@ def part_copurchase_reach_3hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle keyed on the join column. The hop bound makes cost
     strictly bounded — the honest contract at 100 TB where transitive
     closure is not."""
-    edges = _support_edges(spark, sf_dir).localCheckpoint(eager=False)
+    # lineage cut (b): the seed set and all three expansions read it; without it
+    # sf0.1 qprofile medians were 3.91/3.45 s against 2.71/3.06 s with it
+    edges = _support_edges(spark, sf_dir).localCheckpoint()
     h0 = (
         edges.select(F.col("src").alias("node"))
         .filter(F.col("node") % _REACH_MOD == _REACH_RES)
@@ -902,19 +899,16 @@ def part_ppr_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shared _power_iterate loop — co-partitioned shuffle_hash joins,
     never a data-sized broadcast; rank table is |parts|-sized) —
     except contributions are nonzero only within the expanding seed
-    neighborhood, so early iterations move strictly less data. Lazy
-    localCheckpoints every other iteration cap lineage.
+    neighborhood, so early iterations move strictly less data. A
+    localCheckpoint every other iteration caps lineage.
 
     Degenerate input (ADVICE r9): an empty seed set (no part with
     partkey % _REACH_MOD == _REACH_RES) means zero teleport mass
     everywhere — both engines return an empty ranking (engine: ns=0
     zeroes every rank via the NULLIF-guarded division, and the
     rank > 0 filter drops all rows; oracle: same guard)."""
-    edges = (
-        _copurchase_edges(spark, sf_dir)
-        .repartition("src")
-        .localCheckpoint(eager=False)
-    )
+    # lineage cut (a): every iteration's join reads the edge set
+    edges = _copurchase_edges(spark, sf_dir).repartition("src").localCheckpoint()
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -932,7 +926,9 @@ def part_ppr_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0)
             .alias("base"),
         )
-        .localCheckpoint(eager=False)
+        # lineage cut (a): the loop's first two iterations read it four times;
+        # without it sf0.1 qprofile medians were 7.34/6.48 s against 5.54/5.35 s
+        .localCheckpoint()
     )
     rank = _power_iterate(edges, rank, _PPR_ITERS)
     return (

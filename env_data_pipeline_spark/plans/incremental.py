@@ -432,9 +432,9 @@ def orders_join_view_incremental_refresh(
     equality proves the decomposition misses and double-counts
     nothing.
 
-    Scale: the stored view state (localCheckpointed here, a table in
-    production) is |groups|-sized; every delta term joins a DELTA side
-    against a base side on the join key — none of the three terms ever
+    Scale: the stored view state (a table in production) is
+    |groups|-sized; every delta term joins a DELTA side against a base
+    side on the join key — none of the three terms ever
     rejoins base-with-base, so refresh cost is O(|dA| + |dB| + join
     fan-out of the deltas), independent of |A |><| B|. The two
     delta-vs-base joins shuffle only the (already key-partitioned)
@@ -462,7 +462,7 @@ def orders_join_view_incremental_refresh(
     # the stored artifact: view state as of the last refresh
     state_old = INC.partial_aggs(
         view_rows(a_old, b_old), INC.JV_KEYS, "rev_units"
-    ).localCheckpoint(eager=False)
+    )
     delta_rows = (
         view_rows(da, b_old)
         .unionByName(view_rows(a_old, db))

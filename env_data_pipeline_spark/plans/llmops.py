@@ -1018,7 +1018,8 @@ def streaming_token_budget_refresh(
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "source", "lang", "text"
     )
-    wt = _word_tokens(spark, sf_dir).localCheckpoint(eager=True)
+    # lineage cut (b): every batch reads the trained vocabulary
+    wt = _word_tokens(spark, sf_dir).localCheckpoint()
     empty = spark.createDataFrame(
         [],
         "source string, lang string, n_docs bigint, "
@@ -1344,12 +1345,10 @@ def streaming_dsir_gate_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "text"
     )
-    # ONE training pass: the checkpointed ilr feeds both the offline
-    # selection (whose boundary becomes thr) and every micro-batch's
-    # scoring (review finding, r12)
+    # lineage cut (b): the offline selection and every batch read the ratios
     ilr = L.dsir_bucket_logratios(
         L._dsir_grams(docs), _EVAL_SOURCE, _DSIR_B
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint()
     scored_full = L.dsir_scored_docs(
         docs, _EVAL_SOURCE, _DSIR_B, _DSIR_KEEP_NUM, _DSIR_KEEP_DEN,
         _DSIR_STRATA, ilr=ilr,
@@ -1358,7 +1357,8 @@ def streaming_dsir_gate_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored_full.filter(F.col("selected"))
         .groupBy("salt")
         .agg(F.min("sel_key").alias("thr"))
-        .localCheckpoint(eager=True)
+        # lineage cut (b): every batch reads the standing thresholds
+        .localCheckpoint()
     )
     raw = docs.filter(F.col("source") != _EVAL_SOURCE)
     empty = spark.createDataFrame(

@@ -9,7 +9,7 @@ at scale. This module is that pattern in-engine: logistic-style
 regression on HASHED unigram features (the fastText trick: 64
 md5-bucket features + bias, binary presence), trained by a bounded
 driver loop of full-batch gradient steps — the same
-driver-loop-with-lazy-checkpoint idiom as BPE / PageRank / k-core
+driver-loop-with-lineage-cut idiom as BPE / PageRank / k-core
 (plans/bpetrain.py, plans/graphops.py) — with the DuckDB oracle
 unrolling the identical rounds as MATERIALIZED CTEs.
 
@@ -120,8 +120,9 @@ def train_quality_weights(docs: DataFrame, rounds: int = _QC_ROUNDS) -> DataFram
     kernel; the registered queries, the artifact build, and the
     pure-Python reference test share it."""
     spark = docs.sparkSession
-    feats = doc_features(docs).localCheckpoint(eager=False)
-    lab = doc_labels(docs).localCheckpoint(eager=False)
+    # lineage cut (a): every round reads the features and the labels
+    feats = doc_features(docs).localCheckpoint()
+    lab = doc_labels(docs).localCheckpoint()
     nn = lab.agg(F.count(F.lit(1)).alias("n"))
     w = spark.range(_QC_D + 1).select(
         F.col("id").cast("int").alias("fid"),
@@ -162,7 +163,8 @@ def train_quality_weights(docs: DataFrame, rounds: int = _QC_ROUNDS) -> DataFram
                     f"wu - (coalesce(grad, CAST(0 AS BIGINT)) * {_QC_LR}) div n"
                 ).alias("wu"),
             )
-            .localCheckpoint(eager=False)
+            # lineage cut (a): the plan would otherwise grow with every round
+            .localCheckpoint()
         )
     return w
 
@@ -446,9 +448,7 @@ def streaming_quality_score_refresh(
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
-    weights = quality_weights_artifact(spark, sf_dir).localCheckpoint(
-        eager=True
-    )
+    weights = quality_weights_artifact(spark, sf_dir)
     empty = spark.createDataFrame(
         [],
         "source string, n_docs bigint, n_pred_keep bigint, "

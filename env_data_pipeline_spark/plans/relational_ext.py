@@ -3174,7 +3174,7 @@ def events_user_lifecycle_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "widx",
         F.lag("widx").over(w).alias("lagw"),
         F.lead("widx").over(w).alias("leadw"),
-    ).localCheckpoint(eager=False)
+    )
     states = seq.groupBy("widx").agg(
         F.sum(F.when(F.col("lagw").isNull(), 1).otherwise(0)).alias("n_new"),
         F.sum(

@@ -176,7 +176,7 @@ def top_value_partkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The original's HAVING-vs-global-scalar subquery becomes an
     explicit one-row broadcast: the per-part aggregate is computed
-    once (a lazy localCheckpoint truncates the lineage so the
+    once (a localCheckpoint truncates the lineage so the
     threshold branch and the filter branch share ONE lineitem scan —
     the 100 TB mistake would be two full scans), its global SUM
     reduces to a single row, and the threshold filter is a broadcast
@@ -198,9 +198,8 @@ def top_value_partkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _units(F.col("l_extendedprice") * (1 - F.col("l_discount")))
             ).alias("value_units")
         )
-        # lazy lineage cut: both consumers (threshold + filter) read the
-        # SAME materialized aggregate instead of re-scanning lineitem
-        .localCheckpoint(eager=False)
+        # lineage cut (d): the shared-scan plan pin asserts it
+        .localCheckpoint()
     )
     threshold = v.agg(
         (F.sum("value_units") * 0.001).cast("bigint").alias("threshold_units")
@@ -294,7 +293,7 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppkey, exactly like the original's spec.
 
     Scale: one suppkey aggregate (map-side combined), a one-row
-    broadcast, and dimension broadcasts — the lazy localCheckpoint on
+    broadcast, and dimension broadcasts — the localCheckpoint on
     the revenue view means the MAX branch and the equality branch
     share one lineitem scan.
     """
@@ -302,11 +301,12 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1999-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1999-04-01").cast("timestamp"))
     )
+    # lineage cut (d): the shared-scan plan pin asserts it
     r = li.groupBy("l_suppkey").agg(
         F.sum(
             _units(F.col("l_extendedprice") * (1 - F.col("l_discount")))
         ).alias("rev_units")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     mx = r.agg(F.max("rev_units").alias("max_units"))
     s = table(spark, sf_dir, "supplier")
     n = table(spark, sf_dir, "nation")

@@ -343,14 +343,10 @@ def similarity_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") / _INIT_STEP).cast("int").alias("cluster_id"),
         F.col("v").alias("c"),
     )
-    # materialize the trained index artifact ONCE (K=8 tiny rows):
-    # both serving consumers (corpus assignment + query probe) read
-    # the centroids, and without the checkpoint each would re-execute
-    # the whole training subtree — at scale a trained index is a
-    # stored artifact, never recomputed per consumer
-    cent = X.kmeans_train(pts, init, iters=_ITERS, quant=float(_QGRID)).localCheckpoint(
-        eager=True
-    )
+    # lineage cut (b): the corpus assignment and the query probe both read it
+    cent = X.kmeans_train(
+        pts, init, iters=_ITERS, quant=float(_QGRID)
+    ).localCheckpoint()
     return X.topk_ivf_cells(
         table(spark, sf_dir, "embeddings"),
         cent,
@@ -770,13 +766,10 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") / _INIT_STEP).cast("int").alias("cluster_id"),
         F.col("v").alias("c"),
     )
-    # trained coarse cells materialized once (see
-    # similarity_topk_ivf_trained): corpus assignment and query probe
-    # both consume them, and re-running Lloyd training per consumer is
-    # not a plan a vector store would ever execute
-    coarse = X.kmeans_train(pts, init, iters=_ITERS, quant=float(_QGRID)).localCheckpoint(
-        eager=True
-    )
+    # lineage cut (b): the corpus assignment and the query probe both read it
+    coarse = X.kmeans_train(
+        pts, init, iters=_ITERS, quant=float(_QGRID)
+    ).localCheckpoint()
     cb = X.pq_subvectors(
         pts.filter(
             (F.col("vec_id") % _PQ_STEP == 0)
@@ -1428,7 +1421,8 @@ def similarity_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pool = (
         rel.orderBy(F.desc("relevance_micro"), "vec_id")
         .limit(_MMR_POOL)
-        .localCheckpoint(eager=False)
+        # lineage cut (a): every greedy round reads the pool
+        .localCheckpoint()
     )
     a = pool.select(F.col("vec_id").alias("a"), F.col("embedding").alias("ea"))
     b = pool.select(F.col("vec_id").alias("b"), F.col("embedding").alias("eb"))
@@ -1441,7 +1435,8 @@ def similarity_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("sim_units"),
         )
-        .localCheckpoint(eager=False)
+        # lineage cut (a): every greedy round reads the pairwise sims
+        .localCheckpoint()
     )
     selected = (
         pool.orderBy(F.desc("relevance_micro"), "vec_id")
@@ -1475,7 +1470,8 @@ def similarity_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("mmr_score_micro"), "vec_id")
             .limit(1)
         )
-        selected = selected.unionByName(pick).localCheckpoint(eager=False)
+        # lineage cut (a): the plan would otherwise grow with every round
+        selected = selected.unionByName(pick).localCheckpoint()
     return selected.select(
         F.col("sel_rank").cast("int"),
         "vec_id",
@@ -1831,9 +1827,10 @@ def streaming_ivf_drift_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") / _INIT_STEP).cast("int").alias("cluster_id"),
         F.col("v").alias("c"),
     )
+    # lineage cut (b): the training counts, the base state and every batch read it
     cent = X.kmeans_train(
         snap, init, iters=_ITERS, quant=float(_QGRID)
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint()
     train_counts = (
         X.coarse_assign(X.coarse_scores(snap, cent, float(_QGRID)))
         .groupBy(F.col("cell").alias("cell_id"))
@@ -2302,7 +2299,8 @@ def embedding_power_iteration_pc1(
             "j",
             F.floor(F.col("x") * _PC1_GRID).cast("bigint").alias("xq"),
         )
-        .localCheckpoint(eager=False)
+        # lineage cut (a): both half-steps of every iteration read the long form
+        .localCheckpoint()
     )
     v = spark.range(_DIM).select(
         F.col("id").cast("int").alias("j"),
@@ -2343,7 +2341,8 @@ def embedding_power_iteration_pc1(
                 .cast("bigint")
                 .alias("vj"),
             )
-            .localCheckpoint(eager=False)
+            # lineage cut (a): the plan would otherwise grow with every iteration
+            .localCheckpoint()
         )
 
     def _unit_norm(df):

@@ -334,9 +334,8 @@ def streaming_dedup_index_refresh(spark: SparkSession, docs: DataFrame) -> DataF
             .select("d", "a")
             .distinct()
         )
-        cand = cand_idx.unionByName(cand_in).distinct().localCheckpoint(
-            eager=True
-        )
+        # lineage cut (b): the a-side filter, the intersection and the verdict read it
+        cand = cand_idx.unionByName(cand_in).distinct().localCheckpoint()
         # restrict the a-side (index + batch) shingles to CANDIDATE
         # participants BEFORE sizing or joining: the admitted index is
         # corpus-sized at scale and must never broadcast or shuffle
@@ -383,7 +382,8 @@ def streaming_dedup_index_refresh(spark: SparkSession, docs: DataFrame) -> DataF
                 .cast("bigint")
                 .alias("n_conflicts"),
             )
-            .localCheckpoint(eager=True)
+            # lineage cut (b): the new index state and the emitted rows both read it
+            .localCheckpoint()
         )
         admitted_ids = decisions.filter("admitted").select("doc_id")
         index = (

@@ -36,16 +36,22 @@ State = DataFrame | tuple[DataFrame, ...] | None
 
 def write_shards(df: DataFrame, out_dir: str, n_shards: int, key: str) -> None:
     """Materialize ``df`` as ``n_shards`` single-file parquet deltas
-    (split by ``key`` % n_shards), named so the file source lists them
-    deterministically (lexicographic order = shard order)."""
+    (split by ``key`` % n_shards) in one write, named so the file source
+    lists them deterministically (lexicographic order = shard order).
+    Raises if a shard got no file: the replay would lose its batch."""
+    build = os.path.join(out_dir, "_build")
+    # one task writes every shard, so each shard is exactly one file
+    df.coalesce(1).withColumn("_shard", F.col(key) % n_shards).write.mode(
+        "overwrite"
+    ).partitionBy("_shard").parquet(build)
     for i in range(n_shards):
-        shard_tmp = os.path.join(out_dir, f"_build_{i}")
-        df.filter(F.col(key) % n_shards == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(shard_tmp)
-        (part,) = glob.glob(os.path.join(shard_tmp, "part-*.parquet"))
-        os.rename(part, os.path.join(out_dir, f"batch_{i}.parquet"))
-        shutil.rmtree(shard_tmp)
+        parts = glob.glob(os.path.join(build, f"_shard={i}", "part-*.parquet"))
+        if len(parts) != 1:
+            raise RuntimeError(
+                f"shard {i} of {n_shards} wrote {len(parts)} files; expected 1"
+            )
+        os.rename(parts[0], os.path.join(out_dir, f"batch_{i}.parquet"))
+    shutil.rmtree(build)
 
 
 def _write_state(state: State, path: str) -> tuple[StructType, ...]:
@@ -165,6 +171,7 @@ def replay_fold(
         )
         final_dir = state_dirs[(n_shards + 1) % 2]
         final = _read_state(spark, final_dir, written.get(final_dir))
-        return finish(final, emitted).localCheckpoint(eager=True)
+        # lineage cut (c): the result must outlive the work dir removed below
+        return finish(final, emitted).localCheckpoint()
     finally:
         shutil.rmtree(work, ignore_errors=True)

@@ -93,7 +93,7 @@ def streaming_ivf_drift_refresh(
         bc = assigned.groupBy(F.col("cell").alias("cell_id")).agg(
             F.count(F.lit(1)).cast("bigint").alias("b_new")
         )
-        # read twice below (state write, metric): materialize once
+        # lineage cut (b): the state write and the metric both read it
         state = (
             prev.join(F.broadcast(bc), "cell_id", "left")
             .select(
@@ -103,7 +103,7 @@ def streaming_ivf_drift_refresh(
                 .cast("bigint")
                 .alias("n_new"),
             )
-            .localCheckpoint(eager=True)
+            .localCheckpoint()
         )
         w = Window.partitionBy()  # K-row frame, single partition
         shift = F.abs(

@@ -671,7 +671,7 @@ def test_q6_analog_pure_scan_aggregate(spark, sf_dir):
 
 def test_scalar_threshold_queries_share_one_fact_scan(spark, sf_dir):
     """Q11/Q15 analogs rejoin their own aggregate against a global
-    scalar (threshold / max). The lazy localCheckpoint must truncate
+    scalar (threshold / max). The localCheckpoint must truncate
     the lineage so BOTH consumers read the materialized aggregate —
     the formatted plan shows ExistingRDD scans and NO lineitem parquet
     scan (lineitem is read once, inside the checkpointed RDD)."""
@@ -836,7 +836,8 @@ def test_pagerank_never_broadcasts_node_state(spark, sf_dir):
     appears anywhere."""
     plan = formatted_plan(spark, "part_pagerank_copurchase", sf_dir)
     # the every-other-iteration localCheckpoint truncates the visible
-    # plan to the LAST two iterations — 2 joins each, all shuffled-hash
+    # plan to the last iteration: its 2 shuffled-hash joins, each named
+    # once in the tree and once in the node details
     assert plan.count("ShuffledHashJoin") >= 4, plan.count(
         "ShuffledHashJoin"
     )
