@@ -173,7 +173,6 @@ def _wide_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("request_id", "event_id", "latitude", "longitude", "buffer_meters", "ts")
     )
     from env_data_pipeline_spark.functions import classifiers as C
-    from env_data_pipeline_spark.functions import scalar as S
 
     # weather branch: one scan carrying the degradation flag (the
     # fixture nulls wind fields together — weather_container.py:153's

@@ -24,6 +24,7 @@ from env_data_pipeline_spark.plans.registry import (
     query,
 )
 from env_data_pipeline_spark.sources.fixtures import duck_with
+from env_data_pipeline_spark.streaming import incremental_refresh as IR
 
 # --------------------------------------------------------------------------
 # augmented corpus (shared by the dedup family)
@@ -2331,11 +2332,7 @@ def streaming_dedup_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame
     relation (streaming/incremental_refresh.py::
     streaming_dedup_index_refresh has the full rule statement and the
     scale posture)."""
-    from env_data_pipeline_spark.streaming.incremental_refresh import (
-        streaming_dedup_index_refresh as _run,
-    )
-
-    return _run(spark, _aug_docs(spark, sf_dir))
+    return IR.streaming_dedup_index_refresh(spark, _aug_docs(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -2518,15 +2515,63 @@ def streaming_paragraph_dedup_refresh(
 ) -> DataFrame:
     """Standing per-source paragraph-duplication monitor maintained
     across real micro-batches — the streaming form of the paragraph
-    tier: state is the additive (source, window-hash) count frame, so
-    the final report is order-independent and hash-equal to the
-    one-shot batch computation (the oracle). Scaffolding and scale:
-    streaming/incremental_refresh.py::streaming_paragraph_state_refresh."""
-    from env_data_pipeline_spark.streaming.incremental_refresh import (
-        streaming_paragraph_state_refresh,
+    tier (paired with dedup_paragraph_exact): state is the additive
+    (source, window-hash) count frame, so the final report is
+    batch-order-independent and hash-equal to the one-shot batch
+    computation (the oracle). Batches contribute their window counts;
+    finalize computes each source's share of window instances whose
+    text occurs more than once ANYWHERE in the corpus (the
+    cross-source boilerplate monitor a crawl ingest dashboard
+    actually shows).
+
+    Scale: state is distinct-(source, window)-sized — the paragraph
+    vocabulary, Heaps-sublinear in the corpus; merge is one additive
+    groupBy per batch; finalize is one window-hash-keyed aggregate +
+    a source-grain rollup. Only 16-byte digests ever sit in state."""
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
     )
 
-    return streaming_paragraph_state_refresh(spark, sf_dir)
+    def build(batch: DataFrame) -> DataFrame:
+        return (
+            paragraph_hashes(batch, "source")
+            .groupBy("source", "ph")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+
+    def merge(old: DataFrame, new: DataFrame) -> DataFrame:
+        return (
+            old.unionByName(new)
+            .groupBy("source", "ph")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
+
+    def finalize(state: DataFrame) -> DataFrame:
+        g = state.groupBy("ph").agg(F.sum("cnt").alias("gcnt"))
+        return (
+            state.join(g.hint("shuffle_hash"), "ph")
+            .groupBy("source")
+            .agg(
+                F.sum("cnt").cast("bigint").alias("n_windows"),
+                F.sum(F.when(F.col("gcnt") > 1, F.col("cnt")).otherwise(0))
+                .cast("bigint")
+                .alias("n_dup_windows"),
+            )
+            .select(
+                "source",
+                "n_windows",
+                "n_dup_windows",
+                F.expr("1000 * n_dup_windows div n_windows")
+                .cast("bigint")
+                .alias("dup_permille"),
+            )
+            .orderBy("source")
+        )
+
+    return IR.merge_refresh(
+        spark, docs, build, merge, finalize, "stream_para_refresh_",
+        shard_key="doc_id",
+    )
 
 
 # --------------------------------------------------------------------------

@@ -14,9 +14,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from env_data_pipeline_spark.catalog import table
-from env_data_pipeline_spark.extensions.sketches import cms_oracle_sql, hll_oracle_sql
+from env_data_pipeline_spark.extensions import sketches as SK
 from env_data_pipeline_spark.operators import incremental as INC
 from env_data_pipeline_spark.plans.registry import query
+from env_data_pipeline_spark.streaming.incremental_refresh import merge_refresh
 
 # deterministic delta derivation: every 7th doc gets a revision,
 # every 11th spawns a brand-new doc at doc_id + NEW_OFFSET
@@ -322,7 +323,6 @@ def streaming_scd2_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = table(spark, sf_dir, "customer")
     return _run(
         spark,
-        sf_dir,
         _scd_updates(cust),
         cust,
         key="c_custkey",
@@ -347,57 +347,98 @@ def streaming_scd2_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The standing-aggregate form of the refresh: events replayed as
     4 real micro-batches (maxFilesPerTrigger=1), a foreachBatch sink
-    merging each batch's partial state into a persistent parquet state
-    table, final state checked against a full recompute — O6
-    background maintenance made provable
-    (streaming/incremental_refresh.py)."""
-    from env_data_pipeline_spark.streaming.incremental_refresh import (
-        streaming_agg_refresh,
-    )
+    merging each batch's count/sum/min/max partial state into a
+    persistent parquet state table (streaming/incremental_refresh.py::
+    merge_refresh), avg derived at read time, final state checked
+    against a full recompute — O6 background maintenance made
+    provable."""
+    # table() normalized ts already; the deltas stream with the
+    # normalized schema, no vintage handling needed
+    events = table(spark, sf_dir, "events")
+    keys = ["event_type"]
 
-    return streaming_agg_refresh(spark, sf_dir)
+    def finalize(state: DataFrame) -> DataFrame:
+        return state.select(
+            "event_type",
+            "n_rows",
+            F.round(F.col("sum_value"), 4).alias("total_value"),
+            F.round(F.col("sum_value") / F.col("n_rows"), 6).alias("avg_value"),
+            F.round(F.col("min_value"), 4).alias("min_value"),
+            F.round(F.col("max_value"), 4).alias("max_value"),
+        )
+
+    return merge_refresh(
+        spark,
+        events,
+        lambda batch: INC.partial_aggs(batch, keys, "value"),
+        lambda cur, new: INC.refresh_partial_aggs(cur, new, keys),
+        finalize,
+        "stream_agg_refresh_",
+    )
 
 
 @query(
     "streaming_cms_sketch_refresh",
-    oracle=cms_oracle_sql(),
+    oracle=SK.cms_oracle_sql(),
 )
 def streaming_cms_sketch_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch as STANDING STATE: events replayed as 4 real
-    micro-batches, foreachBatch merging each batch's 256-cell sketch
-    into the persistent cell table by cell-wise addition
-    (streaming/incremental_refresh.py::streaming_cms_refresh,
-    primitives in extensions/sketches.py). The final state is probed
-    exactly like the one-shot batch sketch and checked against the
-    SAME oracle — green only if the merge algebra holds across every
-    batch boundary. The streaming face of events_cms_user_counts."""
-    from env_data_pipeline_spark.streaming.incremental_refresh import (
-        streaming_cms_refresh,
-    )
+    micro-batches; foreachBatch builds each batch's 256-cell CMS
+    (extensions/sketches.py — the same build the batch query uses) and
+    merges it into the persistent cell table by CELL-WISE ADDITION,
+    the sketch's defining algebra. The final state is probed exactly
+    like the one-shot batch sketch and checked against the SAME
+    oracle — green only if the merge is associative across every
+    batch boundary. The streaming face of events_cms_user_counts, and
+    how a 100 TB stream serves approximate frequencies: constant-size
+    state, O(|batch|) work per trigger, never a rescan of history."""
+    events = table(spark, sf_dir, "events")
 
-    return streaming_cms_refresh(spark, sf_dir)
+    def finalize(cells: DataFrame) -> DataFrame:
+        return SK.cms_probe(cells, SK.cms_probe_sample(events))
+
+    return merge_refresh(
+        spark,
+        events,
+        lambda batch: SK.cms_cells(batch.select("user_id")),
+        SK.cms_merge,
+        finalize,
+        "stream_cms_refresh_",
+    )
 
 
 @query(
     "streaming_hll_sketch_refresh",
-    oracle=hll_oracle_sql(),
+    oracle=SK.hll_oracle_sql(),
 )
 def streaming_hll_sketch_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog registers as STANDING STATE: events replayed as 4
-    real micro-batches, foreachBatch merging each batch's per-type
-    register table into the persistent state by register-wise MAX
-    (streaming/incremental_refresh.py::streaming_hll_refresh,
-    primitives in extensions/sketches.py). Finalized through the same
-    report as events_hll_distinct_by_type and checked against the
-    SAME oracle — green only if the max-merge algebra holds across
-    every batch boundary. The streaming face of the batch HLL query,
-    and the third merge algebra (after ADD and partial-agg) the
-    replay scaffolding now exercises."""
-    from env_data_pipeline_spark.streaming.incremental_refresh import (
-        streaming_hll_refresh,
-    )
+    real micro-batches; foreachBatch builds each batch's per-type
+    register table (extensions/sketches.py — the same build the batch
+    query uses) and merges it into the persistent state by
+    register-wise MAX, the sketch's defining algebra. Finalized
+    through the same report as events_hll_distinct_by_type and checked
+    against the SAME oracle — green only if the max-merge is
+    associative across every batch boundary. The third merge algebra
+    (after ADD and partial-agg) the replay exercises; state is
+    |types| * 64 rows forever."""
+    events = table(spark, sf_dir, "events")
 
-    return streaming_hll_refresh(spark, sf_dir)
+    def finalize(regs: DataFrame) -> DataFrame:
+        return SK.hll_report_from_registers(
+            spark, regs, events.select("event_type", "user_id")
+        )
+
+    return merge_refresh(
+        spark,
+        events,
+        lambda batch: SK.hll_registers(
+            batch.select("event_type", "user_id"), "user_id", "event_type"
+        ),
+        SK.hll_merge,
+        finalize,
+        "stream_hll_refresh_",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -594,17 +635,43 @@ def orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=INC.jv_oracle(),
 )
 def streaming_join_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming form of the materialized JOIN view: the lineitem fact
-    stream replays as 4 real micro-batches, each batch stream-static
-    joins the orders dimension and merges its partial-aggregate state
-    into the persistent view (streaming/incremental_refresh.py) —
-    final state hash-equals the full-join recompute, proving
-    join-then-aggregate commutes with batching."""
-    from env_data_pipeline_spark.streaming.incremental_refresh import (
-        streaming_join_view_refresh as run,
-    )
+    """Streaming form of the materialized JOIN view: the lineitem FACT
+    STREAM replays as 4 real micro-batches; each batch equi-joins the
+    static orders dimension (the classic stream-static enrich),
+    reduces to count/sum/min/max partial states of half-up
+    1e-4-unit line revenue, and merges into the persistent view
+    state. The final state must hash-equal a FULL RECOMPUTE over the
+    complete join (the same oracle as the batch three-term refresh) —
+    which holds only if join-then-partial-aggregate commutes with
+    batching across every boundary.
 
-    return run(spark, sf_dir)
+    Scale posture: per trigger the work is O(|batch| join fan-out +
+    |state|); the dimension is scanned per batch (broadcast in
+    production when it fits, key-partitioned join otherwise) and
+    history is never rescanned."""
+    orders = table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderpriority"
+    )
+    # shared view definition (operators/incremental.py) — the batch
+    # three-term refresh, this stream, and the oracle use ONE
+    # projection/finalize, so the pairing cannot drift
+    li = INC.jv_lineitem(table(spark, sf_dir, "lineitem"))
+
+    def build(batch: DataFrame) -> DataFrame:
+        rows = batch.join(
+            orders, batch["l_orderkey"] == orders["o_orderkey"]
+        ).select("o_orderpriority", "rev_units")
+        return INC.partial_aggs(rows, INC.JV_KEYS, "rev_units")
+
+    return merge_refresh(
+        spark,
+        li,
+        build,
+        lambda cur, new: INC.refresh_partial_aggs(cur, new, INC.JV_KEYS),
+        INC.jv_finalize,
+        "stream_join_view_refresh_",
+        shard_key="l_orderkey",
+    )
 
 
 @query(
@@ -617,12 +684,64 @@ def streaming_backlog_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming form of orders_backlog_over_time: the lineitem stream
     (sharded by LINE NUMBER so one order's lines span batches) feeds a
     per-order close-day state merged by MAX across micro-batches; the
-    day-grain deltas and running backlog derive at read time. Final
-    series hash-equals the one-shot batch oracle — proving MAX-state
+    day-grain deltas and running backlog derive at read time (the same
+    read-time-derivation rule as avg over partial aggs). Final series
+    hash-equals the one-shot batch oracle — proving MAX-state
     maintenance commutes with batching even when an entity's rows
-    arrive split across triggers (streaming/incremental_refresh.py)."""
-    from env_data_pipeline_spark.streaming.incremental_refresh import (
-        streaming_backlog_refresh as run,
+    arrive split across triggers.
+
+    Why MAX state: order open/close deltas (+1 at the open day, -1 the
+    day after the last ship) are not mergeable by addition when
+    computed per batch — two batches carrying the same order would
+    each emit a close delta. So the state is order -> close_day under
+    a mergeable MAX, and the deltas derive from the standing state.
+
+    Scale posture: per trigger O(|batch| + |state|) — the full
+    per-order state table is read, merged by MAX, and rewritten each
+    trigger (a table format with MERGE would touch only the batch's
+    keys); history rows are never rescanned. The read-time day-grain
+    derivation is calendar-bounded."""
+    orders = table(spark, sf_dir, "orders").select(
+        "o_orderkey", F.col("o_orderdate").cast("date").alias("open_day")
+    )
+    li = table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_linenumber", F.col("l_shipdate").cast("date").alias("ship_day")
     )
 
-    return run(spark, sf_dir)
+    def build(batch: DataFrame) -> DataFrame:
+        # per-batch partial state: one row per order seen in the batch
+        return batch.groupBy("l_orderkey").agg(
+            F.max("ship_day").alias("close_day")
+        )
+
+    def merge(cur: DataFrame, new: DataFrame) -> DataFrame:
+        # mergeable MAX algebra on the per-order close day
+        return (
+            cur.unionByName(new)
+            .groupBy("l_orderkey")
+            .agg(F.max("close_day").alias("close_day"))
+        )
+
+    def finalize(state: DataFrame) -> DataFrame:
+        spans = orders.join(
+            state, orders["o_orderkey"] == state["l_orderkey"]
+        ).select(
+            "open_day", F.date_add(F.col("close_day"), 1).alias("after_close")
+        )
+        # shared series derivation (operators/incremental.py) — the
+        # batch query and this refresh publish ONE definition
+        return INC.backlog_series(spans)
+
+    return merge_refresh(
+        spark,
+        li,
+        build,
+        merge,
+        finalize,
+        "stream_backlog_refresh_",
+        # shard by LINE NUMBER, not order key: an order's lines then
+        # SPAN batches, so the cross-batch MAX merge is genuinely
+        # exercised (orderkey-sharding would confine each order to one
+        # batch and the merge would be vacuously correct)
+        shard_key="l_linenumber",
+    )

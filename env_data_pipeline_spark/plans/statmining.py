@@ -35,6 +35,7 @@ from pyspark.sql.window import Window
 from env_data_pipeline_spark.catalog import table
 from env_data_pipeline_spark.extensions import text as TX
 from env_data_pipeline_spark.plans.registry import BENCH_EXTRA, query
+from env_data_pipeline_spark.streaming.incremental_refresh import merge_refresh
 
 # daily mean grid: value -> 1e-4 round-half-up units, then the
 # per-day mean keeps 3 more digits via *1000 before the integer
@@ -67,16 +68,27 @@ _DAILY_M_CTE = f"""daily AS MATERIALIZED (
 def _daily_partials(ev: DataFrame) -> DataFrame:
     """(event_type, day, su, cnt) partial-aggregate frame — the Spark
     side of _DAILY_M_CTE before the m projection (streaming keeps the
-    partials mergeable; cusum_report/_daily_means derive m)."""
+    partials mergeable; cusum_report/_daily_m derive m)."""
     return ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
         F.sum(F.expr(_VAL_UNITS_SQL)).alias("su"),
         F.count(F.lit(1)).alias("cnt"),
     )
 
 
-def _daily_means(ev: DataFrame) -> DataFrame:
-    """(event_type, day, m) on the value*1e7 integer grid."""
-    return _daily_partials(ev).select(
+def _add_daily(old: DataFrame, new: DataFrame) -> DataFrame:
+    """ADD-merge of the (event_type, day) -> (su, cnt) partial state
+    shared by the CUSUM, Mann-Kendall and Holt streaming refreshes."""
+    return (
+        old.unionByName(new)
+        .groupBy("event_type", "day")
+        .agg(F.sum("su").alias("su"), F.sum("cnt").alias("cnt"))
+    )
+
+
+def _daily_m(partials: DataFrame) -> DataFrame:
+    """(event_type, day, m) on the value*1e7 integer grid, from the
+    (event_type, day, su, cnt) partials."""
+    return partials.select(
         "event_type", "day", F.expr("(su * 1000) div cnt").alias("m")
     )
 
@@ -232,11 +244,10 @@ def streaming_cusum_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     The replay (sharding, persisted state, idempotent batches) is
     streaming/replay.py::replay_fold, shared with every foreachBatch
     refresher."""
-    from env_data_pipeline_spark.streaming.incremental_refresh import (
-        streaming_cusum_state_refresh,
+    return merge_refresh(
+        spark, table(spark, sf_dir, "events"), _daily_partials, _add_daily,
+        cusum_report, "stream_cusum_refresh_",
     )
-
-    return streaming_cusum_state_refresh(spark, sf_dir)
 
 
 @query(
@@ -819,13 +830,13 @@ def hhi_report(rev: DataFrame) -> DataFrame:
     )
 
 
-def supplier_revenue_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(nation, suppkey, su) exact revenue partials — the shared
-    source for both HHI surfaces (and the add-merge streaming
-    state)."""
-    li = table(spark, sf_dir, "lineitem")
-    sup = table(spark, sf_dir, "supplier")
-    n = table(spark, sf_dir, "nation")
+def supplier_revenue_partials(
+    li: DataFrame, sup: DataFrame, n: DataFrame
+) -> DataFrame:
+    """(nation, suppkey, su) exact revenue partials of lineitem rows
+    ``li`` — the shared kernel of both HHI surfaces: the batch query
+    runs it once over the fact table, the streaming refresh per batch
+    (its add-merge state)."""
     return (
         li.join(F.broadcast(sup.select("s_suppkey", "s_nationkey")),
                 li["l_suppkey"] == F.col("s_suppkey"))
@@ -851,7 +862,13 @@ def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one fact-sized partial agg keyed (nation, supplier) with
     two broadcast dims, then supplier-count-sized frames."""
-    return hhi_report(supplier_revenue_partials(spark, sf_dir))
+    return hhi_report(
+        supplier_revenue_partials(
+            table(spark, sf_dir, "lineitem"),
+            table(spark, sf_dir, "supplier"),
+            table(spark, sf_dir, "nation"),
+        )
+    )
 
 
 @query("streaming_hhi_refresh", oracle=_HHI_ORACLE)
@@ -867,11 +884,22 @@ def streaming_hhi_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The replay is streaming/replay.py::replay_fold, shared with
     every foreachBatch refresher (sharded on l_orderkey)."""
-    from env_data_pipeline_spark.streaming.incremental_refresh import (
-        streaming_hhi_state_refresh,
-    )
+    sup = table(spark, sf_dir, "supplier")
+    nat = table(spark, sf_dir, "nation")
 
-    return streaming_hhi_state_refresh(spark, sf_dir)
+    def merge(old: DataFrame, new: DataFrame) -> DataFrame:
+        return (
+            old.unionByName(new)
+            .groupBy("nation", "suppkey")
+            .agg(F.sum("su").alias("su"))
+        )
+
+    return merge_refresh(
+        spark, table(spark, sf_dir, "lineitem"),
+        lambda batch: supplier_revenue_partials(batch, sup, nat),
+        merge, hhi_report, "stream_hhi_refresh_",
+        shard_key="l_orderkey",
+    )
 
 
 @query("streaming_skyline_refresh", oracle=_SKYLINE_ORACLE)
@@ -889,11 +917,15 @@ def streaming_skyline_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The replay is streaming/replay.py::replay_fold, shared with
     every foreachBatch refresher (sharded on p_partkey)."""
-    from env_data_pipeline_spark.streaming.incremental_refresh import (
-        streaming_skyline_state_refresh,
-    )
 
-    return streaming_skyline_state_refresh(spark, sf_dir)
+    def merge(old: DataFrame, new: DataFrame) -> DataFrame:
+        return skyline_frame(old.unionByName(new))
+
+    return merge_refresh(
+        spark, skyline_source(spark, sf_dir), skyline_frame, merge,
+        _format_skyline, "stream_skyline_refresh_",
+        shard_key="p_partkey",
+    )
 
 
 _MK_ORACLE = f"""
@@ -968,7 +1000,8 @@ def events_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     type, bounded by the calendar (6.6M pairs for a decade), never
     by the fact table; the only fact-sized stage is the first
     groupBy, shared shape with CUSUM."""
-    return mann_kendall_report(_daily_means(table(spark, sf_dir, "events")))
+    ev = table(spark, sf_dir, "events")
+    return mann_kendall_report(_daily_m(_daily_partials(ev)))
 
 
 def mann_kendall_report(daily: DataFrame) -> DataFrame:
@@ -1036,11 +1069,11 @@ def streaming_mann_kendall_refresh(spark: SparkSession, sf_dir: str) -> DataFram
 
     The replay is streaming/replay.py::replay_fold, shared with
     every foreachBatch refresher."""
-    from env_data_pipeline_spark.streaming.incremental_refresh import (
-        streaming_mann_kendall_state_refresh,
+    return merge_refresh(
+        spark, table(spark, sf_dir, "events"), _daily_partials, _add_daily,
+        lambda state: mann_kendall_report(_daily_m(state)),
+        "stream_mk_refresh_",
     )
-
-    return streaming_mann_kendall_state_refresh(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -1141,7 +1174,8 @@ def events_holt_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness/scale: holt_report. The oracle replays the identical
     recursion as a recursive CTE over the row-numbered day sequence."""
-    return holt_report(_daily_means(table(spark, sf_dir, "events")))
+    ev = table(spark, sf_dir, "events")
+    return holt_report(_daily_m(_daily_partials(ev)))
 
 
 @query("streaming_holt_refresh", oracle=_HOLT_ORACLE)
@@ -1155,11 +1189,11 @@ def streaming_holt_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The replay is streaming/replay.py::replay_fold, shared with
     every foreachBatch refresher."""
-    from env_data_pipeline_spark.streaming.incremental_refresh import (
-        streaming_holt_state_refresh,
+    return merge_refresh(
+        spark, table(spark, sf_dir, "events"), _daily_partials, _add_daily,
+        lambda state: holt_report(_daily_m(state)),
+        "stream_holt_refresh_",
     )
-
-    return streaming_holt_state_refresh(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -2343,7 +2377,7 @@ def events_daily_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-sized stage is the shared daily groupBy. The lag fan-out is
     an explode on the day frame (4x calendar rows), not a cross
     join."""
-    daily = _daily_means(table(spark, sf_dir, "events"))
+    daily = _daily_m(_daily_partials(table(spark, sf_dir, "events")))
     d4 = daily.select(
         "event_type", "day", F.expr("m div 1000").alias("m4")
     )

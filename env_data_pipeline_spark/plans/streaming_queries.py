@@ -1,18 +1,32 @@
-"""Registry entries for the streaming slice (SURVEY.md §2.9).
+"""Registry entries for the streaming slice (SURVEY.md §2.9): every
+query here runs a REAL streaming query (micro-batch engine, state
+store, watermark) over the events file-source replay and drains it
+synchronously (``_drain``), so the result is a plain DataFrame the
+driver can check. The stream source, the drain and the attribution
+join they share live in streaming/event_trigger.py; the
+applyInPandasWithState kernels in streaming/stateful.py.
 
-Both run REAL streaming queries (micro-batch engine, state store,
-watermark) drained synchronously; the windowed aggregation is
-SQL-expressible so it gets a full oracle — date_trunc('hour') is
-exactly the tumbling-window start for 1-hour windows.
+Scale: file source -> kafka source is a one-line swap; the watermark
+bounds state (1 hour, mirroring the reference's declared 1-hour result
+currency, orchestrator.py:657 / O8); window counts are
+partial-aggregated per micro-batch. The window oracles are
+SQL-expressible: date_trunc('hour') is exactly the tumbling-window
+start for 1-hour windows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from env_data_pipeline_spark.plans.registry import query
-from env_data_pipeline_spark.sources.fixtures import duck_with
-from env_data_pipeline_spark.streaming import event_trigger as ET
+from env_data_pipeline_spark.sources.fixtures import duck_with, ensure_fixtures
+from env_data_pipeline_spark.streaming import stateful as ST
+from env_data_pipeline_spark.streaming.event_trigger import (
+    _attribution_join,
+    _drain,
+    _event_stream,
+)
 
 
 @query(
@@ -35,11 +49,29 @@ from env_data_pipeline_spark.streaming import event_trigger as ET
     """,
 )
 def streaming_windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window streaming agg, APPEND mode (bounded state: a
-    window's state is evicted when the watermark finalizes it) —
-    oracle-checked against the batch date_trunc equivalent restricted
-    to finalized windows (window end <= max(ts) - 1h watermark)."""
-    return ET.windowed_event_counts(spark, sf_dir)
+    """Tumbling 1-hour windows per event_type with a 1-hour watermark
+    (the engine-native streaming agg of SURVEY.md §2.9). APPEND output
+    mode: a window is emitted exactly once, when the watermark passes
+    its end, and its state is evicted — state is bounded by the
+    watermark horizon, not the stream length (complete mode would hold
+    every window ever seen). The availableNow drain's final no-data
+    batch finalizes every window whose end <= max(ts) - 1h; the last
+    still-open windows are intentionally NOT emitted (they would close
+    on the next batch of a live stream), and the oracle, the batch
+    date_trunc equivalent, applies the same finalization cutoff."""
+    ev = _event_stream(spark, sf_dir)
+    agg = (
+        ev.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("total_value"))
+        .select(
+            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            "event_type",
+            "n_events",
+            "total_value",
+        )
+    )
+    return _drain(spark, agg, "windowed_event_counts_sink", "append")
 
 
 @query(
@@ -66,13 +98,36 @@ def streaming_windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def streaming_sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window streaming agg (1 h length, 30 min slide): every
-    event lands in exactly two overlapping windows; both engines align
-    buckets to 30-minute epoch multiples, so the oracle fans each row
-    to its two window starts relationally and applies the identical
-    finalization cutoff. Completes the window-class coverage:
-    tumbling, session, sliding."""
-    return ET.sliding_window_counts(spark, sf_dir)
+    """SLIDING 1-hour windows every 30 minutes: every event lands in
+    exactly two overlapping windows. Completes the window-class
+    coverage next to tumbling and session, with the same append-mode
+    finalization contract: a window emits once when the watermark
+    passes its end. Both engines align buckets to 30-minute epoch
+    multiples, so the oracle fans each row to its two window starts
+    relationally and applies the identical cutoff. State is bounded by
+    (window length / slide) x watermark horizon — the overlap factor
+    multiplies state rows, not raw data, which is why the slide should
+    stay a coarse fraction of the length at 100 TB."""
+    ev = _event_stream(spark, sf_dir)
+    agg = (
+        ev.withWatermark("ts", "1 hour")
+        .groupBy(
+            F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type"
+        )
+        .agg(
+            F.count("*").alias("n_events"),
+            F.round(F.sum("value"), 4).alias("total_value"),
+        )
+        .select(
+            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
+                "window_start"
+            ),
+            "event_type",
+            "n_events",
+            "total_value",
+        )
+    )
+    return _drain(spark, agg, "sliding_window_counts_sink", "append")
 
 
 @query(
@@ -105,9 +160,49 @@ def streaming_sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def streaming_priority_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O4/O5/O6: the event-trigger path as a streaming query — routing
-    per event, emitted in append mode."""
-    return ET.priority_routed_events(spark, sf_dir)
+    """O4/O5/O6: the event-trigger path as a streaming query. O5
+    routing applied to the live stream: derive the event_type /
+    priority vocab (same arithmetic as the requests fixture), route to
+    sources with completion budgets (orchestrator.py:923-935), and
+    emit per-event rows in append mode — what the reference's
+    background worker stub (O6) would persist."""
+    ev = _event_stream(spark, sf_dir)
+    eid = F.col("event_id")
+    event_type = (
+        F.when(eid % 17 == 15, "deleted")
+        .when(eid % 17 == 16, F.lit(None).cast("string"))
+        .when(eid % 3 == 0, "created")
+        .when(eid % 3 == 1, "updated")
+        .otherwise("location_changed")
+    )
+    priority = (
+        F.when(eid % 19 == 18, "urgent")
+        .when(eid % 4 == 0, "low")
+        .when(eid % 4 == 1, "normal")
+        .when(eid % 4 == 2, "high")
+        .otherwise("emergency")
+    )
+    routed = (
+        ev.select(eid.alias("event_id"), event_type.alias("event_type"), priority.alias("priority"))
+        .filter(
+            F.col("event_type").isin("created", "updated", "location_changed")
+            & F.col("priority").isin("low", "normal", "high", "emergency")
+        )
+        .select(
+            "event_id",
+            "event_type",
+            "priority",
+            F.when(F.col("priority") == "emergency", "landfire,modis,weather,topography")
+            .when(F.col("event_type") == "created", "landfire,modis,weather,topography")
+            .otherwise("weather")
+            .alias("sources_scheduled"),
+            F.when(F.col("priority") == "emergency", 60)
+            .when(F.col("event_type") == "created", 120)
+            .otherwise(30)
+            .alias("estimated_completion_seconds"),
+        )
+    )
+    return _drain(spark, routed, "priority_routed_events_sink", "append")
 
 
 @query(
@@ -119,11 +214,25 @@ def streaming_priority_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_cache_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O8/X1 streaming analog: dropDuplicatesWithinWatermark on the
-    (user, hour) cache key — bounded dedup state; the emitted key set
-    over a full replay equals batch DISTINCT, so it gets a full
-    oracle."""
-    return ET.cache_dedup_keys(spark, sf_dir)
+    """O8/X1 on the live stream: one computation per (user, hour)
+    cache key via dropDuplicatesWithinWatermark — the streaming form
+    of the batch request-cache dedup. State for a key is held only
+    until the watermark passes it (bounded state at any stream
+    length, unlike plain dropDuplicates). Only the KEY columns are
+    emitted: which physical row represents a key is
+    arrival-order-dependent in a stream, the key set is not — over a
+    full replay it equals batch DISTINCT, so it gets a full oracle."""
+    ev = _event_stream(spark, sf_dir)
+    keys = (
+        ev.withColumn("hour_bucket", F.date_trunc("hour", F.col("ts")))
+        .withWatermark("hour_bucket", "2 hours")
+        .dropDuplicatesWithinWatermark(["user_id", "hour_bucket"])
+        .select(
+            "user_id",
+            F.date_format("hour_bucket", "yyyy-MM-dd HH:mm:ss").alias("hour_bucket"),
+        )
+    )
+    return _drain(spark, keys, "cache_dedup_keys_sink", "append")
 
 
 @query(
@@ -140,10 +249,25 @@ def streaming_cache_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static enrichment join: live events x static requests
-    dimension (1:1 on the event key), broadcast per micro-batch —
-    equals the batch join over a full replay, so full oracle."""
-    return ET.enriched_events(spark, sf_dir)
+    """Stream-static join (the canonical enrichment shape): the live
+    event stream joined 1:1 to the static requests dimension on the
+    event key. The static side is re-read per micro-batch by the
+    engine, so dimension updates between batches are picked up; the
+    join itself needs no state store (no watermark bookkeeping) — at
+    scale this is a broadcast of the dimension into every batch. Over
+    a full replay it equals the batch join, so full oracle."""
+    (requests,) = ensure_fixtures(spark, sf_dir, ("requests",))
+    dim = requests.select(
+        F.expr("CAST(substring(request_id, 5) AS BIGINT)").alias("event_id"),
+        "request_id",
+        "priority",
+        F.col("event_type").alias("request_event_type"),
+    )
+    ev = _event_stream(spark, sf_dir)
+    joined = ev.select("event_id", "event_type", "value").join(
+        F.broadcast(dim), "event_id"
+    ).select("event_id", "request_id", "event_type", "request_event_type", "priority")
+    return _drain(spark, joined, "enriched_events_sink", "append")
 
 
 @query(
@@ -155,12 +279,29 @@ def streaming_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_stateful_event_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState: running
-    per-event-type totals with explicit keyed state (streaming/
-    stateful.py). The end-of-stream emission equals the batch
-    aggregate, so this stateful path gets a full SQL oracle."""
-    from env_data_pipeline_spark.streaming.stateful import stateful_event_totals
-
-    return stateful_event_totals(spark, sf_dir)
+    per-event-type totals with explicit keyed state (the kernel is
+    streaming/stateful.py::_make_totals_fn). Keeping the final
+    (highest-count) emission per key makes the result the
+    deterministic end-of-stream total regardless of micro-batch count;
+    it equals the batch aggregate, so this stateful path gets a full
+    SQL oracle."""
+    stream = _event_stream(spark, sf_dir).select("event_type", "value")
+    updates = stream.groupBy("event_type").applyInPandasWithState(
+        ST._make_totals_fn(),
+        outputStructType=ST.OUTPUT_SCHEMA,
+        stateStructType=ST.STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf="NoTimeout",
+    )
+    all_updates = _drain(spark, updates, "stateful_event_totals", "update")
+    final = all_updates.groupBy("event_type").agg(
+        F.max_by(F.struct("n_events", "total_value"), "n_events").alias("s")
+    )
+    return final.select(
+        "event_type",
+        F.col("s.n_events").alias("n_events"),
+        F.round(F.col("s.total_value"), 4).alias("total_value"),
+    )
 
 
 @query(
@@ -179,13 +320,28 @@ def streaming_stateful_event_totals(spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join: live views x live purchases on
-    user_id within a 2-hour attribution window, both sides
-    watermarked so buffered state evicts at the horizon
-    (streaming/event_trigger.py::stream_stream_attribution). Inner
-    matches emit on arrival, so the full replay equals the batch
-    interval join — full oracle."""
-    return ET.stream_stream_attribution(spark, sf_dir)
+    """STREAM-STREAM interval join: the live view stream inner-joined
+    to the live purchase stream on user_id with an event-time range —
+    every purchase within 2 h after a view attributes to it. Both
+    sides carry watermarks and the join carries the time-range
+    condition, which is what lets the state store evict a buffered
+    view once the purchase-side watermark passes view_ts + 2 h —
+    without the range constraint both sides buffer forever. Inner
+    matches emit as soon as both rows have arrived, so the full replay
+    equals the batch interval join — full oracle (the append-mode
+    caveat of outer stream-stream joins does not apply to inner).
+
+    At scale both streams shuffle on user_id into co-partitioned
+    state stores; per-key buffered state spans only the 2 h + 1 h
+    watermark horizon, independent of stream length."""
+    joined = _attribution_join(spark, sf_dir, "inner").select(
+        "user_id",
+        "view_event_id",
+        "purchase_event_id",
+        (F.unix_micros("purchase_ts") - F.unix_micros("view_ts")).alias("gap_us"),
+        F.round("purchase_value", 4).alias("purchase_value"),
+    )
+    return _drain(spark, joined, "stream_stream_attribution_sink", "append")
 
 
 @query(
@@ -223,13 +379,30 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT-OUTER stream-stream interval join with watermark null
-    emission (streaming/event_trigger.py::stream_stream_attribution_left):
-    unmatched views surface as (view, NULL) when the global watermark
-    passes view_ts + 2h. Oracle = batch left join restricted to
-    matched rows plus finalized-unmatched rows under the identical
-    min-of-sides ms-truncated watermark."""
-    return ET.stream_stream_attribution_left(spark, sf_dir)
+    """LEFT-OUTER stream-stream interval join (the variant a real
+    attribution pipeline needs: views that never convert must still be
+    accounted): matched (view, purchase) pairs emit on arrival exactly
+    like the inner join; an UNMATCHED view emits (view, NULL purchase)
+    only when the join state can prove no future purchase can match
+    it — i.e. when the global watermark (the MIN of both sides'
+    watermarks, Spark's default multipleWatermarkPolicy) passes
+    view_ts + 2 h and the buffered view evicts. availableNow replay
+    runs a trailing no-data micro-batch after the data batch, which is
+    where those null emissions land. Oracle = batch left join
+    restricted to matched rows plus finalized-unmatched rows under the
+    identical min-of-sides ms-truncated watermark.
+
+    At scale this is the same co-partitioned two-sided state as the
+    inner join — the outer variant adds only a matched bit per
+    buffered view, so state stays bounded by the 2 h + 1 h horizon."""
+    joined = _attribution_join(spark, sf_dir, "leftOuter").select(
+        "user_id",
+        "view_event_id",
+        "purchase_event_id",
+        (F.unix_micros("purchase_ts") - F.unix_micros("view_ts")).alias("gap_us"),
+        F.round("purchase_value", 4).alias("purchase_value"),
+    )
+    return _drain(spark, joined, "stream_stream_attribution_left_sink", "append")
 
 
 @query(
@@ -248,13 +421,23 @@ def streaming_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataF
     """,
 )
 def streaming_stream_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT-SEMI stream-stream interval join
-    (streaming/event_trigger.py::stream_stream_attribution_semi): each
-    converted view emits exactly once on its first match; unconverted
-    views never emit (their state evicts silently), so the oracle is a
-    plain EXISTS with no watermark clause — semi-join emission needs
-    only match evidence, never finalization."""
-    return ET.stream_stream_attribution_semi(spark, sf_dir)
+    """LEFT-SEMI stream-stream interval join — the converted-views
+    feed: a view emits (once) as soon as SOME purchase lands in its
+    2 h window; views that never convert emit nothing and their state
+    evicts silently at the watermark horizon, so the oracle is a plain
+    EXISTS with no watermark clause — semi-join emission needs only
+    match evidence, never finalization. Completes the stream-stream
+    join-type matrix (inner / left-outer / full-outer / left-semi).
+
+    At scale: same co-partitioned state as the inner join, but the
+    output carries only the view side and each buffered view emits at
+    most once — no match-multiplicity amplification."""
+    joined = _attribution_join(spark, sf_dir, "leftSemi").select(
+        "user_id",
+        "view_event_id",
+        F.unix_micros("view_ts").alias("view_ts_us"),
+    )
+    return _drain(spark, joined, "stream_stream_attribution_semi_sink", "append")
 
 
 @query(
@@ -295,14 +478,29 @@ def streaming_stream_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataF
 def streaming_stream_stream_full_outer_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """FULL-OUTER stream-stream interval join
-    (streaming/event_trigger.py::stream_stream_attribution_full):
-    both unmatched sides surface under watermark finalization —
-    views at view_ts + 2h, purchases at purchase_ts. Oracle = batch
-    full join restricted to matched rows plus each side's finalized
-    unmatched rows under the identical min-of-sides ms-truncated
-    watermark."""
-    return ET.stream_stream_attribution_full(spark, sf_dir)
+    """FULL-OUTER stream-stream interval join — both unmatched sides
+    surface: a view that never converts emits (view, NULL purchase)
+    when the global watermark passes view_ts + 2 h (its last possible
+    match), and a purchase with no preceding view emits (NULL view,
+    purchase) when the watermark passes purchase_ts (any later-arriving
+    view would carry event time >= the watermark > purchase_ts, outside
+    the interval). Matched pairs emit on arrival like the inner join.
+    Oracle = batch full join restricted to matched rows plus each
+    side's finalized unmatched rows under the identical min-of-sides
+    ms-truncated watermark.
+
+    At scale: the same co-partitioned two-sided state as the inner
+    join — the outer variant adds a matched bit per buffered row on
+    BOTH sides; state stays bounded by the 2 h interval + 1 h
+    lateness horizon per side."""
+    joined = _attribution_join(spark, sf_dir, "fullOuter").select(
+        F.coalesce("user_id", "p_user_id").alias("user_id"),
+        "view_event_id",
+        "purchase_event_id",
+        (F.unix_micros("purchase_ts") - F.unix_micros("view_ts")).alias("gap_us"),
+        F.round("purchase_value", 4).alias("purchase_value"),
+    )
+    return _drain(spark, joined, "stream_stream_attribution_full_sink", "append")
 
 
 @query(
@@ -350,17 +548,39 @@ def streaming_stream_stream_full_outer_join(
     """,
 )
 def streaming_stateful_session_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator with EVENT-TIME TIMEOUT eviction
-    (streaming/stateful.py::stateful_session_expiry): per-user
-    sessions emit when the watermark passes last_event + gap, and
-    finalized events DROP out of state. Oracle = gaps-and-islands
-    sessionization over globally sorted event time under the same
-    ms-clock watermark cutoff — the kernel re-splits its raw pending
-    suffix every batch, so the two agree for ANY batching/ordering of
-    admitted events (ADVICE r6)."""
-    from env_data_pipeline_spark.streaming.stateful import stateful_session_expiry
-
-    return stateful_session_expiry(spark, sf_dir)
+    """Custom stateful operator with EVENT-TIME TIMEOUT eviction (the
+    kernel is streaming/stateful.py::_make_session_expiry_fn):
+    per-user sessions emit when the watermark passes last_event + gap,
+    and finalized events DROP out of state. availableNow's trailing
+    no-data batch is where the event-time timeouts fire: every session
+    whose ms-floored last event + 30 min lies strictly below the final
+    watermark emits (exactly once); sessions still inside the
+    admission horizon stay unemitted, one raw-event-suffix state row
+    per active key. Oracle = gaps-and-islands sessionization over
+    globally sorted event time under the same ms-clock watermark
+    cutoff — the kernel re-splits its raw pending suffix every batch,
+    so the two agree for ANY batching/ordering of admitted events
+    (ADVICE r6)."""
+    stream = (
+        _event_stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
+        .select("user_id", "ts", "value")
+    )
+    updates = stream.groupBy("user_id").applyInPandasWithState(
+        ST._make_session_expiry_fn(),
+        outputStructType=ST.SESSION_OUTPUT_SCHEMA,
+        stateStructType=ST.SESSION_STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf="EventTimeTimeout",
+    )
+    out = _drain(spark, updates, "stateful_session_expiry", "update")
+    return out.select(
+        "user_id",
+        "session_start_us",
+        "session_end_us",
+        "n_events",
+        F.round("total_value", 4).alias("total_value"),
+    )
 
 
 @query(
@@ -403,10 +623,36 @@ def streaming_stateful_session_expiry(spark: SparkSession, sf_dir: str) -> DataF
     """,
 )
 def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native streaming session windows (session_window + watermark,
-    append mode): per-user 30-min-gap sessions emitted exactly once
-    when finalized. The oracle rebuilds the same sessions relationally
-    (gaps-and-islands with Spark's >=-gap split rule) under the same
-    ms-truncated watermark finalization cutoff as the tumbling-window
-    oracle."""
-    return ET.session_window_stats(spark, sf_dir)
+    """Streaming SESSION windows (dynamic-gap state merge): per-user
+    sessions close after 30 min of inactivity, emitted in append mode
+    exactly once, when the watermark passes the session end — Spark's
+    native session_window operator, the streaming form of the batch
+    gaps-and-islands sessionization (plans/relational.py). State is
+    one open session per active user, merged across micro-batches and
+    evicted at emission — bounded by the watermark horizon like the
+    tumbling-window agg, not by stream length. The oracle rebuilds the
+    same sessions relationally (gaps-and-islands with Spark's >=-gap
+    split rule) under the tumbling oracle's ms-truncated cutoff."""
+    ev = _event_stream(spark, sf_dir)
+    agg = (
+        ev.withWatermark("ts", "1 hour")
+        .groupBy(
+            F.session_window(F.col("ts"), "30 minutes").alias("w"), F.col("user_id")
+        )
+        .agg(
+            F.count("*").alias("n_events"),
+            F.round(F.sum("value"), 4).alias("total_value"),
+        )
+        .select(
+            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
+                "session_start"
+            ),
+            F.date_format(F.col("w.end"), "yyyy-MM-dd HH:mm:ss").alias(
+                "session_end"
+            ),
+            "user_id",
+            "n_events",
+            "total_value",
+        )
+    )
+    return _drain(spark, agg, "session_window_stats_sink", "append")

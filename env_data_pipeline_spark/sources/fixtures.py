@@ -656,19 +656,23 @@ def _snapshot_path(sf_dir: str, name: str, key: str | None = None) -> str:
 
 
 def _reap_stale(path: str, name: str) -> None:
-    """Drop other-keyed snapshots of ``name`` beside ``path``. Runs only
-    AFTER ``path`` is live, so a failed build never deletes the previous
-    vintage first. AGE-GATED: a concurrently running session from
-    another checkout (same sf_dir, different key) may still read a fresh
-    other-keyed snapshot; only snapshots older than the horizon go."""
+    """Drop other-keyed snapshots of ``name`` beside ``path``, and any
+    snapshot of an oracle-only fixture (no Spark text, so no reader).
+    Runs only AFTER ``path`` is live, so a failed build never deletes
+    the previous vintage first. AGE-GATED: a concurrently running
+    session from another checkout (same sf_dir, different key or an
+    older engine) may still read a fresh snapshot; only snapshots older
+    than the horizon go."""
     root = os.path.dirname(path)
     horizon = time.time() - _STALE_SNAPSHOT_SECONDS
+    unread = {n for n, texts in FIXTURES.items() if "spark" not in texts}
     for old in os.listdir(root):
         old_path = os.path.join(root, old)
+        old_name = old.rsplit("-", 1)[0]
         if (
             old_path == path
             or not old.endswith(".parquet")
-            or old.rsplit("-", 1)[0] != name
+            or (old_name != name and old_name not in unread)
         ):
             continue
         try:

@@ -2,7 +2,7 @@
 X7 history algebra): a foreachBatch sink that applies each
 micro-batch of dimension updates to a persistent SCD2 history table
 — the streaming form of nightly dimension maintenance, sibling of
-incremental_refresh.py's standing aggregate.
+incremental_refresh.py::merge_refresh's standing aggregates.
 
 Mechanics proven, not claimed: the update set splits into
 BATCH_SHARDS delta files replayed with maxFilesPerTrigger=1 (the
@@ -34,7 +34,6 @@ BATCH_SHARDS = 2
 
 def streaming_scd2_refresh(
     spark: SparkSession,
-    sf_dir: str,
     updates: DataFrame,
     dim: DataFrame,
     key: str,

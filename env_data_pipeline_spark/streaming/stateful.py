@@ -1,6 +1,9 @@
-"""Custom stateful streaming operator via applyInPandasWithState
-(SURVEY.md §2.9 engine-native; the charter's named mechanism for
-operators Spark's built-ins can't express).
+"""Kernels and schemas for the custom stateful streaming operators
+built with applyInPandasWithState (SURVEY.md §2.9 engine-native; the
+charter's named mechanism for operators Spark's built-ins can't
+express). The queries that run them are
+plans/streaming_queries.py::streaming_stateful_event_totals and
+streaming_stateful_session_expiry.
 
 Running per-event-type totals with explicit keyed state: each
 micro-batch folds its Arrow batches into the group's state
@@ -17,11 +20,7 @@ it by value).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from env_data_pipeline_spark.streaming.event_trigger import _drain, _event_stream
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -172,57 +171,3 @@ def _make_session_expiry_fn():
             )
 
     return expire_sessions
-
-
-def stateful_session_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drain the event stream through the timeout-evicting session
-    kernel. availableNow's trailing no-data batch is where the
-    event-time timeouts fire: every session whose ms-floored last
-    event + 30 min lies strictly below the final watermark emits
-    (exactly once) and its events leave the state; sessions still
-    inside the admission horizon stay unemitted, one raw-event-suffix
-    state row per active key."""
-    stream = (
-        _event_stream(spark, sf_dir)
-        .withWatermark("ts", "1 hour")
-        .select("user_id", "ts", "value")
-    )
-    updates = stream.groupBy("user_id").applyInPandasWithState(
-        _make_session_expiry_fn(),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="EventTimeTimeout",
-    )
-    out = _drain(spark, updates, "stateful_session_expiry", "update")
-    return out.select(
-        "user_id",
-        "session_start_us",
-        "session_end_us",
-        "n_events",
-        F.round("total_value", 4).alias("total_value"),
-    )
-
-
-def stateful_event_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drain the event stream through the stateful kernel; keep the
-    final (highest-count) emission per key so the result is the
-    deterministic end-of-stream total regardless of micro-batch
-    count."""
-    stream = _event_stream(spark, sf_dir).select("event_type", "value")
-    updates = stream.groupBy("event_type").applyInPandasWithState(
-        _make_totals_fn(),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
-    all_updates = _drain(spark, updates, "stateful_event_totals", "update")
-    final = all_updates.groupBy("event_type").agg(
-        F.max_by(F.struct("n_events", "total_value"), "n_events").alias("s")
-    )
-    return final.select(
-        "event_type",
-        F.col("s.n_events").alias("n_events"),
-        F.round(F.col("s.total_value"), 4).alias("total_value"),
-    )

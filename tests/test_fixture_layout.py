@@ -150,7 +150,8 @@ def test_failed_artifact_build_raises_and_leaves_no_tmp_dir(
 def test_stale_other_keyed_artifact_is_reaped(spark, sf_dir, tmp_path, monkeypatch):
     """Publishing a snapshot drops other-keyed snapshots of the same
     name older than the horizon, and keeps younger ones and other
-    names' snapshots."""
+    names' snapshots. Snapshots of an oracle-only fixture (no Spark
+    text, so nothing reads them) go under the same age gate."""
     monkeypatch.setattr(fixtures, "_CACHE_ROOT", str(tmp_path))
 
     def build():
@@ -161,12 +162,20 @@ def test_stale_other_keyed_artifact_is_reaped(spark, sf_dir, tmp_path, monkeypat
     for name, key in (("_artifact", "v1"), ("_artifact", "v2"), ("_artifact_x", "v1")):
         fixtures.snapshot(spark, sf_dir, name, key, build)
         paths[name, key] = fixtures._snapshot_path(sf_dir, name, key)
-    for old in (paths["_artifact", "v1"], paths["_artifact_x", "v1"]):
+    unread = next(n for n, texts in fixtures.FIXTURES.items() if "spark" not in texts)
+    root = os.path.dirname(paths["_artifact", "v1"])
+    unread_old = os.path.join(root, f"{unread}-0123456789.parquet")
+    unread_young = os.path.join(root, f"{unread}-9876543210.parquet")
+    for d in (unread_old, unread_young):
+        os.makedirs(d)
+    for old in (paths["_artifact", "v1"], paths["_artifact_x", "v1"], unread_old):
         os.utime(old, (stale, stale))
     fixtures.snapshot(spark, sf_dir, "_artifact", "v3", build)
     assert not os.path.exists(paths["_artifact", "v1"])
     assert os.path.exists(paths["_artifact", "v2"])
     assert os.path.exists(paths["_artifact_x", "v1"])
+    assert not os.path.exists(unread_old)
+    assert os.path.exists(unread_young)
     assert os.path.exists(fixtures._snapshot_path(sf_dir, "_artifact", "v3"))
 
 

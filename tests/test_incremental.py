@@ -125,12 +125,18 @@ def test_streaming_refresh_deterministic_across_runs(spark, sf_dir):
     must produce identical state — batch order and partitioning may
     vary, so this holds only because the merge algebra is
     commutative/associative and sums are rounded at read time."""
-    from env_data_pipeline_spark.streaming.incremental_refresh import (
-        streaming_agg_refresh,
+    from env_data_pipeline_spark.plans.incremental import (
+        streaming_incremental_agg_refresh,
     )
 
-    a = {r["event_type"]: r for r in streaming_agg_refresh(spark, sf_dir).collect()}
-    b = {r["event_type"]: r for r in streaming_agg_refresh(spark, sf_dir).collect()}
+    a = {
+        r["event_type"]: r
+        for r in streaming_incremental_agg_refresh(spark, sf_dir).collect()
+    }
+    b = {
+        r["event_type"]: r
+        for r in streaming_incremental_agg_refresh(spark, sf_dir).collect()
+    }
     assert set(a) == set(b)
     for t in a:
         assert a[t]["n_rows"] == b[t]["n_rows"]

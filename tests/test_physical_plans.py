@@ -149,20 +149,6 @@ NESTED_LOOP_OK = {
     "events_kmv_set_ops",
 }
 
-HEADLINE = [
-    "flagship_pricing_summary",
-    "revenue_by_region",
-    "topk_orders_per_priority",
-    "order_priority_check",
-    "events_sessionized_stats",
-    "events_asof_last_touch",
-    "collect_aggregated",
-    "similarity_topk_lsh",
-    "text_quality_profile",
-    "small_quantity_revenue",
-    "dedup_exact",
-]
-
 
 @pytest.mark.parametrize("name", sorted(registry.QUERIES))
 def test_no_cartesian_product(spark, sf_dir, name):

@@ -899,12 +899,12 @@ def test_hll_matches_python_replica_and_accuracy(spark, tmp_path):
 def test_hll_streaming_refresh_equals_batch(spark, sf_dir):
     """Max-merge across micro-batch boundaries must reproduce the
     one-shot sketch exactly."""
-    from env_data_pipeline_spark.streaming.incremental_refresh import (
-        streaming_hll_refresh,
+    from env_data_pipeline_spark.plans.incremental import (
+        streaming_hll_sketch_refresh,
     )
 
     streamed = sorted(
-        map(tuple, streaming_hll_refresh(spark, sf_dir).collect())
+        map(tuple, streaming_hll_sketch_refresh(spark, sf_dir).collect())
     )
     batch = sorted(
         map(

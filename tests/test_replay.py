@@ -17,8 +17,8 @@ def _agg_work_dirs(root) -> list[str]:
 
 def test_failed_replay_removes_work_dir(spark, sf_dir, tmp_path, monkeypatch):
     from env_data_pipeline_spark.operators import incremental as INC
-    from env_data_pipeline_spark.streaming.incremental_refresh import (
-        streaming_agg_refresh,
+    from env_data_pipeline_spark.plans.incremental import (
+        streaming_incremental_agg_refresh,
     )
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
@@ -28,7 +28,7 @@ def test_failed_replay_removes_work_dir(spark, sf_dir, tmp_path, monkeypatch):
 
     monkeypatch.setattr(INC, "partial_aggs", failing_partial_aggs)
     with pytest.raises(Exception, match="injected batch failure"):
-        streaming_agg_refresh(spark, sf_dir)
+        streaming_incremental_agg_refresh(spark, sf_dir)
     assert _agg_work_dirs(tmp_path) == []
 
 
@@ -36,12 +36,12 @@ def test_replay_removes_work_dir_and_detaches_result(
     spark, sf_dir, tmp_path, monkeypatch
 ):
     from env_data_pipeline_spark.catalog import table
-    from env_data_pipeline_spark.streaming.incremental_refresh import (
-        streaming_agg_refresh,
+    from env_data_pipeline_spark.plans.incremental import (
+        streaming_incremental_agg_refresh,
     )
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    out = streaming_agg_refresh(spark, sf_dir)
+    out = streaming_incremental_agg_refresh(spark, sf_dir)
     assert _agg_work_dirs(tmp_path) == []
     # the result no longer reads the removed state dirs
     rows = out.collect()

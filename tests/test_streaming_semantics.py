@@ -153,9 +153,9 @@ def test_windowed_counts_append_state_is_bounded(spark, sf_dir):
     not every window of the month-long replay (complete mode held all
     of them — the unbounded-state shape this test guards against)."""
     from env_data_pipeline_spark.observe import observe
-    from env_data_pipeline_spark.streaming import event_trigger as ET
+    from env_data_pipeline_spark.plans import streaming_queries as SQ
 
-    rec = observe(spark, lambda: ET.windowed_event_counts(spark, sf_dir))
+    rec = observe(spark, lambda: SQ.streaming_windowed_event_counts(spark, sf_dir))
     out = rec["value"]
     n_emitted = out.count()
     assert n_emitted > 100  # a month of hourly windows at any test SF
@@ -366,9 +366,9 @@ def test_stream_stream_join_state_is_bounded_and_real(spark, sf_dir):
     after the final no-data batch advances the watermark, only rows
     within the (2 h range + 1 h watermark) tail may remain buffered."""
     from env_data_pipeline_spark.observe import observe
-    from env_data_pipeline_spark.streaming import event_trigger as ET
+    from env_data_pipeline_spark.plans import streaming_queries as SQ
 
-    rec = observe(spark, lambda: ET.stream_stream_attribution(spark, sf_dir))
+    rec = observe(spark, lambda: SQ.streaming_stream_stream_join(spark, sf_dir))
     out = rec["value"]
     n_emitted = out.count()
     assert n_emitted > 0
@@ -409,7 +409,7 @@ def test_outer_and_semi_join_state_is_bounded_and_measured(spark, sf_dir):
 
     from env_data_pipeline_spark.catalog import table
     from env_data_pipeline_spark.observe import observe
-    from env_data_pipeline_spark.streaming import event_trigger as ET
+    from env_data_pipeline_spark.plans import streaming_queries as SQ
 
     n_input = (
         table(spark, sf_dir, "events")
@@ -417,9 +417,12 @@ def test_outer_and_semi_join_state_is_bounded_and_measured(spark, sf_dir):
         .count()
     )
     variants = [
-        (ET.stream_stream_attribution_left, "stream_stream_attribution_left_sink"),
-        (ET.stream_stream_attribution_semi, "stream_stream_attribution_semi_sink"),
-        (ET.stream_stream_attribution_full, "stream_stream_attribution_full_sink"),
+        (SQ.streaming_stream_stream_left_join, "stream_stream_attribution_left_sink"),
+        (SQ.streaming_stream_stream_semi_join, "stream_stream_attribution_semi_sink"),
+        (
+            SQ.streaming_stream_stream_full_outer_join,
+            "stream_stream_attribution_full_sink",
+        ),
     ]
     ceilings = {}
     for fn, sink in variants:
@@ -542,9 +545,11 @@ def test_stateful_timeout_drops_expired_state(spark, sf_dir):
     user ever seen."""
     from env_data_pipeline_spark.catalog import table
     from env_data_pipeline_spark.observe import observe
-    from env_data_pipeline_spark.streaming.stateful import stateful_session_expiry
+    from env_data_pipeline_spark.plans.streaming_queries import (
+        streaming_stateful_session_expiry,
+    )
 
-    rec = observe(spark, lambda: stateful_session_expiry(spark, sf_dir))
+    rec = observe(spark, lambda: streaming_stateful_session_expiry(spark, sf_dir))
     out = rec["value"]
     assert out.count() > 0
 
